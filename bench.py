@@ -123,10 +123,6 @@ HEADLINE = [
     "similarity_hamming_topk",
     "similarity_pq_topk",
     # ------------------------------------------------------------------
-    # Pre-staged bank rows (catalog.BANKED; BANK.md). The `n in
-    # runnable` filter below skips them until their tier is promoted to
-    # @query, at which point they join the bench automatically — the
-    # registration flip needs no bench edit.
     # r13 tier
     "curation_bloom_screen",
     "text_chunk_boilerplate",

@@ -3,7 +3,9 @@
 This is the engine's differential-test surface (SURVEY.md §5.1): every
 SQL-expressible operator registers a PySpark implementation and an ANSI
 SQL equivalent the driver runs in DuckDB over the same parquet tables.
-Non-SQL-expressible operators register the query only (rows-only check).
+Every QUERIES row carries an oracle; forms without one belong in
+BENCH_ONLY. tests/test_oracles.py and tools/check_oracle.py run the
+differential.
 
 Contract notes (driver: /root/repo/__spark_entry__.py):
 - every computed column is aliased identically in both forms;
@@ -32,21 +34,6 @@ ORACLES: dict[str, str] = {}
 # driver's queries() surface — every queries() entry must carry an
 # oracle — but bench.py runs them alongside the catalog.
 BENCH_ONLY: dict[str, QueryFn] = {}
-
-# Banked registry: EMPTY since round 12 — the entire 57-row bank was
-# promoted to QUERIES in one flip (r11 VERDICT item 1) and banking is
-# retired as a practice (r11 VERDICT item 3: any new operator lands as
-# a registered @query row in the round it is built, window slot
-# permitting or not). The machinery stays because the tier
-# differential tests (tests/test_r1*..r3*_oracles.py) resolve rows
-# through resolve_pair(), which reads QUERIES first and falls back to
-# BANKED — they passed verbatim across the flip. Promotion, should a
-# row ever be banked again, = change the row's decorator from
-# @banked_query to @query (one word), then update DRIVER_WINDOW;
-# bench.py needs NO edit (HEADLINE pre-lists names and its
-# `in runnable` filter activates them at registration).
-BANKED: dict[str, QueryFn] = {}
-BANKED_ORACLES: dict[str, str] = {}
 
 # Prepared-plan cache: DataFrames are immutable logical plans, so a
 # catalog query re-invoked on the same (session, sf_dir) can reuse the
@@ -120,31 +107,6 @@ def bench_query(name: str) -> Callable[[QueryFn], QueryFn]:
         return wrapped
 
     return deco
-
-
-def banked_query(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
-    """Register a BANKED row (pre-staged registration, driver-invisible).
-
-    Banked rows always carry an oracle: the whole point of banking is
-    that the differential already gates the exact registration code."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        wrapped = _cached(name, fn)
-        BANKED[name] = wrapped
-        BANKED_ORACLES[name] = oracle
-        return wrapped
-
-    return deco
-
-
-def resolve_pair(name: str) -> tuple[QueryFn, str]:
-    """(query_fn, oracle_sql) for a registered OR banked row.
-
-    The tier differential tests call this so they keep passing verbatim
-    when a tier is promoted from BANKED to QUERIES."""
-    if name in QUERIES:
-        return QUERIES[name], ORACLES[name]
-    return BANKED[name], BANKED_ORACLES[name]
 
 
 def _load_modules() -> None:

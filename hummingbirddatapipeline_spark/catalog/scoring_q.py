@@ -315,12 +315,20 @@ def scoring_990_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REPARTITION hint is Spark-side only — the ORACLE registers the
     # unhinted string, and a distribution hint cannot change results.
     # Isolated A/B (2 rounds): min-warm 2.91/2.54 -> 2.06/2.15.
-    n = spark.sparkContext.defaultParallelism
-    hinted = _990_SOURCE_SQL.replace(
-        "SELECT f.*,", f"SELECT /*+ REPARTITION({n}, ein) */ f.*,", 1
-    )
-    src = spark.sql(hinted)
+    src = spark.sql(_hinted_990_source_sql(spark.sparkContext.defaultParallelism))
     return apply_spec(src, _spec_990())  # unsorted: order-insensitive gate
+
+
+def _hinted_990_source_sql(n: int) -> str:
+    """``_990_SOURCE_SQL`` with the ``REPARTITION(n, ein)`` hint; raises if
+    the anchor the hint attaches to is gone, instead of silently running
+    the unhinted plan."""
+    anchor = "SELECT f.*,"
+    if anchor not in _990_SOURCE_SQL:
+        raise ValueError(f"990 source SQL lost its {anchor!r} hint anchor")
+    return _990_SOURCE_SQL.replace(
+        anchor, f"SELECT /*+ REPARTITION({n}, ein) */ f.*,", 1
+    )
 
 
 def _register_990_oracle() -> None:

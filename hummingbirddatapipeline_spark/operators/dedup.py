@@ -1384,7 +1384,7 @@ def strip_boilerplate_chunks(
     # per-doc recount; without a lineage cut Catalyst re-inlines the
     # full text scan + chunking expressions under each consumer (the
     # r11 banking-time scan-audit lesson — caught by
-    # tools/bank_scan_audit.py)
+    # tools/scan_audit.py)
     chunks = (
         docs.select(
             F.col(id_col),

@@ -190,7 +190,7 @@ def hash_ngram_features(
     )
     # unigrams and bigrams generate inside ONE array expression and
     # explode once — a unionByName of two explodes re-inlines the text
-    # scan per branch (bank_scan_audit catch; the repetition-battery
+    # scan per branch (scan_audit catch; the repetition-battery
     # single-tagged-explode idiom)
     uni_arr = "transform(__t, t -> concat('1:', t))"
     if use_bigrams:

@@ -591,7 +591,7 @@ def tfidf_keywords(
     # the (doc, term) tf table feeds BOTH the df build and the scoring
     # join; the lineage cut keeps Catalyst from re-running the text
     # explode per consumer — the registered bm25_topk's r11 fix applied
-    # to its tfidf sibling (bank_scan_audit catch)
+    # to its tfidf sibling (scan_audit catch)
     tf = (
         toks.groupBy(id_col, "w")
         .agg(F.count("*").cast("double").alias("tf"))

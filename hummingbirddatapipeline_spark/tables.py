@@ -108,7 +108,7 @@ _FANOUT_MIN_WIDTH = 16
 # customer-side haversine / FS-agreement scans: byte-scaled width lost
 # the interleaved A/B there while winning on every documents row).
 
-_fanout_cache: dict[tuple[str, int, int], int] = {}
+_fanout_cache: dict[tuple[str, int, int, bool], int] = {}
 
 # inline_rows literal-size cap (ADVICE r15): the exploded literal wins
 # only while the expression tree stays small — measured crossover vs

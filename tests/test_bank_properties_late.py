@@ -25,13 +25,12 @@ properties only, no statistical flakiness):
 
 from __future__ import annotations
 
-import os
 from collections import Counter
 
 import numpy as np
 from pyspark.sql import functions as F
 
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 RNG = np.random.default_rng(0x1A7E)
 _WORDS = [f"w{i}" for i in range(50)]

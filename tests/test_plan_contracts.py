@@ -645,7 +645,7 @@ def test_hash_ngrams_one_aggregate(spark, sf_dir):
     """The hashing-trick featurizer must be explode -> map-side hash ->
     ONE (id, feature) aggregate: no join, no second exchange, and ONE
     tagged explode — unigrams and bigrams generate inside a single
-    array expression so the corpus scans once (the bank_scan_audit
+    array expression so the corpus scans once (the scan_audit
     fix; the old union-of-two-explodes shape re-read the text per
     branch)."""
     from hummingbirddatapipeline_spark.operators.evaluation import (

@@ -1,23 +1,16 @@
-"""Differential (DuckDB) checks for the round-10-registered operators —
-in-engine k-means quantizer training (Lloyd's, fixed iterations,
-pagerank-style per-iteration quantize), PCA top component by power
-iteration, cluster-aware benchmark decontamination, deterministic
-shard-layout manifest, winnowing fingerprints (the MOSS scheme), and
-the dedup_pagerank exact_longs flip — run on the real testdata exactly
-the way the catalog oracle gate does. Since r10 these rows are
-registered catalog queries, so each test drives the CATALOG entry
-against its REGISTERED oracle (one source of truth for both sides) and
-then asserts the extra structural properties the driver's value hash
-alone would not surface (training genuinely moves the quantizer,
-escalation widens contamination, fingerprints are order-insensitive,
-the winnowing guarantee holds constructively)."""
+"""Property checks for the round-10-registered operators — in-engine
+k-means quantizer training (Lloyd's, fixed iterations, pagerank-style
+per-iteration quantize), PCA top component by power iteration,
+cluster-aware benchmark decontamination, deterministic shard-layout
+manifest, winnowing fingerprints (the MOSS scheme), and the
+dedup_pagerank exact_longs flip. Each row's DuckDB differential runs in
+tests/test_oracles.py; these tests assert the structural properties the
+value hash alone would not surface (training genuinely moves the
+quantizer, escalation widens contamination, fingerprints are
+order-insensitive, the winnowing guarantee holds constructively)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,39 +18,6 @@ SF = "/root/testdata/sf0.001"
 
 _KM_ITERS = 3   # matches catalog/similarity_q._KMEANS_REFINE_ITERS
 _PCA_ITERS = 3  # matches catalog/similarity_q._PCA_TOP1_ITERS
-
-
-def _duck():
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
-
-
-def _run_pair(spark, name):
-    """(spark rows, oracle rows) for a registered catalog query."""
-    from hummingbirddatapipeline_spark.catalog import ORACLES, QUERIES
-
-    got = [tuple(r) for r in QUERIES[name](spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(ORACLES[name]).fetchall()
-    con.close()
-    return got, exp
 
 
 def _emb(spark):
@@ -71,16 +31,15 @@ def _emb(spark):
     )
 
 
-def test_kmeans_refine_matches_duckdb(spark):
+def test_kmeans_refine_matches_duckdb(catalog_rows):
     """Three Lloyd iterations from the frozen IVF seeds: DuckDB
     re-derives every intermediate centroid and the final assignment
     from the same constants; both engines must agree on every
     (vec_id, cluster_id, dist) row."""
     from hummingbirddatapipeline_spark.artifacts import IVF_CENTROIDS_64D
 
-    rows, exp = _run_pair(spark, "similarity_kmeans_refine")
-    assert len(rows) == len(exp) > 0
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("similarity_kmeans_refine")
+    assert len(rows) > 0
 
     # training keeps every cell populated on this fixture
     used = {r[1] for r in rows}
@@ -139,15 +98,14 @@ def test_kmeans_refine_empty_cluster_keeps_centroid(spark):
     assert rows == {1: 0, 2: 0}
 
 
-def test_decontaminate_clusters_matches_duckdb(spark):
+def test_decontaminate_clusters_matches_duckdb(catalog_rows):
     """Benchmark = docs 0-19 (the text_contamination_check fixture);
     training docs report per-doc 5-gram collisions AND the
     cluster-level escalation over the shared exact-Jaccard near-dup
     graph. The registered oracle rebuilds the gram join and the
     recursive cluster closure independently."""
-    rows, exp = _run_pair(spark, "curation_decontaminate_clusters")
-    assert len(rows) == len(exp) > 0
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("curation_decontaminate_clusters")
+    assert len(rows) > 0
 
     # the fixture has real structure on every side of the contract:
     n_doc = sum(1 for r in rows if r[4])
@@ -190,13 +148,12 @@ def test_decontaminate_cluster_escalation(spark):
     assert out[101]["kept"] is False
 
 
-def test_shard_manifest_matches_duckdb(spark):
+def test_shard_manifest_matches_duckdb(catalog_rows):
     """Shard layout manifest: DuckDB recomputes every doc's md5 shard
     assignment, token count, and the order-insensitive BIT_XOR
     fingerprint; both engines must agree shard for shard."""
-    rows, exp = _run_pair(spark, "layout_shard_manifest")
-    assert len(rows) == len(exp) > 1
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("layout_shard_manifest")
+    assert len(rows) > 1
 
 
 def test_shard_manifest_partitioning_invariant(spark):
@@ -223,10 +180,10 @@ def test_shard_manifest_partitioning_invariant(spark):
             n_shards=16, seed="r10",
         ).collect()
     ]
-    assert _norm(re_rows) == _norm(base)
+    assert sorted(re_rows, key=repr) == sorted(base, key=repr)
 
 
-def test_pca_power_top1_matches_duckdb(spark):
+def test_pca_power_top1_matches_duckdb(spark, catalog_rows):
     """Covariance + unrolled power iterations + projection: DuckDB
     re-derives the whole trajectory from the raw embeddings and both
     engines must agree on every (vec_id, pc1_score) row AND on the
@@ -235,9 +192,8 @@ def test_pca_power_top1_matches_duckdb(spark):
         pca_power_top1,
     )
 
-    rows, exp = _run_pair(spark, "similarity_pca_top1")
-    assert len(rows) == len(exp) > 0
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("similarity_pca_top1")
+    assert len(rows) > 0
 
     # component is unit-norm (quantization dust aside) and the
     # projection is genuinely discriminative on this fixture
@@ -259,7 +215,7 @@ def test_pca_power_top1_guards(spark):
         pca_power_top1(emb.filter(F.lit(False)), dim=64, n_iter=1)
 
 
-def test_pagerank_exact_longs_matches_duckdb_and_partitioning(spark):
+def test_pagerank_exact_longs_matches_duckdb_and_partitioning(spark, catalog_rows):
     """The registered dedup_pagerank row runs exact_longs=True since
     r10: summing scaled longs is associative, so the trajectory is
     bit-identical to DuckDB's scaled-long unroll AND invariant under
@@ -273,9 +229,8 @@ def test_pagerank_exact_longs_matches_duckdb_and_partitioning(spark):
     )
     from hummingbirddatapipeline_spark.operators.graph import pagerank
 
-    got, exp = _run_pair(spark, "dedup_pagerank")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("dedup_pagerank")
+    assert len(got) > 0
 
     pairs = shared_jaccard_pairs(spark, SF)
     rep = [
@@ -290,21 +245,17 @@ def test_pagerank_exact_longs_matches_duckdb_and_partitioning(spark):
     assert sorted(rep) == sorted(got)
 
 
-def test_winnow_fingerprints_matches_duckdb(spark):
+def test_winnow_fingerprints_matches_duckdb(spark, catalog_rows):
     """Winnowing (Schleimer et al. 2003): DuckDB replays the k-gram
     hashing, the packed hash*2048+(2047-pos) keys, and the
     rightmost-min window selection with the same integer arithmetic;
     the exploded (doc_id, fp) stream must match exactly, and the
     fingerprint density must sit in the published ~1/w band."""
-    from hummingbirddatapipeline_spark.catalog.text_q import (
-        _WINNOW_K,
-        _WINNOW_W,
-    )
+    from hummingbirddatapipeline_spark.catalog.text_q import _WINNOW_K
     from hummingbirddatapipeline_spark.tables import load
 
-    rows, exp = _run_pair(spark, "text_winnow_fingerprints")
-    assert len(rows) == len(exp) > 0
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("text_winnow_fingerprints")
+    assert len(rows) > 0
 
     # density: winnowing keeps ~1/w of the k-gram hashes (sanity band)
     docs = load(spark, SF, "documents")

@@ -1,69 +1,26 @@
-"""Differential (DuckDB) checks for the round-11-registered operators
-— cross-corpus containment via winnowing fingerprints (the
-decontamination completion), DoReMi-shaped domain-mixture reweighting,
-and quality-classifier score distillation (teacher percentile ->
-student threshold). Since r11 these are registered catalog rows, so
-each differential drives the CATALOG entry against its REGISTERED
-oracle (one source of truth for both sides) and then asserts the
-structural properties the driver's value hash alone would not surface.
-Each DuckDB side is an independent formulation per the repo's
-differential rule: the containment oracle replays the winnowing
+"""Property checks for the round-11-registered operators — cross-corpus
+containment via winnowing fingerprints (the decontamination
+completion), DoReMi-shaped domain-mixture reweighting, and
+quality-classifier score distillation (teacher percentile -> student
+threshold). Each row's DuckDB differential runs in
+tests/test_oracles.py (the containment oracle replays the winnowing
 integer arithmetic and the embed-twin fixture; the DoReMi oracle
 rebuilds the unigram LM, the exact decimal CE sums, and the
 exponentiated-gradient update; the distillation oracle re-derives the
 teacher percentile labels, the cumulative agreement counts, and the
-stump argmax."""
+stump argmax); these tests assert the structural properties the value
+hash alone would not surface."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-# BANK_SF_DIR lets the re-check run at the driver gate's scale
-# (sf0.01) without duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 _TWIN_OFFSET = 70_000
 
 
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
-
-
-def _run_pair(spark, name):
-    """(spark rows, oracle rows) for a registered catalog query."""
-    from hummingbirddatapipeline_spark.catalog import ORACLES, QUERIES
-
-    got = [tuple(r) for r in QUERIES[name](spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(ORACLES[name]).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_winnow_containment_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_winnow_containment")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_winnow_containment_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_winnow_containment")
+    assert len(got) > 0
 
     # every embed-twin is caught against its own bench doc (the
     # winnowing guarantee made constructive on the real corpus) …
@@ -106,10 +63,9 @@ def test_winnow_containment_full_embedding_scores_one(spark):
     assert (101, 1) not in rows
 
 
-def test_doremi_reweight_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sample_doremi_reweight")
-    assert len(got) == len(exp) > 1
-    assert _norm(got) == _norm(exp)
+def test_doremi_reweight_matches_duckdb(catalog_rows):
+    got = catalog_rows("sample_doremi_reweight")
+    assert len(got) > 1
 
     # the update is a genuine probability distribution over domains …
     shares = [r[4] for r in got]
@@ -152,10 +108,9 @@ def test_doremi_lr_monotone_on_excess(spark):
         assert abs(r["doremi_share"] - round(want, 6)) <= 1e-6
 
 
-def test_distill_stump_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "curation_score_distill")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_distill_stump_matches_duckdb(catalog_rows):
+    got = catalog_rows("curation_score_distill")
+    assert len(got) > 0
 
     # internal consistency: the reported agreement IS the recounted
     # agreement of the stump it chose …

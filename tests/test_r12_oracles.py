@@ -1,52 +1,19 @@
-"""Differential (DuckDB) checks for the round-11-registered r12-tier
-operators — content-defined chunking (chunk-level dedup for
-partially-overlapping documents), UniMax language-budget waterfilling,
-binary-code Hamming ANN, and product-quantization ADC ANN. Registered
-in r11 (the doubled bank drain the r10 VERDICT asked for), so each
-differential drives the CATALOG entry against its REGISTERED oracle
-(one source of truth for both sides) and then asserts the structural
-properties the driver's value hash alone would not surface. Each
-DuckDB side is an independent formulation per the repo's differential
-rule: the CDC oracle replays the gear-sum boundary arithmetic with
-DuckDB list slices; the UniMax oracle rebuilds the ascending-cap
-window test; the Hamming oracle packs sign bits with explicit shifts
-against Spark's Horner fold; the PQ oracle unrolls all m per-subspace
-Lloyd trajectories as chained CTEs."""
+"""Property checks for content-defined chunking (chunk-level dedup for
+partially-overlapping documents), UniMax language-budget
+waterfilling, binary-code Hamming ANN, and product-quantization ADC
+ANN. Each row's DuckDB differential runs in tests/test_oracles.py (the
+CDC oracle replays the gear-sum boundary arithmetic with DuckDB list
+slices; the UniMax oracle rebuilds the ascending-cap window test; the
+Hamming oracle packs sign bits with explicit shifts against Spark's
+Horner fold; the PQ oracle unrolls all m per-subspace Lloyd
+trajectories as chained CTEs); these tests assert the structural
+properties the value hash alone would not surface."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables: str):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -73,24 +40,12 @@ def _queries(emb, n=5):
     )
 
 
-def _run_pair(spark, name, *tables):
-    """(spark rows, oracle rows) for a registered catalog query."""
-    from hummingbirddatapipeline_spark.catalog import ORACLES, QUERIES
-
-    got = [tuple(r) for r in QUERIES[name](spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(ORACLES[name]).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_cdc_chunks_matches_duckdb(spark):
+def test_cdc_chunks_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.functions.text import ws_token_count
 
     docs = _docs(spark)
-    got, exp = _run_pair(spark, "text_cdc_chunks", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("text_cdc_chunks")
+    assert len(got) > 0
 
     # chunks TILE each document exactly: contiguous seqs from 0 and
     # token counts summing to the doc's token count
@@ -135,10 +90,9 @@ def test_cdc_chunks_shared_suffix_rechunks_identically(spark):
             assert h in shift_hashes
 
 
-def test_unimax_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sample_unimax_budget", "documents")
-    assert len(got) == len(exp) > 1
-    assert _norm(got) == _norm(exp)
+def test_unimax_matches_duckdb(catalog_rows):
+    got = catalog_rows("sample_unimax_budget")
+    assert len(got) > 1
 
     # mixed regime on the fixture: some capped, some not; the budget is
     # never over-spent and capped languages sit exactly at their cap
@@ -177,10 +131,9 @@ def test_unimax_budget_regimes(spark):
         assert r["alloc_tokens"] == r["cap_tokens"]
 
 
-def test_hamming_topk_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_hamming_topk", "embeddings")
-    assert len(got) == len(exp) == 50
-    assert _norm(got) == _norm(exp)
+def test_hamming_topk_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_hamming_topk")
+    assert len(got) == 50
 
     per_q = {}
     for qid, vid, ham, rank in got:
@@ -214,10 +167,9 @@ def test_hamming_identical_vector_is_rank_one(spark):
     assert top["hamming"] == 0
 
 
-def test_pq_topk_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_pq_topk", "embeddings")
-    assert len(got) == len(exp) == 50
-    assert _norm(got) == _norm(exp)
+def test_pq_topk_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_pq_topk")
+    assert len(got) == 50
 
     per_q = {}
     for qid, vid, d, rank in got:

@@ -1,49 +1,17 @@
-"""Differential (DuckDB) checks for the operators banked for round-13
-catalog registration — the Bloom-filter decontamination screen, CCNet
+"""Property checks for the Bloom-filter decontamination screen, CCNet
 chunk-level boilerplate removal, and in-engine logistic-regression
-quality-classifier training — run on the real testdata exactly the way
-the catalog oracle gate would, so r13 registration is a window change,
-not new work. Each DuckDB side is an independent formulation per the
-repo's differential rule: the Bloom oracle re-folds the 52-bit-md5
+quality-classifier training. Each row's DuckDB differential runs in
+tests/test_oracles.py (the Bloom oracle re-folds the 52-bit-md5
 positions into 63-bit words with bit_or and replays the shift/AND
 probe; the boilerplate oracle re-derives the CDC chunk stream and the
 frequency rule; the logreg oracle unrolls every gradient-descent
-iteration as chained CTEs over the rational-sigmoid link."""
+iteration as chained CTEs over the rational-sigmoid link)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables: str):
-    con = duckdb.connect()
-    for t in tables or ("documents",):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -52,28 +20,12 @@ def _docs(spark):
     return load(spark, SF, "documents")
 
 
-def _run_pair(spark, name, *tables):
-    """(spark rows, oracle rows) for a registered-or-banked row: the
-    differential drives the EXACT registration code via
-    catalog.resolve_pair, so promoting the tier from @banked_query to
-    @query changes nothing here."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
 # ---------------------------------------------------------------- bloom
 
 
-def test_bloom_screen_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "curation_bloom_screen")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_bloom_screen_matches_duckdb(catalog_rows):
+    got = catalog_rows("curation_bloom_screen")
+    assert len(got) > 0
     # at the registration sizing (2 KB filter vs ~1k bench grams) the
     # screen FIRES but does not saturate: some pass, most are cut
     n_scr = sum(1 for r in got if r[3])
@@ -122,10 +74,9 @@ def test_bloom_screen_never_misses_exact_hits(spark):
 # ----------------------------------------------------- chunk boilerplate
 
 
-def test_chunk_boilerplate_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_chunk_boilerplate")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_chunk_boilerplate_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_chunk_boilerplate")
+    assert len(got) > 0
     # conservation: kept <= total tokens, dropped <= chunks; and the
     # rule fires on the fixture (near-dup docs share CDC chunks)
     for _id, n_c, n_d, n_t, n_k in got:
@@ -169,10 +120,9 @@ def test_chunk_boilerplate_drops_planted_shared_block(spark):
 # ----------------------------------------------------------- logreg GD
 
 
-def test_logreg_quality_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "curation_logreg_train")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_logreg_quality_matches_duckdb(catalog_rows):
+    got = catalog_rows("curation_logreg_train")
+    assert len(got) > 0
     # the trained model actually separates: scores are not all equal,
     # and training agreement beats the untrained all-positive start
     # (w=0 scores everything 0.5 -> pred TRUE -> accuracy = pos rate)

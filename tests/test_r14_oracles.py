@@ -1,48 +1,16 @@
-"""Differential (DuckDB) checks for the operators banked for round-14
-catalog registration — maximal duplicated-span extraction (the
-actionable completion of the Lee et al. substring-dedup family),
-CCNet per-language perplexity bucketing, and Matryoshka truncation
-recall — run on the real testdata exactly the way the catalog oracle
-gate would. Each DuckDB side is an independent formulation: the span
+"""Property checks for maximal duplicated-span extraction (the
+actionable completion of the Lee et al. substring-dedup family), CCNet
+per-language perplexity bucketing, and Matryoshka truncation recall.
+Each row's DuckDB differential runs in tests/test_oracles.py (the span
 oracle re-derives stride-1 windows, corpus occurrence counts, and the
 LAG/running-sum island merge; the bucket oracle rebuilds the
 interpolated bigram LM from scratch and re-ranks with PERCENT_RANK;
 the matryoshka oracle re-ranks full AND truncated exact cosine top-k
-from the raw embeddings and recounts the overlap."""
+from the raw embeddings and recounts the overlap)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-from pyspark.sql import functions as F
-
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -51,23 +19,9 @@ def _docs(spark):
     return load(spark, SF, "documents")
 
 
-def _run_pair(spark, name, duck=None):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = duck() if duck else _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_dup_spans_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_dup_spans")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_dup_spans_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_dup_spans")
+    assert len(got) > 0
     # per-doc structural invariants: span_seq is 1..m in start order,
     # spans are separated by gaps > k (else they would have merged),
     # and every span covers at least one full window
@@ -107,10 +61,9 @@ def test_dup_spans_recovers_planted_block(spark):
         assert nw == 21  # starts 30..50 inclusive
 
 
-def test_perplexity_buckets_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_perplexity_buckets")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_perplexity_buckets_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("text_perplexity_buckets")
+    assert len(got) > 0
     # every doc is bucketed, and within each language the thirds are
     # balanced to within one doc (percent_rank arithmetic)
     from collections import Counter
@@ -127,19 +80,9 @@ def test_perplexity_buckets_matches_duckdb(spark):
             assert max(c.values()) - min(c.values()) <= 2
 
 
-def _duck_emb():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'embeddings.parquet')}')"
-    )
-    return con
-
-
-def test_matryoshka_recall_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_matryoshka_recall", duck=_duck_emb)
-    assert len(got) == len(exp) == 10  # 5 queries x 2 dims
-    assert _norm(got) == _norm(exp)
+def test_matryoshka_recall_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_matryoshka_recall")
+    assert len(got) == 10  # 5 queries x 2 dims
     # fidelity must not decrease with a longer prefix on average, and
     # the truncated screen is lossy-but-useful on random embeddings
     mean = {

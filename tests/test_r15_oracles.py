@@ -1,48 +1,18 @@
-"""Differential (DuckDB) checks for the operators banked for round-15
-catalog registration — IVF-PQ composed ANN (frozen-cell routing x
-PQ/ADC ranking), stride-scheduled deterministic mixture ordering
-(closed-form global position, no global sort), and per-dimension uint8
-scalar-quantization fidelity — run on the real testdata exactly the
-way the catalog oracle gate would. Each DuckDB side is an independent
-formulation: the IVF-PQ oracle re-derives cell assignment, probe
-lists, and all m Lloyd trajectories as chained CTEs; the interleave
-oracle counts predecessors pairwise (O(n^2) exact integer compares)
-against Spark's closed form; the SQ8 oracle rebuilds the per-dim grid
-and the floor(x + 0.5) codes from the raw embeddings."""
+"""Property checks for IVF-PQ composed ANN (frozen-cell routing x PQ/ADC
+ranking), stride-scheduled deterministic mixture ordering (closed-form
+global position, no global sort), and per-dimension uint8
+scalar-quantization fidelity. Each row's DuckDB differential runs in
+tests/test_oracles.py (the IVF-PQ oracle re-derives cell assignment,
+probe lists, and all m Lloyd trajectories as chained CTEs; the
+interleave oracle counts predecessors pairwise against Spark's closed
+form; the SQ8 oracle rebuilds the per-dim grid and the floor(x + 0.5)
+codes from the raw embeddings)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(table: str):
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, table + '.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _emb(spark):
@@ -60,23 +30,9 @@ def _queries(emb):
     )
 
 
-def _run_pair(spark, name, table):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(table)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_ivfpq_topk_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_ivfpq_topk", "embeddings")
-    assert len(got) == len(exp) == 50  # 5 queries x k
-    assert _norm(got) == _norm(exp)
+def test_ivfpq_topk_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_ivfpq_topk")
+    assert len(got) == 50  # 5 queries x k
 
 
 def test_ivfpq_adc_consistent_with_pq(spark):
@@ -119,10 +75,9 @@ def test_ivfpq_adc_consistent_with_pq(spark):
         assert len(used) <= 4  # never touches more than n_probe cells
 
 
-def test_interleave_order_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sample_interleave_order", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_interleave_order_matches_duckdb(catalog_rows):
+    got = catalog_rows("sample_interleave_order")
+    assert len(got) > 0
     # total order: global_seq is a permutation of 1..N
     seqs = sorted(r[3] for r in got)
     assert seqs == list(range(1, len(got) + 1))
@@ -149,10 +104,9 @@ def test_interleave_stride_pattern(spark):
         assert abs(n_x - n * 2 / 3) <= 1
 
 
-def test_sq8_fidelity_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_sq8_fidelity", "embeddings")
-    assert len(got) == len(exp) == _emb(spark).count()
-    assert _norm(got) == _norm(exp)
+def test_sq8_fidelity_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("similarity_sq8_fidelity")
+    assert len(got) == _emb(spark).count()
     # 8-bit per-dim grids hold cosine fidelity extremely tight on
     # bounded data, and codes stay inside the 0..255*64 envelope
     fids = [r[2] for r in got]

@@ -1,47 +1,18 @@
-"""Differential (DuckDB) checks for the operators banked for round-16
-catalog registration — the Lee et al. substring-dedup CUT (keep one
+"""Property checks for the Lee et al. substring-dedup CUT (keep one
 canonical occurrence corpus-wide), semi-supervised label propagation
 over the exact-Jaccard near-dup graph, and crawler-trap detection by
-URL path templating — run on the real testdata exactly the way the
-catalog oracle gate would. Each DuckDB side is an independent
-formulation: the cut oracle re-derives windows, canonical picks, and
-the island merge; the propagation oracle rebuilds the pair graph from
-raw text and unrolls every synchronous round; the trap oracle replays
-the shared dirty-URL fixture + canonicalization rule set."""
+URL path templating. Each row's DuckDB differential runs in
+tests/test_oracles.py (the cut oracle re-derives windows, canonical
+picks, and the island merge; the propagation oracle rebuilds the pair
+graph from raw text and unrolls every synchronous round; the trap
+oracle replays the shared dirty-URL fixture + canonicalization rule
+set)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -50,23 +21,9 @@ def _docs(spark):
     return load(spark, SF, "documents")
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_cut_spans_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_cut_dup_spans")
-    assert len(got) == len(exp) == _docs(spark).count()
-    assert _norm(got) == _norm(exp)
+def test_cut_spans_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("text_cut_dup_spans")
+    assert len(got) == _docs(spark).count()
     # accounting invariants: kept + cut == total per doc; the corpus
     # loses real tokens; a fully-duplicated non-canonical doc may drop
     # to zero kept but never below
@@ -97,12 +54,11 @@ def test_cut_spans_keeps_canonical(spark):
         assert out[d] == (d, 70, 21, 1, 40, 30)
 
 
-def test_label_propagation_matches_duckdb(spark):
+def test_label_propagation_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.functions.text import quality_score
 
-    got, exp = _run_pair(spark, "dedup_label_propagation")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("dedup_label_propagation")
+    assert len(got) > 0
     # seeds are clamped and labels genuinely compete (seed set
     # re-derived here exactly as the registered row builds it)
     docs = _docs(spark)
@@ -171,10 +127,9 @@ def test_label_propagation_radius_and_ties(spark):
     assert out3 == {0: "good", 1: "bad", 2: "bad", 3: "bad", 4: "bad"}
 
 
-def test_url_template_traps_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "web_template_traps")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_url_template_traps_matches_duckdb(catalog_rows):
+    got = catalog_rows("web_template_traps")
+    assert len(got) > 0
     # the verdicts must be mixed on the fixture, and counts sane
     traps = [r for r in got if r[4]]
     assert 0 < len(traps) < len(got)

@@ -1,48 +1,19 @@
-"""Differential (DuckDB) checks for the operators banked for round-17
-catalog registration — the in-engine model-EVALUATION completion of
-the classifier lifecycle (features -> train -> calibrate -> score):
-exact tie-aware ROC-AUC per source, reliability-diagram calibration
-bins over the in-engine logistic model, and the hashing-trick n-gram
-featurizer. Each DuckDB side is an independent formulation: the AUC
-oracle re-derives tie-aware rank sums as pure integers; the
-calibration oracle nests the FULL unrolled logreg training trajectory
-and re-bins; the featurizer oracle rebuilds the namespaced gram
-stream and 52-bit-md5 buckets from raw text."""
+"""Property checks for the in-engine model-EVALUATION completion of the
+classifier lifecycle (features -> train -> calibrate -> score): exact
+tie-aware ROC-AUC per source, reliability-diagram calibration bins
+over the in-engine logistic model, and the hashing-trick n-gram
+featurizer. Each row's DuckDB differential runs in
+tests/test_oracles.py (the AUC oracle re-derives tie-aware rank sums
+as pure integers; the calibration oracle nests the FULL unrolled
+logreg training trajectory and re-bins; the featurizer oracle
+rebuilds the namespaced gram stream and 52-bit-md5 buckets from raw
+text)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -71,23 +42,9 @@ def _student_scored(spark):
     ).filter(F.col("score").isNotNull())
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_auc_by_source_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "eval_auc_by_source")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_auc_by_source_matches_duckdb(catalog_rows):
+    got = catalog_rows("eval_auc_by_source")
+    assert len(got) > 0
     for _g, p, n, auc in got:
         if p > 0 and n > 0:
             assert 0.0 <= auc <= 1.0
@@ -134,31 +91,25 @@ def test_auc_flip_symmetry_and_perfect_separation(spark):
     assert out["t"] == 0.5  # all ties -> pure tie credit
 
 
-def test_calibration_bins_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "eval_calibration_bins")
-    assert len(got) == len(exp) > 1
-    assert _norm(got) == _norm(exp)
+def test_calibration_bins_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("eval_calibration_bins")
+    assert len(got) > 1
     assert sum(r[1] for r in got) == _docs(spark).count()
     for b, n, npos, mp, fp in got:
         assert 0 <= b <= 9 and 0 <= npos <= n
         assert 0.0 <= mp <= 1.0 and 0.0 <= fp <= 1.0
 
 
-def test_hash_ngram_features_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "feature_hash_ngrams")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_hash_ngram_features_matches_duckdb(catalog_rows, duck):
+    got = catalog_rows("feature_hash_ngrams")
+    assert len(got) > 0
     # conservation: bucket counts must add up to the exact gram count
     # (tokens + bigrams), and indexes stay inside the table
-    import duckdb as d2
-
-    con = _duck()
-    n_grams = con.sql(
+    n_grams = duck.sql(
         "SELECT SUM(len(list_filter(string_split_regex(lower(trim(text)),"
         " '\\s+'), t -> t <> ''))) + SUM(GREATEST(len(list_filter("
         "string_split_regex(lower(trim(text)), '\\s+'), t -> t <> '')) - 1,"
         " 0)) FROM documents"
     ).fetchone()[0]
-    con.close()
     assert sum(r[2] for r in got) == n_grams
     assert all(0 <= r[1] < 256 for r in got)

@@ -1,48 +1,18 @@
-"""Differential (DuckDB) checks for the operators banked for round-18
-catalog registration — the budget -> order epoch plan (UniMax
+"""Property checks for the budget -> order epoch plan (UniMax
 waterfilling composed into stride scheduling), the corpus snapshot
 diff (recrawl delta by key + content fingerprint), and the
-frozen-quantizer embedding-drift monitor. Each DuckDB side is an
-independent formulation: the epoch oracle nests the full waterfilling
-and counts predecessors pairwise; the delta oracle replays the
-recrawl fixture and re-fingerprints both sides; the drift oracle
-re-derives both snapshots' cell assignments from the frozen centroid
-constants."""
+frozen-quantizer embedding-drift monitor. Each row's DuckDB
+differential runs in tests/test_oracles.py (the epoch oracle nests the
+full waterfilling and counts predecessors pairwise; the delta oracle
+replays the recrawl fixture and re-fingerprints both sides; the drift
+oracle re-derives both snapshots' cell assignments from the frozen
+centroid constants)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -51,23 +21,9 @@ def _docs(spark):
     return load(spark, SF, "documents")
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_epoch_plan_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sample_epoch_plan", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_epoch_plan_matches_duckdb(catalog_rows):
+    got = catalog_rows("sample_epoch_plan")
+    assert len(got) > 0
     # the plan is a total order over the funded corpus
     seqs = sorted(r[3] for r in got)
     assert seqs == list(range(1, len(got) + 1))
@@ -83,10 +39,9 @@ def test_epoch_plan_matches_duckdb(spark):
         assert gseqs == sorted(gseqs)
 
 
-def test_snapshot_delta_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "merge_snapshot_delta", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_snapshot_delta_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("merge_snapshot_delta")
+    assert len(got) > 0
     from collections import Counter
 
     docs = _docs(spark).select("doc_id", "text")
@@ -120,12 +75,11 @@ def test_snapshot_delta_whitespace_invariant(spark):
     assert out == {1: "unchanged", 2: "changed"}
 
 
-def test_ivf_cell_drift_matches_duckdb(spark):
+def test_ivf_cell_drift_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.tables import load
 
-    got, exp = _run_pair(spark, "similarity_cell_drift", "embeddings")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("similarity_cell_drift")
+    assert len(got) > 0
     emb = load(spark, SF, "embeddings").select("vec_id", "embedding")
     new = emb.filter(F.col("vec_id") % 17 != 0)
     # conservation: totals reconcile with the fixture — n_old sums to

@@ -1,67 +1,22 @@
-"""Differential (DuckDB) checks for the operators banked for round-19
-catalog registration — held-out Stupid-Backoff trigram surprisal (the
+"""Property checks for held-out Stupid-Backoff trigram surprisal (the
 LM-fidelity step above the bigram row, scored on a real train/held
 split so every backoff tier fires), rendezvous-hashing shard
 assignment (with the minimal-movement resize contract), and
 next-event-prediction training examples from the event log. Each
-DuckDB side is an independent formulation re-deriving splits, count
-tables, argmax placements, and window frames from raw data."""
+row's DuckDB differential runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
 import math
-import os
 
-import duckdb
-from pyspark.sql import functions as F
-
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
-
-
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_trigram_heldout_matches_duckdb(spark):
+def test_trigram_heldout_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.tables import load
 
-    got, exp = _run_pair(spark, "text_trigram_logprob_heldout", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("text_trigram_logprob_heldout")
+    assert len(got) > 0
     # only held-out docs are scored, and they are a strict minority
     n_docs = load(spark, SF, "documents").count()
     assert 0 < len(got) < n_docs / 2
@@ -104,12 +59,11 @@ def test_trigram_backoff_tiers_fire(spark):
     assert abs(nll - expected) < 1e-9
 
 
-def test_rendezvous_matches_duckdb_and_minimal_movement(spark):
+def test_rendezvous_matches_duckdb_and_minimal_movement(spark, catalog_rows):
     from hummingbirddatapipeline_spark.tables import load
 
-    got, exp = _run_pair(spark, "layout_rendezvous_shards", "documents")
-    assert len(got) == len(exp) == load(spark, SF, "documents").count()
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("layout_rendezvous_shards")
+    assert len(got) == load(spark, SF, "documents").count()
     # the HRW contract: every moved key lands on the ADDED shard, and
     # the moved fraction is ~1/9 (binomial 3-sigma band)
     moved = [r for r in got if r[3]]
@@ -122,13 +76,12 @@ def test_rendezvous_matches_duckdb_and_minimal_movement(spark):
         assert 0 <= s < 8 and 0 <= sn < 9
 
 
-def test_event_sequences_match_duckdb(spark):
+def test_event_sequences_match_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.tables import load
 
     ev = load(spark, SF, "events")
-    got, exp = _run_pair(spark, "events_sequence_examples", "events")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("events_sequence_examples")
+    assert len(got) > 0
     # every example carries exactly `history` inputs, and per-user
     # example counts reconcile with the user's event count
     from collections import Counter

@@ -1,45 +1,15 @@
-"""Differential (DuckDB) checks for the operators banked for round-20
-catalog registration — the corpus-OBSERVABILITY tier: the duplicate-
+"""Property checks for the corpus-OBSERVABILITY rows: the duplicate-
 cluster size histogram (with singleton accounting), the worst-
 boilerplate window leaderboard (engine-neutral representative
 tiebreaks), and the per-language BPE tokenizer-fertility report. Each
-DuckDB side is an independent formulation: the histogram oracle
-re-derives the Jaccard graph and closes it recursively; the
+row's DuckDB differential runs in tests/test_oracles.py (the histogram
+oracle re-derives the Jaccard graph and closes it recursively; the
 leaderboard oracle rebuilds windows/counts/representatives from raw
-text; the fertility oracle nests the full frozen-merge replay."""
+text; the fertility oracle nests the full frozen-merge replay)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -48,23 +18,9 @@ def _docs(spark):
     return load(spark, SF, "documents")
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_cluster_histogram_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_cluster_histogram")
-    assert len(got) == len(exp) > 1
-    assert _norm(got) == _norm(exp)
+def test_cluster_histogram_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("dedup_cluster_histogram")
+    assert len(got) > 1
     # every document is accounted exactly once across the histogram
     assert sum(r[2] for r in got) == _docs(spark).count()
     for size, n_clusters, n_docs in got:
@@ -72,10 +28,9 @@ def test_cluster_histogram_matches_duckdb(spark):
         assert n_docs == size * n_clusters
 
 
-def test_boilerplate_leaderboard_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_boilerplate_leaderboard")
-    assert len(got) == len(exp) == 20
-    assert _norm(got) == _norm(exp)
+def test_boilerplate_leaderboard_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_boilerplate_leaderboard")
+    assert len(got) == 20
     # ranks are 1..top in non-increasing occurrence order, every row
     # is genuinely duplicated, and the representative text has k tokens
     got.sort(key=lambda r: r[0])
@@ -110,10 +65,9 @@ def test_leaderboard_plants_surface_first(spark):
         assert occ == 9 and n_docs == 9 and rep_doc == 0
 
 
-def test_bpe_fertility_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_bpe_fertility")
-    assert len(got) == len(exp) > 1
-    assert _norm(got) == _norm(exp)
+def test_bpe_fertility_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("text_bpe_fertility")
+    assert len(got) > 1
     # conservation + sanity: doc counts cover the corpus; BPE never
     # splits below one token per word, and merges keep fertility
     # meaningfully below raw character count

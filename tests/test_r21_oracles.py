@@ -1,51 +1,19 @@
-"""Differential (DuckDB) checks for the operators banked for the r20
-registration window's SECOND tier (the "r21 bank") — cross-source
-duplication matrix (data-provenance observability over the near-dup
-graph), per-document TF-IDF keyword extraction (corpus profiling), and
-the PQ reconstruction-distortion report (the index-quality acceptance
-step that closes the ANN train -> encode -> search -> measure arc) —
-run on the real testdata exactly the way the catalog oracle gate
-would, so registration is a decorator + window change. Each DuckDB
-side is an independent formulation per the repo's differential rule:
-the matrix oracle re-derives the exact Jaccard pair graph from raw
-text and recounts cells; the keywords oracle rebuilds tf/df/smoothed
-idf and the top-k cut; the distortion oracle unrolls all m Lloyd
-trajectories and re-picks each vector's argmin (code, distance)."""
+"""Property checks for the cross-source duplication matrix
+(data-provenance observability over the near-dup graph), per-document
+TF-IDF keyword extraction (corpus profiling), and the PQ
+reconstruction-distortion report (the index-quality acceptance step
+that closes the ANN train -> encode -> search -> measure arc). Each
+row's DuckDB differential runs in tests/test_oracles.py (the matrix
+oracle re-derives the exact Jaccard pair graph from raw text and
+recounts cells; the keywords oracle rebuilds tf/df/smoothed idf and
+the top-k cut; the distortion oracle unrolls all m Lloyd trajectories
+and re-picks each vector's argmin (code, distance))."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01) without
-# duplicating the Spark-side builders
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables: str):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -69,27 +37,13 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, table):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(table)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_cross_source_matrix_matches_duckdb(spark):
+def test_cross_source_matrix_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.catalog.dedup_q import (
         shared_jaccard_pairs,
     )
 
-    got, exp = _run_pair(spark, "dedup_cross_source_matrix", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+    got = catalog_rows("dedup_cross_source_matrix")
+    assert len(got) > 0
 
     # conservation: cell pair counts sum to the full pair-set size,
     # cells are canonically ordered, and doc counts are sane
@@ -134,10 +88,9 @@ def test_cross_source_matrix_attribution_is_exact(spark):
     assert len(out) == 3
 
 
-def test_tfidf_keywords_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_tfidf_keywords", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_tfidf_keywords_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_tfidf_keywords")
+    assert len(got) > 0
 
     per_doc = {}
     for doc_id, term, tf, df, score, rank in got:
@@ -172,10 +125,9 @@ def test_tfidf_keywords_surfaces_the_distinctive_term(spark):
     assert rows[(1, 1)] == "zebra"
 
 
-def test_pq_distortion_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "similarity_pq_distortion", "embeddings")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_pq_distortion_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_pq_distortion")
+    assert len(got) > 0
 
     max_code = sum(7 * 8**s for s in range(4))
     for _vid, code_sum, distortion in got:

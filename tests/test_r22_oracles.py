@@ -1,49 +1,18 @@
-"""Differential (DuckDB) checks for the second late-bank tier (the
-"r22 bank"; registration target: the r20 window with the r20 + r21
-tiers) — the tokenizer-budget vocabulary-coverage curve, the
-length-grouped batching plan with per-batch padding efficiency, and
-the portable-MinHash Jaccard estimator with per-pair observed error —
-run on the real testdata exactly the way the catalog oracle gate
-would. Each DuckDB side is an independent formulation per the repo's
-differential rule: the coverage oracle rebuilds the ranked vocabulary
-and every conditional sum; the batching oracle replays the md5
-shuffle order and the integer batch cuts; the estimator oracle
-re-derives candidate pairs, every doc's K-component md5 signature,
-and the estimate/exact/error arithmetic."""
+"""Property checks for the tokenizer-budget vocabulary-coverage curve,
+the length-grouped batching plan with per-batch padding efficiency,
+and the portable-MinHash Jaccard estimator with per-pair observed
+error. Each row's DuckDB differential runs in tests/test_oracles.py
+(the coverage oracle rebuilds the ranked vocabulary and every
+conditional sum; the batching oracle replays the md5 shuffle order and
+the integer batch cuts; the estimator oracle re-derives candidate
+pairs, every doc's K-component md5 signature, and the
+estimate/exact/error arithmetic)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-# BANK_SF_DIR lets the registration dry-run re-check every banked
-# differential at the driver gate's scale (sf0.01)
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 _VS = (64, 256, 1024, 4096)
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
 
 
 def _docs(spark):
@@ -56,23 +25,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_vocab_coverage_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_vocab_coverage")
-    assert len(got) == len(exp) == len(_VS)
-    assert _norm(got) == _norm(exp)
+def test_vocab_coverage_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_vocab_coverage")
+    assert len(got) == len(_VS)
 
     rows = {r[0]: r for r in got}
     total = rows[_VS[0]][3]
@@ -109,10 +64,9 @@ def test_vocab_coverage_zipf_fixture(spark):
     assert rows[1]["coverage"] == round(8 / 15, 6)
 
 
-def test_length_groups_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_pack_length_groups")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_length_groups_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("text_pack_length_groups")
+    assert len(got) > 0
 
     # every doc accounted once; batches respect batch_size; within a
     # bin only the LAST batch may run short; padding_frac in [0, 1)
@@ -148,13 +102,12 @@ def test_length_groups_batches_are_content_addressed(spark):
         tuple(r)
         for r in pack_length_groups(docs.repartition(7), 64, 8, "lg0").collect()
     ]
-    assert _norm(base) == _norm(rep)
+    assert sorted(base, key=repr) == sorted(rep, key=repr)
 
 
-def test_minhash_estimate_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_minhash_estimate")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_minhash_estimate_matches_duckdb(catalog_rows):
+    got = catalog_rows("dedup_minhash_estimate")
+    assert len(got) > 0
 
     # estimator sanity on real data: estimates are K-rationals in
     # [0, 1]; identical shingle SETS estimate exactly 1.0; and the

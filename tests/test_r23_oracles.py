@@ -1,44 +1,15 @@
-"""Differential (DuckDB) checks for the third late-bank tier (the
-"r23 bank") — per-doc n-gram novelty (corpus-unique gram fraction),
-per-source Borda rank-fusion of three quality signals, and the LSH
-banding recall report over the portable-MinHash signature family —
-run on the real testdata exactly the way the catalog oracle gate
-would. Each DuckDB side is an independent formulation per the repo's
-differential rule: the novelty oracle rebuilds gram sets, document
-frequencies, and the unique-gram conditional sums; the Borda oracle
-re-derives all three signals and every window rank; the recall oracle
-replays signature banding with raw component-slice buckets and the
-exact pair set."""
+"""Property checks for per-doc n-gram novelty (corpus-unique gram
+fraction), per-source Borda rank-fusion of three quality signals, and
+the LSH banding recall report over the portable-MinHash signature
+family. Each row's DuckDB differential runs in tests/test_oracles.py
+(the novelty oracle rebuilds gram sets, document frequencies, and the
+unique-gram conditional sums; the Borda oracle re-derives all three
+signals and every window rank; the recall oracle replays signature
+banding with raw component-slice buckets and the exact pair set)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _docs(spark):
@@ -51,26 +22,10 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_ngram_novelty_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_ngram_novelty")
-    con = _duck()
-    n_docs = con.sql("SELECT COUNT(*) FROM documents").fetchone()[0]
-    con.close()
-    assert len(got) == len(exp) == n_docs  # one row per doc, always
-    assert _norm(got) == _norm(exp)
+def test_ngram_novelty_matches_duckdb(catalog_rows, duck):
+    got = catalog_rows("text_ngram_novelty")
+    n_docs = duck.sql("SELECT COUNT(*) FROM documents").fetchone()[0]
+    assert len(got) == n_docs  # one row per doc, always
     for _id, n_grams, n_novel, frac in got:
         assert 0 <= n_novel <= n_grams
         if n_grams:
@@ -104,10 +59,9 @@ def test_ngram_novelty_fixture(spark):
     assert rows[4]["n_grams"] == 0 and rows[4]["novelty_frac"] == 0.0
 
 
-def test_quality_borda_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "curation_quality_borda")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_quality_borda_matches_duckdb(catalog_rows):
+    got = catalog_rows("curation_quality_borda")
+    assert len(got) > 0
 
     # per-source rank sanity: each rank column is a permutation of
     # 1..n_s within its source, and borda = sum of the three ranks
@@ -152,10 +106,9 @@ def test_quality_borda_fixture_and_stability(spark):
     assert base == rep
 
 
-def test_lsh_recall_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_lsh_recall")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_lsh_recall_matches_duckdb(catalog_rows, duck):
+    got = catalog_rows("dedup_lsh_recall")
+    assert len(got) > 0
     bands = {r[0]: r for r in got}
     for band_lo, n_pairs, n_caught, recall in got:
         assert 0 <= n_caught <= n_pairs
@@ -163,15 +116,13 @@ def test_lsh_recall_matches_duckdb(spark):
     # identical-doc pairs (J = 1.0, in the 0.9 band) have identical
     # signatures, hence share every band bucket: always caught
     if 0.9 in bands:
-        con = _duck()
-        n_exact_dups = con.sql(
+        n_exact_dups = duck.sql(
             """
             SELECT COUNT(*) FROM (
               SELECT lower(trim(text)) t, COUNT(*) c FROM documents
               WHERE doc_id < 200 GROUP BY 1 HAVING COUNT(*) >= 2)
             """
         ).fetchone()[0]
-        con.close()
         if n_exact_dups:
             assert bands[0.9][2] >= 1  # at least the exact twins
 

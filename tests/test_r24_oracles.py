@@ -1,45 +1,17 @@
-"""Differential (DuckDB) checks for the fourth late-bank tier (the
-"r24 bank") — the concat-and-chunk packing manifest (the GPT
+"""Property checks for the concat-and-chunk packing manifest (the GPT
 pretraining layout's deterministic core), the Heaps-law vocabulary
-growth curve, and Cohen's kappa between two quality gates — run on
-the real testdata exactly the way the catalog oracle gate would.
-Each DuckDB side is an independent formulation: the manifest oracle
+growth curve, and Cohen's kappa between two quality gates. Each row's
+DuckDB differential runs in tests/test_oracles.py (the manifest oracle
 replays the md5 shard route, stream order, and running-sum offsets;
 the growth oracle rebuilds word first-occurrences and every prefix
 conditional sum; the kappa oracle re-derives both gates, the 2x2
-contingency, and the po/pe/kappa chain."""
+contingency, and the po/pe/kappa chain)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 _FRACS = (0.25, 0.5, 0.75, 1.0)
-
-
-def _duck():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'documents.parquet')}')"
-    )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
 
 
 def _docs(spark):
@@ -52,23 +24,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_concat_manifest_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_pack_concat_manifest")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_concat_manifest_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_pack_concat_manifest")
+    assert len(got) > 0
 
 
 def test_concat_manifest_stream_contiguity(spark):
@@ -109,10 +67,9 @@ def test_concat_manifest_repartition_stable(spark):
     assert base == rep
 
 
-def test_heaps_growth_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_heaps_growth")
-    assert len(got) == len(exp) == len(_FRACS)
-    assert _norm(got) == _norm(exp)
+def test_heaps_growth_matches_duckdb(spark, catalog_rows):
+    got = catalog_rows("text_heaps_growth")
+    assert len(got) == len(_FRACS)
 
     # growth curve sanity: docs/tokens/types all monotone in frac;
     # the full-corpus point covers every doc; Heaps sub-linearity
@@ -146,10 +103,9 @@ def test_heaps_growth_fixture(spark):
     assert rows[1.0]["n_types"] == 3 and rows[1.0]["n_tokens"] == 5
 
 
-def test_gate_kappa_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "curation_gate_kappa")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_gate_kappa_matches_duckdb(catalog_rows):
+    got = catalog_rows("curation_gate_kappa")
+    assert len(got) > 0
     for _src, n, n11, n10, n01, n00, po, pe, kappa in got:
         assert n == n11 + n10 + n01 + n00
         assert po == round((n11 + n00) / n, 6)
@@ -160,8 +116,6 @@ def test_gate_kappa_constructive(spark):
     """Perfect agreement -> kappa 1.0 (pe = 1 convention when both
     gates are constant); engineered disagreement -> kappa 0.0 when
     agreement is exactly chance-level."""
-    from pyspark.sql import functions as F
-
     from hummingbirddatapipeline_spark.operators.evaluation import (
         gate_agreement_kappa,
     )

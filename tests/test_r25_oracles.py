@@ -1,43 +1,14 @@
-"""Differential (DuckDB) checks for the fifth late-bank tier (the
-"r25 bank") — the islands-and-gaps freshness report over events, the
-ViT patch-grid manifest over synthetic image metadata, and the
-TPC-H-Q14-shaped monthly promo-revenue share — run on the real
-testdata exactly the way the catalog oracle gate would. Each DuckDB
-side is an independent formulation: the gap oracle re-derives the
-per-user epoch-ms lag; the patch oracle rebuilds the synthetic
+"""Property checks for the islands-and-gaps freshness report over
+events, the ViT patch-grid manifest over synthetic image metadata, and
+the TPC-H-Q14-shaped monthly promo-revenue share. Each row's DuckDB
+differential runs in tests/test_oracles.py (the gap oracle re-derives
+the per-user epoch-ms lag; the patch oracle rebuilds the synthetic
 metadata and every ceil-division; the promo oracle recomputes exact
-cent sums per the q1 money convention."""
+cent sums per the q1 money convention)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -50,23 +21,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_gap_report_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "events_gap_report", "events")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_gap_report_matches_duckdb(catalog_rows):
+    got = catalog_rows("events_gap_report")
+    assert len(got) > 0
     for _u, start, end, gap in got:
         assert gap == end - start >= 3_600_000
 
@@ -95,10 +52,9 @@ def test_gap_report_fixture(spark):
     assert r["user_id"] == 1 and r["gap_ms"] == 7_200_000
 
 
-def test_patch_plan_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "multimodal_patch_plan", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_patch_plan_matches_duckdb(catalog_rows):
+    got = catalog_rows("multimodal_patch_plan")
+    assert len(got) > 0
     for _id, w, h, npx, npy, n, pad_x, pad_y in got:
         assert npx == -(-w // 16) and npy == -(-h // 16)
         assert n == npx * npy
@@ -132,10 +88,9 @@ def test_patch_plan_fixture(spark):
     assert rows[2]["pad_x"] == 15 and rows[2]["pad_y"] == 0
 
 
-def test_q14_promo_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "q14_promo_effect", "lineitem", "part")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_q14_promo_matches_duckdb(catalog_rows):
+    got = catalog_rows("q14_promo_effect")
+    assert len(got) > 0
     for month, promo, total, pct in got:
         assert 1 <= month <= 12
         assert 0 <= promo <= total

@@ -1,44 +1,18 @@
-"""Differential (DuckDB) checks for the sixth late-bank tier (the
-"r26 bank") — the bidirectional embedding-coverage DQ report, the
-per-source embedding norm profile, and the character-entropy quality
-signal — run on the real testdata exactly the way the catalog oracle
-gate would. Each DuckDB side is an independent formulation: the
-coverage oracle re-derives the full-outer join and the orphan fold;
-the profile oracle recomputes every e6 norm and the exact-long mean;
-the entropy oracle replays the sorted-distinct fold order char by
-char."""
+"""Property checks for the bidirectional embedding-coverage DQ report,
+the per-source embedding norm profile, and the character-entropy
+quality signal. Each row's DuckDB differential runs in
+tests/test_oracles.py (the coverage oracle re-derives the full-outer
+join and the orphan fold; the profile oracle recomputes every e6 norm
+and the exact-long mean; the entropy oracle replays the
+sorted-distinct fold order char by char)."""
 
 from __future__ import annotations
 
 import math
-import os
 
-import duckdb
 from pyspark.sql import functions as F
 
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -51,23 +25,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_embedding_coverage_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dq_embedding_coverage", "documents", "embeddings")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_embedding_coverage_matches_duckdb(catalog_rows):
+    got = catalog_rows("dq_embedding_coverage")
+    assert len(got) > 0
     for src, n_docs, n_matched, n_doc_only, n_vec_only, cov in got:
         assert n_docs == n_matched + n_doc_only
         if src != "__orphan__":
@@ -99,12 +59,9 @@ def test_embedding_coverage_fixture(spark):
     assert rows["__orphan__"]["coverage"] == 0.0
 
 
-def test_source_profile_matches_duckdb(spark):
-    got, exp = _run_pair(
-        spark, "similarity_source_profile", "documents", "embeddings"
-    )
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_source_profile_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_source_profile")
+    assert len(got) > 0
     for _src, n, mean_e6, mn, mx in got:
         assert n > 0 and mn <= mean_e6 <= mx
 
@@ -135,10 +92,9 @@ def test_source_profile_scale_invariance(spark):
     assert r2["mean_norm_e6"] == 2 * r1["mean_norm_e6"]
 
 
-def test_char_entropy_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_char_entropy", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_char_entropy_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_char_entropy")
+    assert len(got) > 0
     for _id, n_chars, ent in got:
         assert ent >= 0.0
         if n_chars:

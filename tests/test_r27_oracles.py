@@ -1,39 +1,14 @@
-"""Differential (DuckDB) checks for the seventh late-bank tier (the
-"r27 bank") — top-k PMI collocations, the LSH candidate-load profile
-(the precision-side companion completing the MinHash observability
-triptych), and the bracketed-predicate Q19 revenue shape — run on the
-real testdata exactly the way the catalog oracle gate would."""
+"""Property checks for top-k PMI collocations, the LSH candidate-load
+profile (the precision-side companion completing the MinHash
+observability triptych), and the bracketed-predicate Q19 revenue
+shape. Each row's DuckDB differential runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
 import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -46,23 +21,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_pmi_collocations_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_pmi_collocations", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_pmi_collocations_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_pmi_collocations")
+    assert len(got) > 0
     ranks = sorted(r[5] for r in got)
     assert ranks == list(range(1, len(got) + 1))
     for _bg, c_ab, c_a, c_b, _pmi, _rk in got:
@@ -100,10 +61,9 @@ def test_pmi_collocations_fixture(spark):
     assert rows["of the"]["c_a"] == rows["of the"]["c_b"] == 5
 
 
-def test_lsh_candidate_profile_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_lsh_candidate_profile", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_lsh_candidate_profile_matches_duckdb(catalog_rows):
+    got = catalog_rows("dedup_lsh_candidate_profile")
+    assert len(got) > 0
     total_frac = sum(r[2] for r in got)
     assert abs(total_frac - 1.0) < 1e-4
     for band_lo, n, frac in got:
@@ -136,10 +96,9 @@ def test_lsh_profile_consistency_with_recall(spark):
     assert prof.get(0.9, 0) == rec[0.9]["n_caught"] == 8
 
 
-def test_q19_bracket_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "q19_bracket_revenue", "lineitem", "part")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_q19_bracket_matches_duckdb(catalog_rows):
+    got = catalog_rows("q19_bracket_revenue")
+    assert len(got) > 0
     for bracket, n, cents in got:
         assert bracket in ("Brand#11", "Brand#12", "Brand#13")
         assert n > 0 and cents > 0

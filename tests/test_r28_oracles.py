@@ -1,39 +1,14 @@
-"""Differential (DuckDB) checks for the eighth late-bank tier (the
-"r28 bank") — per-source unigram KL divergence (exact scaled-long
-sums), the K x K source vocabulary-overlap matrix, and MAD-based
-robust hourly anomaly detection — run on the real testdata exactly
-the way the catalog oracle gate would."""
+"""Property checks for per-source unigram KL divergence (exact
+scaled-long sums), the K x K source vocabulary-overlap matrix, and
+MAD-based robust hourly anomaly detection. Each row's DuckDB
+differential runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
 import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -46,23 +21,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_source_kl_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_source_kl", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_source_kl_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_source_kl")
+    assert len(got) > 0
     # KL is non-negative up to per-term e9 quantization (each term
     # rounds by at most 0.5e-9, so the exact-sum floor is -n_types/2e9
     # in e9 units = -n_types/2)
@@ -99,15 +60,10 @@ def test_source_kl_fixture(spark):
     assert rows["C"]["kl_e9"] == 0
 
 
-def test_source_overlap_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_source_overlap", "documents")
-    con = _duck("documents")
-    n_src = con.sql(
-        "SELECT COUNT(DISTINCT source) FROM documents"
-    ).fetchone()[0]
-    con.close()
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_source_overlap_matches_duckdb(catalog_rows, duck):
+    got = catalog_rows("dedup_source_overlap")
+    n_src = duck.sql("SELECT COUNT(DISTINCT source) FROM documents").fetchone()[0]
+    assert len(got) > 0
     # every unordered pair present at most once, canonically ordered
     assert len(got) <= n_src * (n_src - 1) // 2
     seen = set()
@@ -143,13 +99,11 @@ def test_source_overlap_fixture(spark):
     assert r["jaccard"] == round(1 / 3, 6)
 
 
-def test_mad_anomaly_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "events_mad_anomaly", "events")
+def test_mad_anomaly_matches_duckdb(catalog_rows):
+    got = catalog_rows("events_mad_anomaly")
     # sf0.001's per-type stream is calm enough that both sides may be
     # empty (matching-empty is still a valid differential); sf0.01
-    # (the BANK_SF_DIR dry-run / driver scale) yields ~89 rows
-    assert len(got) == len(exp)
-    assert _norm(got) == _norm(exp)
+    # yields ~89 rows
     for _u, _h, n, med, mad, dev in got:
         assert mad > 0
         assert dev == abs(n - med) > 3.0 * mad

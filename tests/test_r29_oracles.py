@@ -1,40 +1,12 @@
-"""Differential (DuckDB) checks for the ninth late-bank tier (the
-"r29 bank") — the portable count-min error report (the frequency-
-sketch member of the observe-don't-trust family), exponential-
-priority weighted sampling (Efraimidis-Spirakis with content-
-addressed randomness), and per-source signature words by lift — run
-on the real testdata exactly the way the catalog oracle gate would."""
+"""Property checks for the portable count-min error report (the
+frequency-sketch member of the observe-don't-trust family),
+exponential-priority weighted sampling (Efraimidis-Spirakis with
+content-addressed randomness), and per-source signature words by
+lift. Each row's DuckDB differential runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -47,23 +19,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_countmin_error_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sketch_countmin_error", "documents")
-    assert len(got) == len(exp) == 20
-    assert _norm(got) == _norm(exp)
+def test_countmin_error_matches_duckdb(catalog_rows):
+    got = catalog_rows("sketch_countmin_error")
+    assert len(got) == 20
     # the CM theorem on real data: never an underestimate
     for _w, exact, est, over, _rk in got:
         assert est >= exact
@@ -103,10 +61,9 @@ def test_countmin_width1_sums_everything(spark):
         assert r["cm_estimate"] == 4
 
 
-def test_priority_sample_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sample_priority_weighted", "documents")
-    assert len(got) == len(exp) == 50
-    assert _norm(got) == _norm(exp)
+def test_priority_sample_matches_duckdb(catalog_rows):
+    got = catalog_rows("sample_priority_weighted")
+    assert len(got) == 50
 
 
 def test_priority_sample_weight_bias_and_stability(spark):
@@ -140,10 +97,9 @@ def test_priority_sample_weight_bias_and_stability(spark):
     assert [r["doc_id"] for r in out] == [2]
 
 
-def test_signature_ngrams_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_signature_ngrams", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_signature_ngrams_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_signature_ngrams")
+    assert len(got) > 0
     for _src, _w, c_sw, c_w, lift, rank in got:
         assert c_sw >= 5 and c_sw <= c_w
         assert 1 <= rank <= 5

@@ -1,40 +1,14 @@
-"""Differential (DuckDB) checks for the tenth late-bank tier (the
-"r30 bank") — per-cluster cohesion over the near-dup graph, the
-portable HyperLogLog error report (cardinality member of the
+"""Property checks for per-cluster cohesion over the near-dup graph,
+the portable HyperLogLog error report (cardinality member of the
 observe-don't-trust sketch family), and cross-source reciprocal best
-matches — run on the real testdata exactly the way the catalog
-oracle gate would."""
+matches. Each row's DuckDB differential runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
 import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -47,23 +21,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_cluster_cohesion_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_cluster_cohesion", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_cluster_cohesion_matches_duckdb(catalog_rows):
+    got = catalog_rows("dedup_cluster_cohesion")
+    assert len(got) > 0
     for cid, n, n_pairs, mean_e6, density in got:
         assert n >= 2
         assert 1 <= n_pairs <= n * (n - 1) // 2
@@ -96,10 +56,9 @@ def test_cluster_cohesion_fixture(spark):
     assert rows[10]["mean_jaccard_e6"] == 900_000
 
 
-def test_hll_error_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sketch_hll_error", "documents")
-    assert len(got) == len(exp) == 1
-    assert _norm(got) == _norm(exp)
+def test_hll_error_matches_duckdb(catalog_rows):
+    got = catalog_rows("sketch_hll_error")
+    assert len(got) == 1
     m, n_exact, est, rel_err = got[0]
     assert m == 64 and n_exact > 0 and est > 0
     # the observed error should sit within a loose multiple of the
@@ -130,10 +89,9 @@ def test_hll_small_range_exact_regime(spark):
     )
 
 
-def test_best_match_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "dedup_cross_source_best_match", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_best_match_matches_duckdb(catalog_rows):
+    got = catalog_rows("dedup_cross_source_best_match")
+    assert len(got) > 0
     seen_a, seen_b = set(), set()
     for id_a, id_b, sa, sb, j in got:
         assert id_a < id_b and sa != sb and j >= 0.3

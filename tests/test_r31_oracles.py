@@ -1,40 +1,15 @@
-"""Differential (DuckDB) checks for the eleventh late-bank tier (the
-"r31 bank") — the Bloom-filter FPR report (membership member of the
-observe-don't-trust sketch family), per-source embedding centroid
-drift (exact e6-long sums, dim-ordered cosine), and the per-source
-length-percentile profile — run on the real testdata exactly the way
-the catalog oracle gate would."""
+"""Property checks for the Bloom-filter FPR report (membership member
+of the observe-don't-trust sketch family), per-source embedding
+centroid drift (exact e6-long sums, dim-ordered cosine), and the
+per-source length-percentile profile. Each row's DuckDB differential
+runs in tests/test_oracles.py."""
 
 from __future__ import annotations
 
 import math
-import os
-
-import duckdb
-
-SF = os.environ.get("BANK_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _duck(*tables):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
+from __spark_entry__ import SMOKE_SF_DIR as SF
 
 
 def _load(spark, table):
@@ -47,23 +22,9 @@ def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _run_pair(spark, name, *tables):
-    """Differential through catalog.resolve_pair — the exact
-    registration code; promoting the tier to @query changes nothing."""
-    from hummingbirddatapipeline_spark.catalog import resolve_pair
-
-    fn, sql = resolve_pair(name)
-    got = [tuple(r) for r in fn(spark, SF).collect()]
-    con = _duck(*tables)
-    exp = con.sql(sql).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_bloom_fpr_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "sketch_bloom_fpr", "documents")
-    assert len(got) == len(exp) == 1
-    assert _norm(got) == _norm(exp)
+def test_bloom_fpr_matches_duckdb(catalog_rows):
+    got = catalog_rows("sketch_bloom_fpr")
+    assert len(got) == 1
     m, n_members, n_probes, n_fp, fpr, fpr_theory = got[0]
     assert m == 16 * 63
     assert 0 <= n_fp <= n_probes
@@ -74,8 +35,6 @@ def test_bloom_fpr_saturated_filter(spark):
     """A filter overloaded far beyond its capacity saturates: theory
     approaches 1 and every probe false-positives; an EMPTY member set
     has fpr and theory exactly 0 (no bit ever set)."""
-    from pyspark.sql import functions as F
-
     from hummingbirddatapipeline_spark.operators.contamination import (
         bloom_fpr_report,
     )
@@ -96,12 +55,9 @@ def test_bloom_fpr_saturated_filter(spark):
     assert r2["fpr"] == 0.0 and r2["fpr_theory"] == 0.0
 
 
-def test_centroid_drift_matches_duckdb(spark):
-    got, exp = _run_pair(
-        spark, "similarity_centroid_drift", "documents", "embeddings"
-    )
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_centroid_drift_matches_duckdb(catalog_rows):
+    got = catalog_rows("similarity_centroid_drift")
+    assert len(got) > 0
     for _src, n_vecs, cos in got:
         assert n_vecs > 0
         assert -1.0 - 1e-9 <= cos <= 1.0 + 1e-9
@@ -128,10 +84,9 @@ def test_centroid_drift_fixture(spark):
     assert rows["A"] == rows["B"] == round(1 / math.sqrt(2), 6)
 
 
-def test_length_profile_matches_duckdb(spark):
-    got, exp = _run_pair(spark, "text_length_profile", "documents")
-    assert len(got) == len(exp) > 0
-    assert _norm(got) == _norm(exp)
+def test_length_profile_matches_duckdb(catalog_rows):
+    got = catalog_rows("text_length_profile")
+    assert len(got) > 0
     for _src, n, p25, p50, p75, p95, mean_e2 in got:
         assert n > 0
         assert p25 <= p50 <= p75 <= p95

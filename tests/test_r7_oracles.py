@@ -1,22 +1,13 @@
-"""Differential (DuckDB) checks for the 11 operators registered into
-the catalog in round 7 (LTTB, Markov transitions, A-ES sampling,
-TF-IDF cosine pairs, triangle counts, decayed activity, winsorize,
-PSI drift, median impute, radius join, basket co-occurrence).
-
-The oracle SQL lives on the @query registrations now; this suite runs
-the SAME compare the driver runs (row count + column names +
-order-insensitive exact values) at sf0.001 so a regression in either
-side fails CI before the driver sees it."""
+"""The 11 operators registered into the catalog in round 7 (LTTB,
+Markov transitions, A-ES sampling, TF-IDF cosine pairs, triangle
+counts, decayed activity, winsorize, PSI drift, median impute, radius
+join, basket co-occurrence) must return rows at sf0.001, so their
+DuckDB differential in tests/test_oracles.py never passes on two empty
+results."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
 import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
 
 R7_QUERIES = [
     "events_lttb_downsample",
@@ -33,35 +24,6 @@ R7_QUERIES = [
 ]
 
 
-def _harness():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", os.path.join(REPO, "tools", "check_oracle.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-@pytest.fixture(scope="module")
-def duck():
-    return _harness().duck_connect(SF)
-
-
-@pytest.fixture(scope="module")
-def normalize():
-    return _harness().normalize
-
-
 @pytest.mark.parametrize("name", R7_QUERIES)
-def test_r7_query_matches_oracle(spark, duck, normalize, name):
-    from hummingbirddatapipeline_spark.catalog import ORACLES, QUERIES
-
-    sdf = QUERIES[name](spark, SF)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    rel = duck.sql(ORACLES[name])
-    duck_rows = rel.fetchall()
-    assert len(spark_rows) > 0, f"{name}: empty result"
-    assert sorted(sdf.columns) == sorted(rel.columns), name
-    assert normalize(spark_rows, sdf.columns) == normalize(
-        duck_rows, list(rel.columns)
-    ), name
+def test_r7_query_matches_oracle(catalog_rows, name):
+    assert len(catalog_rows(name)) > 0, f"{name}: empty result"

@@ -1,45 +1,19 @@
-"""Differential (DuckDB) checks for the operators banked for round-8
-catalog registration — rolling window features, quality-aware dedup
+"""Test-local DuckDB oracles for operators outside the catalog's own
+oracle rows — rolling window features, quality-aware dedup
 representatives, CDC changelog apply, contrastive negative sampling,
-column-profile drift, and first/last-touch attribution — run on the
-real testdata exactly the way the catalog oracle gate would, so next
-round's registration is a window change, not new work. Each DuckDB
-side is an independent formulation per the repo's differential rule."""
+column-profile drift, first/last-touch attribution, quantile transform,
+target encoding, frozen-quantizer IVF assignment and the unrolled
+PageRank recurrence. Each DuckDB side is an independent formulation,
+checked through the shared harness compare (``matches_sql``)."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
 
-def _duck():
-    con = duckdb.connect()
-    for t in ("events", "orders", "lineitem", "documents", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
-
-
-def test_rolling_window_stats_matches_duckdb(spark):
+def test_rolling_window_stats_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.windows import (
         rolling_window_stats,
     )
@@ -51,10 +25,8 @@ def test_rolling_window_stats_matches_duckdb(spark):
         F.expr("CAST(ts DIV 1000000 AS LONG)").alias("ts_ms"),
         "value",
     )
-    got = (
-        rolling_window_stats(ev, "user_id", "ts_ms", 3_600_000, "value")
-        .select("event_id", "user_id", "ts_ms", "n_in_window", "sum_in_window")
-        .collect()
+    df = rolling_window_stats(ev, "user_id", "ts_ms", 3_600_000, "value").select(
+        "event_id", "user_id", "ts_ms", "n_in_window", "sum_in_window"
     )
     sql = """
     SELECT event_id, user_id, (epoch_ns(ts) // 1000000) AS ts_ms,
@@ -64,12 +36,10 @@ def test_rolling_window_stats_matches_duckdb(spark):
     WINDOW w AS (PARTITION BY user_id ORDER BY (epoch_ns(ts) // 1000000)
                  RANGE BETWEEN 3599999 PRECEDING AND CURRENT ROW)
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    matches_sql(df, sql)
 
 
-def test_representatives_by_score_matches_duckdb(spark):
+def test_representatives_by_score_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.catalog.dedup_q import (
         DUCK_JACCARD_CC_CTES,
         shared_jaccard_pairs,
@@ -81,9 +51,7 @@ def test_representatives_by_score_matches_duckdb(spark):
 
     docs = load(spark, SF, "documents").select("doc_id", "n_chars")
     pairs = shared_jaccard_pairs(spark, SF)
-    got = dedup_representatives_by_score(
-        docs, pairs, "doc_id", "n_chars"
-    ).collect()
+    df = dedup_representatives_by_score(docs, pairs, "doc_id", "n_chars")
     sql = f"""
     WITH RECURSIVE {DUCK_JACCARD_CC_CTES},
     scored AS (
@@ -103,13 +71,11 @@ def test_representatives_by_score_matches_duckdb(spark):
     SELECT d.doc_id, d.n_chars FROM documents d
     WHERE d.doc_id NOT IN (SELECT node FROM losers)
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
+    got = matches_sql(df, sql)
     assert len(got) > 0
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
 
 
-def test_apply_cdc_matches_duckdb(spark):
+def test_apply_cdc_matches_duckdb(spark, matches_sql):
     """Synthetic changelog over orders: per customer a stream of
     (orderdate-ordered) changes; every 7th order is a delete
     tombstone. Current state = latest non-deleted change per key."""
@@ -124,7 +90,7 @@ def test_apply_cdc_matches_duckdb(spark):
         F.col("o_totalprice").cast("double").alias("amount"),
         F.col("o_orderpriority").alias("prio"),
     )
-    got = apply_cdc(ch, ["k"], "ts", "op", "tb").collect()
+    df = apply_cdc(ch, ["k"], "ts", "op", "tb")
     sql = """
     WITH ch AS (
       SELECT o_custkey AS k, CAST(o_orderdate AS VARCHAR) AS ts,
@@ -141,20 +107,18 @@ def test_apply_cdc_matches_duckdb(spark):
     )
     SELECT k, ts, tb, amount, prio FROM w WHERE rk = 1 AND op <> 'D'
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert len(exp) > 0
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    got = matches_sql(df, sql)
+    assert len(got) > 0
 
 
-def test_contrastive_negatives_matches_duckdb(spark):
+def test_contrastive_negatives_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.sampling import (
         contrastive_negatives,
     )
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, SF, "documents").select("doc_id")
-    got = contrastive_negatives(docs, "doc_id", k=4, seed="r8").collect()
+    df = contrastive_negatives(docs, "doc_id", k=4, seed="r8")
     sql = """
     WITH ranked AS (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) AS rnk,
@@ -179,15 +143,13 @@ def test_contrastive_negatives_matches_duckdb(spark):
            l.doc_id AS neg_id
     FROM resolved r JOIN ranked l ON l.rnk = r.tgt
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
+    got = matches_sql(df, sql)
     rows = [tuple(r) for r in got]
     assert len(rows) == docs.count() * 4
     assert all(r[0] != r[2] for r in rows)  # never self
-    assert _norm(rows) == _norm(exp)
 
 
-def test_profile_compare_matches_duckdb(spark):
+def test_profile_compare_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.expectations import (
         profile_compare,
     )
@@ -196,9 +158,7 @@ def test_profile_compare_matches_duckdb(spark):
     li = load(spark, SF, "lineitem")
     ref = li.filter(F.col("l_shipdate") < F.lit("1998-01-01"))
     cur = li.filter(F.col("l_shipdate") >= F.lit("1998-01-01"))
-    got = profile_compare(
-        ref, cur, ["l_quantity", "l_extendedprice", "l_discount"]
-    ).collect()
+    df = profile_compare(ref, cur, ["l_quantity", "l_extendedprice", "l_discount"])
     side = """
       SELECT '{c}' AS column_name,
              ROUND((COUNT(*) - COUNT({c})) / CAST(COUNT(*) AS DOUBLE), 6)
@@ -225,13 +185,11 @@ def test_profile_compare_matches_duckdb(spark):
            ROUND(cur_mean - ref_mean, 6) AS mean_delta
     FROM r JOIN c USING (column_name)
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
+    got = matches_sql(df, sql)
     assert len(got) == 3
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
 
 
-def test_touch_attribution_matches_duckdb(spark):
+def test_touch_attribution_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.temporal import (
         touch_attribution,
     )
@@ -255,10 +213,10 @@ def test_touch_attribution_matches_duckdb(spark):
         F.col("ts_ms").alias("click_ts_ms"),
         F.col("event_id").alias("click_id"),
     )
-    got = touch_attribution(
+    df = touch_attribution(
         conv, clicks, "user_id", "conv_ts_ms", "click_ts_ms", "click_id",
         lookback_ms=86_400_000, value_col="conv_value",
-    ).collect()
+    )
     sql = """
     WITH conv AS (
       SELECT event_id AS conv_id, user_id,
@@ -305,13 +263,11 @@ def test_touch_attribution_matches_duckdb(spark):
                 THEN ROUND(c.conv_value / 2.0, 6) END AS last_touch_credit
     FROM conv c LEFT JOIN agg a USING (conv_id)
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert len(exp) > 0
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    got = matches_sql(df, sql)
+    assert len(got) > 0
 
 
-def test_quantile_transform_matches_duckdb(spark):
+def test_quantile_transform_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.scale import (
         quantile_transform,
     )
@@ -324,7 +280,7 @@ def test_quantile_transform_matches_duckdb(spark):
         .otherwise(F.col("c_acctbal").cast("double"))
         .alias("bal"),
     )
-    got = quantile_transform(cust, "bal", "c_mktsegment").collect()
+    df = quantile_transform(cust, "bal", "c_mktsegment")
     sql = """
     WITH c AS (
       SELECT c_custkey, c_mktsegment,
@@ -340,12 +296,10 @@ def test_quantile_transform_matches_duckdb(spark):
     SELECT c_custkey, c_mktsegment, bal, NULL AS bal_qt
     FROM c WHERE bal IS NULL
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    matches_sql(df, sql)
 
 
-def test_target_encode_matches_duckdb(spark):
+def test_target_encode_matches_duckdb(spark, matches_sql):
     from hummingbirddatapipeline_spark.operators.scale import target_encode
     from hummingbirddatapipeline_spark.tables import load
 
@@ -357,7 +311,7 @@ def test_target_encode_matches_duckdb(spark):
         .otherwise(0)
         .alias("y"),
     )
-    got = target_encode(ord_, "m", "y", alpha=20.0).collect()
+    df = target_encode(ord_, "m", "y", alpha=20.0)
     sql = """
     WITH o AS (
       SELECT strftime(o_orderdate, '%Y-%m') AS m,
@@ -374,13 +328,11 @@ def test_target_encode_matches_duckdb(spark):
            ROUND((sum_label + 20.0 * g.prior) / (n + 20.0), 6) AS encoding
     FROM p CROSS JOIN g
     """
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert len(exp) > 10
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    got = matches_sql(df, sql)
+    assert len(got) > 10
 
 
-def test_ivf_incremental_add_matches_duckdb(spark):
+def test_ivf_incremental_add_matches_duckdb(spark, matches_sql):
     """Assignment against a frozen quantizer: centroids computed once
     (KMeans over even vec_ids), injected as constants into BOTH
     engines, odd vec_ids assigned — DuckDB recomputes every argmax
@@ -402,9 +354,9 @@ def test_ivf_incremental_add_matches_duckdb(spark):
     base = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter(F.col("vec_id") % 2 == 1)
     indexed, centroids = ivf_index(base, n_centroids=4, seed=7)
-    got = ivf_incremental_add(batch, centroids).select(
+    df = ivf_incremental_add(batch, centroids).select(
         "vec_id", "centroid_id", "centroid_sim"
-    ).collect()
+    )
 
     cent_sql = ", ".join(
         "[" + ", ".join(repr(x) for x in c) + "]" for c in centroids
@@ -435,10 +387,8 @@ def test_ivf_incremental_add_matches_duckdb(spark):
     SELECT vec_id, CAST(cid AS INT) AS centroid_id, sim AS centroid_sim
     FROM best WHERE rk = 1
     """
-    con = _duck2()
-    exp = con.sql(sql).fetchall()
-    assert len(exp) > 0
-    assert _norm([tuple(r) for r in got]) == _norm(exp)
+    got = matches_sql(df, sql)
+    assert len(got) > 0
 
     # frozen-quantizer consistency: re-assigning the indexed base
     # mostly reproduces the index's own labels — NOT exactly, by
@@ -454,15 +404,6 @@ def test_ivf_incremental_add_matches_duckdb(spark):
     own = {r["vec_id"]: r["centroid_id"] for r in indexed.collect()}
     agree = sum(1 for k in own if own[k] == re_assigned[k])
     assert agree / len(own) >= 0.9
-
-
-def _duck2():
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{os.path.join(SF, 'embeddings.parquet')}')"
-    )
-    return con
 
 
 def _pagerank_unrolled_sql(cc_ctes: str, n_iter: int, dp: int) -> str:
@@ -505,7 +446,7 @@ def _pagerank_unrolled_sql(cc_ctes: str, n_iter: int, dp: int) -> str:
     """
 
 
-def test_pagerank_matches_duckdb_unrolled(spark):
+def test_pagerank_matches_duckdb_unrolled(spark, matches_sql):
     from hummingbirddatapipeline_spark.catalog.dedup_q import (
         DUCK_JACCARD_CC_CTES,
         shared_jaccard_pairs,
@@ -513,14 +454,12 @@ def test_pagerank_matches_duckdb_unrolled(spark):
     from hummingbirddatapipeline_spark.operators.graph import pagerank
 
     pairs = shared_jaccard_pairs(spark, SF)
-    got = pagerank(pairs, n_iter=10).collect()
+    df = pagerank(pairs, n_iter=10)
     sql = _pagerank_unrolled_sql(DUCK_JACCARD_CC_CTES, 10, 12)
-    con = _duck()
-    exp = con.sql(sql).fetchall()
-    assert len(exp) > 0
+    got = matches_sql(df, sql)
+    assert len(got) > 0
     # scores form a distribution over edge-connected nodes
     total = sum(r["pagerank"] for r in got)
     n_isolated = len([r for r in got if r["pagerank"] is None])
     assert n_isolated == 0
     assert 0.5 < total <= 1.000001
-    assert _norm([tuple(r) for r in got]) == _norm(exp)

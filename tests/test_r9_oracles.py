@@ -1,20 +1,14 @@
-"""Differential (DuckDB) checks for the round-9-registered operators —
-SemDeDup-shaped semantic dedup, incremental connected-components
-maintenance, URL canonicalization + host gating, best-fit-decreasing
-sequence packing, and DSIR importance resampling — run on the real
-testdata exactly the way the catalog oracle gate does. Since r9 these
-rows are registered catalog queries, so each test drives the CATALOG
-entry against its REGISTERED oracle (one source of truth for both
-sides) and then asserts the extra structural properties the driver's
-value hash alone would not surface (twins really dropped, both gate
-outcomes occur, budget respected, selection skews to the target)."""
+"""Property checks for the round-9-registered operators — SemDeDup-
+shaped semantic dedup, incremental connected-components maintenance,
+URL canonicalization + host gating, best-fit-decreasing sequence
+packing, and DSIR importance resampling. Each row's DuckDB differential
+runs in tests/test_oracles.py; these tests assert the structural
+properties the value hash alone would not surface (twins really
+dropped, both gate outcomes occur, budget respected, selection skews
+to the target) on the same collected rows."""
 
 from __future__ import annotations
 
-import math
-import os
-
-import duckdb
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -22,53 +16,21 @@ SF = "/root/testdata/sf0.001"
 _SEM_TWIN_OFFSET = 10_000
 
 
-def _duck():
-    con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(SF, t + '.parquet')}')"
-        )
-    return con
-
-
-def _norm(rows):
-    out = []
-    for r in rows:
-        out.append(
-            tuple(
-                v.hex() if isinstance(v, float) and not math.isnan(v) else v
-                for v in r
-            )
-        )
-    return sorted(out, key=repr)
-
-
-def _run_pair(spark, name):
-    """(spark rows, oracle rows) for a registered catalog query."""
-    from hummingbirddatapipeline_spark.catalog import ORACLES, QUERIES
-
-    got = [tuple(r) for r in QUERIES[name](spark, SF).collect()]
-    con = _duck()
-    exp = con.sql(ORACLES[name]).fetchall()
-    con.close()
-    return got, exp
-
-
-def test_semantic_dedup_matches_duckdb(spark):
+def test_semantic_dedup_matches_duckdb(catalog_rows):
     """Scaled-copy twins (cosine exactly 1.0, same quantizer cell by
     scale invariance) give the fixture real semantic duplicates; the
     raw synthetic embeddings are near-orthogonal (max pairwise cosine
     0.479), so every non-twin pair stays far below the threshold."""
-    rows, exp = _run_pair(spark, "similarity_semantic_dedup")
+    rows = catalog_rows("similarity_semantic_dedup")
     # the fixture has real structure: every even id lost its twin
     n_dropped = sum(1 for r in rows if not r[3])
     assert n_dropped == sum(1 for r in rows if r[0] >= _SEM_TWIN_OFFSET)
     assert n_dropped > 0
-    assert _norm(rows) == _norm(exp)
 
 
-def test_incremental_cc_matches_full_recompute_and_duckdb(spark):
+def test_incremental_cc_matches_full_recompute_and_duckdb(
+    spark, catalog_rows, harness
+):
     """New edges (including corpus singletons and brand-new node ids)
     update the existing labeling; the result must equal BOTH a full
     Spark re-closure over old+new edges (restricted to the same node
@@ -82,8 +44,7 @@ def test_incremental_cc_matches_full_recompute_and_duckdb(spark):
     )
     from hummingbirddatapipeline_spark.tables import load
 
-    got, exp = _run_pair(spark, "dedup_incremental_cc")
-    assert _norm(got) == _norm(exp)
+    cols, got = catalog_rows("dedup_incremental_cc", with_cols=True)
 
     # full Spark re-closure over old+new edges must agree too
     old = shared_jaccard_pairs(spark, SF)
@@ -98,22 +59,22 @@ def test_incremental_cc_matches_full_recompute_and_duckdb(spark):
         )
     )
     full = connected_components(old.unionByName(new_edges))
-    assert _norm(got) == _norm([tuple(r) for r in full.collect()])
+    assert harness.normalize(got, cols) == harness.normalize(
+        full.collect(), full.columns
+    )
 
 
-def test_canonicalize_url_matches_duckdb(spark):
-    rows, exp = _run_pair(spark, "web_canonicalize_url")
+def test_canonicalize_url_matches_duckdb(catalog_rows):
+    rows = catalog_rows("web_canonicalize_url")
     # the fixture is genuinely dirty: canonicalization must change most
     assert sum(1 for r in rows if r[1] != r[3]) > len(rows) * 0.5
-    assert _norm(rows) == _norm(exp)
 
 
-def test_host_gate_matches_duckdb(spark):
-    rows, exp = _run_pair(spark, "web_host_gate")
+def test_host_gate_matches_duckdb(catalog_rows):
+    rows = catalog_rows("web_host_gate")
     assert len(rows) > 10
     # both gate outcomes occur on the fixture
     assert {r[4] for r in rows} == {True, False}
-    assert _norm(rows) == _norm(exp)
 
 
 def test_canonicalize_drops_valueless_tracking_params(spark):
@@ -134,16 +95,15 @@ def test_canonicalize_drops_valueless_tracking_params(spark):
     ] * 3
 
 
-def test_best_fit_pack_matches_duckdb_replay(spark):
+def test_best_fit_pack_matches_duckdb_replay(catalog_rows):
     """DuckDB replays the SAME deterministic best-fit-decreasing rule
     with a recursive CTE over positional bin-load lists (the
     registered oracle) — an independent formulation of the sequential
     greedy state — and the assignment must match chunk for chunk."""
     from hummingbirddatapipeline_spark.catalog.text_q import _BFD_BUDGET
 
-    rows, exp = _run_pair(spark, "text_pack_best_fit")
-    assert len(rows) == len(exp) > 0
-    assert _norm(rows) == _norm(exp)
+    rows = catalog_rows("text_pack_best_fit")
+    assert len(rows) > 0
 
     # no bin over budget (no chunk alone exceeds it on this fixture)
     loads = {}
@@ -207,7 +167,7 @@ def test_best_fit_packing_quality_vs_start_offset(spark):
     assert all(r["max_load"] > budget for r in sob_loads)
 
 
-def test_dsir_select_matches_duckdb(spark):
+def test_dsir_select_matches_duckdb(spark, catalog_rows):
     """DSIR importance resampling: target = the English documents, raw
     = the whole pool; DuckDB refits both hashed-ngram models, rebuilds
     every log-ratio, per-doc weight, and Gumbel key from the same md5
@@ -215,7 +175,7 @@ def test_dsir_select_matches_duckdb(spark):
     k documents."""
     from hummingbirddatapipeline_spark.tables import load
 
-    rows, exp = _run_pair(spark, "sample_dsir_select")
+    rows = catalog_rows("sample_dsir_select")
     assert len(rows) == 50
     # selection is genuinely weight-driven: the picked docs skew toward
     # the target language
@@ -225,10 +185,9 @@ def test_dsir_select_matches_duckdb(spark):
     en_frac_picked = sum(1 for d in picked if langs[d] == "en") / len(picked)
     en_frac_pool = sum(1 for v in langs.values() if v == "en") / len(langs)
     assert en_frac_picked > en_frac_pool
-    assert _norm(rows) == _norm(exp)
 
 
-def test_r9_guards(spark):
+def test_r9_guards(spark, harness):
     """Loud-failure contracts for the r9 operators: empty DSIR
     target, semantic mega-cell cap, and incremental-CC no-op on an
     empty edge batch."""
@@ -266,6 +225,7 @@ def test_r9_guards(spark):
     empty = labels.filter(F.lit(False)).select(
         F.col("node").alias("id_a"), F.col("cluster_id").alias("id_b")
     )
-    got = incremental_connected_components(labels, empty).collect()
-    exp = labels.collect()
-    assert _norm([tuple(r) for r in got]) == _norm([tuple(r) for r in exp])
+    got = incremental_connected_components(labels, empty)
+    assert harness.normalize(got.collect(), got.columns) == harness.normalize(
+        labels.collect(), labels.columns
+    )

@@ -169,9 +169,9 @@ def test_scan_fanout_opt_in_gate(spark, sf_dir):
     doc_path = os.path.join(sf_dir, "documents.parquet")
     expect = _fanout_partitions(spark, doc_path)
     if os.path.getsize(doc_path) >= _FANOUT_FLOOR_BYTES:
-        # r16 cost-aware width: byte-scaled (~32 KB/task), floored at 8,
-        # capped at the core count — never the raw core count for a
-        # sub-MB file (PERF_r15 anti-scaling finding).
+        # r16 cost-aware width: byte-scaled (~32 KB/task), floored at
+        # _FANOUT_MIN_WIDTH (16), capped at the core count — never the
+        # raw core count for a sub-MB file (PERF_r15 anti-scaling finding).
         from hummingbirddatapipeline_spark.tables import (
             _FANOUT_MIN_WIDTH,
             _FANOUT_TARGET_BYTES_PER_TASK,

@@ -1,7 +1,12 @@
 """Local differential harness: runs every catalog query on Spark and its
-oracle SQL on DuckDB over the same parquet tables, then compares
-row count + column names + order-insensitive values (the driver's
-contract, approximated).
+oracle SQL on DuckDB over the same parquet tables and compares them with
+``compare`` — the one differential verdict, shared with
+``tests/test_oracles.py`` (which gates every ORACLES row at sf0.001 on
+the tuned session).
+
+The sweep always builds a bare session (local[4], UTC, default configs —
+not the repo's tuned session factory), the one the ``__spark_entry__``
+rows are verified on, so a pass at sf0.01 is the correctness gate.
 
 Usage:
     python tools/check_oracle.py [sf_dir] [query_name ...]
@@ -25,6 +30,8 @@ from __future__ import annotations
 import math
 import os
 import sys
+import threading
+import time
 
 import duckdb
 
@@ -67,34 +74,74 @@ def normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
     return sorted(out, key=repr)
 
 
+def compare(
+    spark_cols: list[str],
+    spark_rows: list[tuple],
+    duck_cols: list[str],
+    duck_types: list,
+    duck_rows: list[tuple],
+) -> list[str]:
+    """The differential verdict: problems found, empty when they match.
+
+    Width gate first: the cross-engine value hash is integer-width-sensitive,
+    so a DuckDB HUGEINT/int128 output column (e.g. an unwrapped
+    SUM(CASE...)) hash-mismatches a Spark BIGINT even when every value
+    is equal — ``normalize``'s Python ints cannot see that. Then the
+    ordered column list, the row count and the exact (``float.hex``)
+    order-insensitive values."""
+    problems = []
+    wide = sorted(
+        c for c, t in zip(duck_cols, duck_types) if str(t) in ("HUGEINT", "UHUGEINT")
+    )
+    if wide:
+        problems.append(f"oracle emits int128 (value hash fails): {wide}")
+    if list(spark_cols) != list(duck_cols):
+        problems.append(f"cols spark={list(spark_cols)} duck={list(duck_cols)}")
+    if len(spark_rows) != len(duck_rows):
+        problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
+    if not problems:
+        a = normalize(spark_rows, list(spark_cols))
+        b = normalize(duck_rows, list(duck_cols))
+        if a != b:
+            diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ; first diffs: {diffs}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:]
     skip: set[str] = set()
     if names and names[0] == "--skip":
         skip, names = set(names[1:]), []
-    only = set(names)
     times = bool(os.environ.get("CHECK_ORACLE_TIMES"))
     oracle_budget = float(os.environ.get("CHECK_ORACLE_TIMEOUT", "0"))
 
     import __spark_entry__ as e
-    from hummingbirddatapipeline_spark.session import get_spark
-
-    spark = get_spark("oracle-check")
-    con = duck_connect(sf_dir)
+    from pyspark.sql import SparkSession
 
     qs, oracles = e.queries(), e.oracle_sql()
-    n_pass = n_fail = n_rows_only = 0
-    n_skip = 0
+    unknown = sorted(set(names) - set(qs))
+    if unknown:
+        print(f"unknown row name(s): {unknown}")
+        return 1
+    # bare session: local[4], UTC, every other config default
+    spark = (
+        SparkSession.builder.master("local[4]")
+        .config("spark.sql.session.timeZone", "UTC")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duck_connect(sf_dir)
+
+    n_pass = n_fail = n_skip = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if names and name not in names:
             continue
         if name in skip:
             n_skip += 1
             continue
-        import time as _time
-
-        t0 = _time.time()
+        t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
             spark_cols = sdf.columns
@@ -103,23 +150,15 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {ex}")
             n_fail += 1
             continue
-        t_spark = _time.time() - t0
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"ROWS-ONLY {name}: {len(spark_rows)} rows")
-            n_rows_only += 1
-            continue
-        t1 = _time.time()
+        t_spark = time.time() - t0
+        t1 = time.time()
         watchdog = None
         if oracle_budget:
-            import threading
-
             watchdog = threading.Timer(oracle_budget, con.interrupt)
             watchdog.start()
         try:
-            rel = con.sql(sql)
-            duck_cols = list(rel.columns)
-            duck_dtypes = dict(zip(duck_cols, rel.types))
+            rel = con.sql(oracles[name])
+            duck_cols, duck_types = list(rel.columns), rel.types
             duck_rows = rel.fetchall()
         except Exception as ex:  # noqa: BLE001
             if oracle_budget and "INTERRUPT" in str(ex).upper():
@@ -132,29 +171,9 @@ def main() -> int:
         finally:
             if watchdog is not None:
                 watchdog.cancel()
-        t_duck = _time.time() - t1
+        t_duck = time.time() - t1
         suffix = f"  [spark {t_spark:.1f}s oracle {t_duck:.1f}s]" if times else ""
-        problems = []
-        # Width check BEFORE value normalization: the driver's value hash
-        # is integer-width-sensitive, so a DuckDB HUGEINT/int128 output
-        # column (e.g. an unwrapped SUM(CASE...)) hash-mismatches a Spark
-        # BIGINT even when every value is equal. Python-int normalization
-        # below cannot see this, hence the explicit dtype gate.
-        wide = sorted(
-            c for c, t in duck_dtypes.items() if str(t) in ("HUGEINT", "UHUGEINT")
-        )
-        if wide:
-            problems.append(f"oracle emits int128 (driver hash-fails): {wide}")
-        if sorted(spark_cols) != sorted(duck_cols):
-            problems.append(f"cols spark={sorted(spark_cols)} duck={sorted(duck_cols)}")
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if not problems:
-            a = normalize(spark_rows, list(spark_cols))
-            b = normalize(duck_rows, duck_cols)
-            if a != b:
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ; first diffs: {diffs}")
+        problems = compare(spark_cols, spark_rows, duck_cols, duck_types, duck_rows)
         if problems:
             print(f"FAIL {name}: " + " | ".join(problems))
             n_fail += 1
@@ -162,7 +181,8 @@ def main() -> int:
             print(f"PASS {name} ({len(spark_rows)} rows){suffix}")
             n_pass += 1
     skipped = f", {n_skip} skipped" if n_skip else ""
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only{skipped}")
+    print(f"\n{n_pass} pass, {n_fail} fail{skipped} (bare local[4] UTC, {sf_dir})")
+    spark.stop()
     return 1 if n_fail else 0
 
 

@@ -168,7 +168,7 @@ def main() -> None:
     args = ap.parse_args()
     probe = args.queries.split(",") if args.queries else PROBE
 
-    from hummingbirddatapipeline_spark.catalog import BANKED, BENCH_ONLY, QUERIES
+    from hummingbirddatapipeline_spark.catalog import BENCH_ONLY, QUERIES
     from hummingbirddatapipeline_spark.session import get_spark, tune_for_sf
 
     spark = get_spark("hummingbird-scale-probe")
@@ -190,7 +190,7 @@ def main() -> None:
         )
     tune_for_sf(spark, args.dir)
 
-    runnable = {**QUERIES, **BENCH_ONLY, **BANKED}
+    runnable = {**QUERIES, **BENCH_ONLY}
     baseline = {}
     try:
         with open(
