@@ -58,9 +58,10 @@ def _cached(name: str, fn: QueryFn) -> QueryFn:
     return wrapped
 
 
-# Modules with their own per-(session, sf_dir) caches (e.g. the shared
-# checkpointed near-dup pair set in dedup_q) register a clear callback
-# so invalidate() reaches them too.
+# Shared fixtures that are plain DataFrames (dedup_q's checkpointed
+# near-dup pairs and their CC labels) go through ``_cached`` as well.
+# Caches with their own release step (multimodal_q's persisted phash
+# switch) register a clear callback so invalidate() reaches them too.
 _INVALIDATE_HOOKS: list[Callable[[str | None], None]] = []
 
 

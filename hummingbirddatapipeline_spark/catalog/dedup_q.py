@@ -8,16 +8,12 @@ properties are additionally covered in tests/.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import weakref
-
-from hummingbirddatapipeline_spark.catalog import (
-    bench_query,
-    query,
-    register_invalidate_hook,
-)
+from hummingbirddatapipeline_spark.catalog import _cached, bench_query, query
 from hummingbirddatapipeline_spark.operators.dedup import (
     jaccard_pairs_prefix,
     near_dup_pairs_minhash,
@@ -34,36 +30,27 @@ from hummingbirddatapipeline_spark.catalog.text_q import _DUCK_TOKS
 # representatives, leak-free split, ngram-overlap audit, gated
 # funnel, triangles) — compute it once per (session, sf_dir) and hand
 # out the checkpointed result (~6.5 s cold at sf0.1 since the bitmask
-# regime landed; was ~30 s). Cleared by catalog.invalidate() like the
-# plan cache.
-_JACCARD_PAIR_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
+# regime landed; was ~30 s). Held in the catalog's plan cache, so
+# catalog.invalidate() drops it with the plans.
+@functools.partial(_cached, "shared_jaccard_pairs")
 def shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (id_a, id_b) exact Jaccard >= 0.85 pair set over
     ``documents`` — the canonical near-dup graph the cluster/split
     queries close over. localCheckpoint materializes it eagerly on
     first use; subsequent queries reuse the blocks."""
-    per = _JACCARD_PAIR_CACHE.setdefault(spark, {})
-    df = per.get(sf_dir)
-    if df is None:
-        docs = load(spark, sf_dir, "documents", fanout=True)
-        # repartition(1): the r15 fan-out leaves the build 32-way
-        # parallel (the dense-mask probe is the win), but the
-        # CHECKPOINTED edge list must stay compact — the iterative
-        # consumers (CC, pagerank, LPA) pay per-round scheduling for
-        # every block of this frame, and 27 MB is one healthy block.
-        # repartition (a shuffle), not coalesce, so the probe stage
-        # itself keeps its parallelism.
-        df = per[sf_dir] = (
-            jaccard_pairs_prefix(
-                docs, "text", "doc_id", threshold=0.85, shingle_size=1
-            )
-            .select("id_a", "id_b")
-            .repartition(1)
-            .localCheckpoint()
-        )
-    return df
+    docs = load(spark, sf_dir, "documents", fanout=True)
+    # repartition(1): the r15 fan-out leaves the build 32-way parallel
+    # (the dense-mask probe is the win), but the CHECKPOINTED edge list
+    # must stay compact — the iterative consumers (CC, pagerank, LPA)
+    # pay per-round scheduling for every block of this frame, and 27 MB
+    # is one healthy block. repartition (a shuffle), not coalesce, so
+    # the probe stage itself keeps its parallelism.
+    return (
+        jaccard_pairs_prefix(docs, "text", "doc_id", threshold=0.85, shingle_size=1)
+        .select("id_a", "id_b")
+        .repartition(1)
+        .localCheckpoint()
+    )
 
 
 # The min-id CC labeling of that same graph is itself the shared
@@ -71,36 +58,15 @@ def shared_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental-CC seed, leak-free split, split audit, cluster-aware
 # decontamination, size histogram) — each used to re-run the ~8 s
 # pointer-jumping closure per cold query (r15 measurement). Same
-# lifecycle as the pair cache; the build rides the same bench
+# lifecycle as the pair set; the build rides the same bench
 # shared-setup accounting (bench.py measures it as its own row).
-_JACCARD_CC_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
+@functools.partial(_cached, "shared_jaccard_cc")
 def shared_jaccard_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (node, cluster_id) min-id connected-components
     labeling of :func:`shared_jaccard_pairs` — identical to
     ``connected_components(shared_jaccard_pairs(...))`` by
     construction; computed once per (session, sf_dir)."""
-    per = _JACCARD_CC_CACHE.setdefault(spark, {})
-    df = per.get(sf_dir)
-    if df is None:
-        df = per[sf_dir] = connected_components(
-            shared_jaccard_pairs(spark, sf_dir)
-        ).localCheckpoint()
-    return df
-
-
-def _clear_pair_cache(sf_dir: str | None) -> None:
-    for cache in (_JACCARD_PAIR_CACHE, _JACCARD_CC_CACHE):
-        for per in cache.values():
-            keys = (
-                list(per) if sf_dir is None else [k for k in per if k == sf_dir]
-            )
-            for k in keys:
-                del per[k]
-
-
-register_invalidate_hook(_clear_pair_cache)
+    return connected_components(shared_jaccard_pairs(spark, sf_dir)).localCheckpoint()
 
 
 @query(

@@ -17,7 +17,7 @@ from hummingbirddatapipeline_spark.functions.scalar import money_cents
 from hummingbirddatapipeline_spark.operators.windows import with_prior_fields
 from hummingbirddatapipeline_spark.scoring.compiler import apply_spec, spec_to_sql
 from hummingbirddatapipeline_spark.scoring.spec import Domain, Indicator, ScoringSpec
-from hummingbirddatapipeline_spark.tables import load
+from hummingbirddatapipeline_spark.tables import cpu_bound, load
 
 _W3_NA_TREND = (
     "CASE WHEN net_assets IS NULL OR prior_net_assets IS NULL THEN NULL "
@@ -197,15 +197,9 @@ def _source_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_acctbal") * 100 + F.col("total_revenue")).alias("total_assets"),
     )
     _ = cust
-    # Pin the entity window exchange at full width (r16, guide §2.5 —
-    # same fix as scoring_990_model): the post-aggregate entity-year
-    # frame is bytes-small, so AQE coalesced the window stage to ~10
-    # tasks while the compiled indicator stack it feeds is per-row CPU.
-    # Keyed repartition on the window's own key replaces (not adds to)
-    # the implicit exchange; results are unaffected by distribution.
-    cy = cy.repartition(
-        spark.sparkContext.defaultParallelism, "entity_id"
-    )
+    # cpu_bound on the window key (r16): AQE coalesced the window stage
+    # feeding the compiled indicator stack to ~10 tasks.
+    cy = cpu_bound(cy, "entity_id")
     return with_prior_fields(cy, "entity_id", "year", ["total_revenue", "net_assets"])
 
 
@@ -227,10 +221,60 @@ def scoring_customer_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # The REAL 990 distress model (19 indicators, 5 domains, availability
 # matrix by filing type) under the oracle gate: a filings-shaped table
-# is derived from TPC-H deterministically with ONE shared SQL string,
-# and the same compiled spec scores it on both engines.
+# is derived from TPC-H deterministically with ONE shared SQL text
+# (filings, then the prior-year window over them), and the same
+# compiled spec scores it on both engines.
 # --------------------------------------------------------------------------
-_990_SOURCE_SQL = """
+_990_FILINGS_SQL = """
+SELECT CAST(entity AS STRING) AS ein, filing_year,
+  CASE WHEN entity % 20 = 0 THEN 'ez'
+       WHEN entity % 20 = 1 THEN 'pf' ELSE 'standard' END AS filing_type,
+  CASE WHEN entity % 13 = 0 THEN 'Y' ELSE 'N' END AS ceased_operations,
+  CASE WHEN entity % 17 = 0 THEN 'YES' ELSE 'N' END AS sold_assets,
+  rev AS total_revenue,
+  rev * (0.90 + (entity % 5) * 0.05) AS total_expenses,
+  rev * 2.5 AS total_assets,
+  rev * (1.0 + (entity % 7) * 0.25) AS total_liabilities,
+  rev * (2.5 - 1.0 - (entity % 7) * 0.25) AS total_net_assets,
+  CASE WHEN entity % 5 = 0 THEN NULL
+       ELSE rev * (0.30 - (entity % 4) * 0.12) END AS unrestricted_net_assets,
+  rev * 0.10 AS cash,
+  CASE WHEN entity % 11 = 0 THEN NULL ELSE rev * 0.05 END
+    AS savings_temp_investments,
+  rev * 0.06 AS accounts_receivable,
+  rev * 0.04 AS accounts_payable,
+  CASE WHEN entity % 9 = 0 THEN rev * 0.30 ELSE rev * 0.02 END
+    AS deferred_revenue,
+  rev * 0.15 AS secured_mortgages,
+  rev * 0.05 AS unsecured_notes,
+  CASE WHEN entity % 6 = 0 THEN 0.0 ELSE rev * 0.9 END
+    AS land_buildings_equipment,
+  rev * (0.05 + (entity % 10) * 0.09) AS program_revenue,
+  rev * 0.30 AS contributions,
+  rev * 0.05 AS investment_income,
+  rev * 0.08 AS officer_compensation,
+  rev * (0.20 + (entity % 3) * 0.25) AS other_salaries,
+  rev * 0.02 AS pension_contributions,
+  rev * 0.03 AS other_employee_benefits,
+  rev * 0.03 AS payroll_tax,
+  CASE WHEN entity % 8 = 0 THEN rev * 0.20 ELSE rev * 0.01 END
+    AS fundraising_fees,
+  CASE WHEN entity % 10 = 0 THEN rev * 0.50 ELSE 0.0 END
+    AS payable_to_officers,
+  0.0 AS current_receivables_from_officers,
+  CAST(qty AS DOUBLE) AS employee_count
+FROM (
+  SELECT o.o_custkey AS entity,
+         CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT) AS filing_year,
+         CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT))
+           AS DOUBLE) / CAST(100 AS DOUBLE) AS rev,
+         SUM(l.l_quantity) AS qty
+  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+  GROUP BY 1, 2
+) base
+"""
+# prior-year fields by ein: the window the indicator trends read
+_990_PRIOR_SQL = """
 SELECT w.*, w.filing_year - w.prior_year AS years_gap FROM (
   SELECT f.*,
     LAG(total_revenue) OVER (PARTITION BY ein ORDER BY filing_year)
@@ -243,56 +287,10 @@ SELECT w.*, w.filing_year - w.prior_year AS years_gap FROM (
       AS prior_employee_count,
     LAG(filing_year) OVER (PARTITION BY ein ORDER BY filing_year)
       AS prior_year
-  FROM (
-    SELECT CAST(entity AS STRING) AS ein, filing_year,
-      CASE WHEN entity % 20 = 0 THEN 'ez'
-           WHEN entity % 20 = 1 THEN 'pf' ELSE 'standard' END AS filing_type,
-      CASE WHEN entity % 13 = 0 THEN 'Y' ELSE 'N' END AS ceased_operations,
-      CASE WHEN entity % 17 = 0 THEN 'YES' ELSE 'N' END AS sold_assets,
-      rev AS total_revenue,
-      rev * (0.90 + (entity % 5) * 0.05) AS total_expenses,
-      rev * 2.5 AS total_assets,
-      rev * (1.0 + (entity % 7) * 0.25) AS total_liabilities,
-      rev * (2.5 - 1.0 - (entity % 7) * 0.25) AS total_net_assets,
-      CASE WHEN entity % 5 = 0 THEN NULL
-           ELSE rev * (0.30 - (entity % 4) * 0.12) END AS unrestricted_net_assets,
-      rev * 0.10 AS cash,
-      CASE WHEN entity % 11 = 0 THEN NULL ELSE rev * 0.05 END
-        AS savings_temp_investments,
-      rev * 0.06 AS accounts_receivable,
-      rev * 0.04 AS accounts_payable,
-      CASE WHEN entity % 9 = 0 THEN rev * 0.30 ELSE rev * 0.02 END
-        AS deferred_revenue,
-      rev * 0.15 AS secured_mortgages,
-      rev * 0.05 AS unsecured_notes,
-      CASE WHEN entity % 6 = 0 THEN 0.0 ELSE rev * 0.9 END
-        AS land_buildings_equipment,
-      rev * (0.05 + (entity % 10) * 0.09) AS program_revenue,
-      rev * 0.30 AS contributions,
-      rev * 0.05 AS investment_income,
-      rev * 0.08 AS officer_compensation,
-      rev * (0.20 + (entity % 3) * 0.25) AS other_salaries,
-      rev * 0.02 AS pension_contributions,
-      rev * 0.03 AS other_employee_benefits,
-      rev * 0.03 AS payroll_tax,
-      CASE WHEN entity % 8 = 0 THEN rev * 0.20 ELSE rev * 0.01 END
-        AS fundraising_fees,
-      CASE WHEN entity % 10 = 0 THEN rev * 0.50 ELSE 0.0 END
-        AS payable_to_officers,
-      0.0 AS current_receivables_from_officers,
-      CAST(qty AS DOUBLE) AS employee_count
-    FROM (
-      SELECT o.o_custkey AS entity,
-             CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT) AS filing_year,
-             CAST(SUM(CAST(ROUND(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT))
-               AS DOUBLE) / CAST(100 AS DOUBLE) AS rev,
-             SUM(l.l_quantity) AS qty
-      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-      GROUP BY 1, 2
-    ) base
-  ) f
+  FROM {filings} f
 ) w
 """
+_990_SOURCE_SQL = _990_PRIOR_SQL.format(filings=f"({_990_FILINGS_SQL})")
 
 
 def _spec_990():
@@ -307,28 +305,12 @@ def scoring_990_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     is generated from the SAME spec (registered below at import)."""
     for t in ("orders", "lineitem"):
         load(spark, sf_dir, t, fanout=True).createOrReplaceTempView(t)
-    # Pin the ein window exchange at full width (r16, guide §2.5): AQE
-    # coalesces the post-aggregate shuffle to ~10 partitions by BYTES,
-    # but the stage it feeds evaluates the compiled ~19-indicator
-    # expression stack per row — cost ∝ rows, not bytes (profiled:
-    # 6.3 s of executor time across 10 tasks = the warm tail). The
-    # REPARTITION hint is Spark-side only — the ORACLE registers the
-    # unhinted string, and a distribution hint cannot change results.
-    # Isolated A/B (2 rounds): min-warm 2.91/2.54 -> 2.06/2.15.
-    src = spark.sql(_hinted_990_source_sql(spark.sparkContext.defaultParallelism))
+    # cpu_bound on the window key (r16): the window stage evaluates the
+    # compiled ~19-indicator stack per row (profiled: 6.3 s of executor
+    # time on 10 AQE-coalesced tasks at sf0.1).
+    filings = cpu_bound(spark.sql(_990_FILINGS_SQL), "ein")
+    src = spark.sql(_990_PRIOR_SQL, filings=filings)
     return apply_spec(src, _spec_990())  # unsorted: order-insensitive gate
-
-
-def _hinted_990_source_sql(n: int) -> str:
-    """``_990_SOURCE_SQL`` with the ``REPARTITION(n, ein)`` hint; raises if
-    the anchor the hint attaches to is gone, instead of silently running
-    the unhinted plan."""
-    anchor = "SELECT f.*,"
-    if anchor not in _990_SOURCE_SQL:
-        raise ValueError(f"990 source SQL lost its {anchor!r} hint anchor")
-    return _990_SOURCE_SQL.replace(
-        anchor, f"SELECT /*+ REPARTITION({n}, ein) */ f.*,", 1
-    )
 
 
 def _register_990_oracle() -> None:

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hummingbirddatapipeline_spark.functions.text import fingerprint, word_shingles
-from hummingbirddatapipeline_spark.tables import inline_rows
+from hummingbirddatapipeline_spark.tables import cpu_bound, inline_rows
 
 
 def _check_banding(num_hashes: int, bands: int) -> None:
@@ -166,18 +166,10 @@ def minhash_lsh_candidates(
         ).alias("bb"),
     ).select(id_col, "bb.band", "bb.bucket")
 
-    # Pin the bucket-aggregate width (r16, guide §2.5): AQE coalesces
-    # this reduce side to ~1 partition by BYTES, but collect_list +
-    # array_sort over every bucket is per-row CPU (profiled: a 1.4 s
-    # single-task stage at sf0.1). A keyed repartition on the
-    # aggregate's own key replaces the implicit exchange at full width;
-    # distribution cannot change the aggregated result.
+    # cpu_bound (r16): collect_list + array_sort over every bucket
+    # profiled as a 1.4 s single-task stage at sf0.1.
     buckets = (
-        banded.repartition(
-            banded.sparkSession.sparkContext.defaultParallelism,
-            "band",
-            "bucket",
-        )
+        cpu_bound(banded, "band", "bucket")
         .groupBy("band", "bucket")
         .agg(F.count("*").alias("sz"), F.collect_list(id_col).alias("ids"))
         .filter((F.col("sz") >= 2) & (F.col("sz") <= max_bucket))
@@ -236,18 +228,9 @@ def jaccard_verify(
     sh = df.select(F.col(id_col), shingles.alias("sh")).localCheckpoint(
         eager=False
     )
-    # Spread the verify (r15, guide §2.5 — the incremental path's fix
-    # applied to the batch path): AQE coalesces the skinny candidate
-    # list to ~1 partition by BYTES, but the stage consuming it
-    # attaches both shingle arrays and pays per-pair intersect CPU —
-    # cost ∝ rows, not bytes (measured: dedup_minhash_pairs ran its
-    # verify on 8 tasks behind a 1-task candidate exchange). One
-    # round-robin exchange of (id, id) pairs is noise next to that;
-    # at cluster scale the list is large enough that this is a cheap
-    # rebalance, not a fan-out.
-    candidates = candidates.repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
+    # cpu_bound (r15): dedup_minhash_pairs ran its per-pair verify on
+    # 8 tasks behind a 1-task candidate exchange.
+    candidates = cpu_bound(candidates)
     out = (
         candidates.join(
             sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
@@ -626,15 +609,9 @@ def _jaccard_pairs_dense_mask(
             .alias("__mask")
         )
     )
-    # Fan the probe side out BEFORE the broadcast product: ``masked``
-    # is a post-aggregate frame AQE coalesces to ~1 partition at bench
-    # scale, which serializes the n^2 bit-count probe onto one task
-    # (measured: the sf0.1 shared pair build spends ~7-12 s in a
-    # single-task 25M-probe stage; fanned, the same probes spread over
-    # every core). The skinny (id, mask, n) rows make the exchange
-    # negligible; at huge n the probe side is large enough that AQE
-    # keeps it parallel anyway and this is a no-op in spirit.
-    a = masked.repartition(sh.sparkSession.sparkContext.defaultParallelism).select(
+    # cpu_bound the probe side BEFORE the broadcast product: the sf0.1
+    # shared pair build spent ~7-12 s in a single-task 25M-probe stage.
+    a = cpu_bound(masked).select(
         F.col(id_col).alias("id_a"),
         F.col("__mask").alias("__ma"),
         F.col("__n").alias("__na"),
@@ -1302,16 +1279,9 @@ def incremental_minhash_dedup(
         .select(F.col("__batch_id").alias(id_col), "store_id")
         .distinct()
     )
-    # Spread the verify (r15, guide §2.5): AQE coalesces the skinny
-    # candidate list to ~1 partition by BYTES, but the stage that
-    # consumes it attaches both shingle arrays and pays the per-pair
-    # intersect CPU — cost ∝ rows, not bytes (measured: two 1-task
-    # ~2.5 s stages at sf0.1). One round-robin exchange of (id, id)
-    # pairs is noise next to that; at cluster scale the candidate list
-    # is large enough that this is a cheap rebalance, not a fan-out.
-    cands = cands.repartition(
-        batch.sparkSession.sparkContext.defaultParallelism
-    )
+    # cpu_bound (r15): the per-pair verify ran as two 1-task ~2.5 s
+    # stages at sf0.1.
+    cands = cpu_bound(cands)
 
     def _hashed(col):
         return F.array_distinct(F.transform(col, lambda s: F.xxhash64(s)))

@@ -359,25 +359,10 @@ def pagerank(
     # truncate, so each of the n_iter rounds pays one broadcast join
     # (the evolving scores) + the transpose aggregate instead of
     # re-deriving the degree attach every time (guide §1.2: remove
-    # passes before tuning anything else).
-    #
-    # r16 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): hash-partition the hoisted frame by the TRANSPOSE key
-    # v and keep it as a releasable persist() instead of a
-    # localCheckpoint — InMemoryRelation preserves outputPartitioning
-    # where a checkpoint's Scan ExistingRDD does not, so every round's
-    # groupBy(v) aggregate reuses the cached layout and the per-round
-    # |edges|-row contribution shuffle disappears from all n_iter
-    # rounds (1 exchange paid once vs n_iter times). Results are
-    # partitioning-independent (the catalog row runs exact_longs=True;
-    # the plain regime's per-contribution rounding is unchanged).
-    edeg = (
-        edges.join(deg, "u")
-        .repartition(
-            edges.sparkSession.sparkContext.defaultParallelism, "v"
-        )
-        .persist()
-    )
+    # passes before tuning anything else). A hash-by-v persist() of it
+    # (to share the per-round transpose exchange) lost an interleaved
+    # A/B on cold and rebuilt time at sf0.1, so the checkpoint stays.
+    edeg = edges.join(deg, "u").localCheckpoint()
     for _ in range(n_iter):
         contrib_col = F.round(F.col("score") / F.col("__d"), round_dp + 3)
         if exact_longs:
@@ -410,9 +395,6 @@ def pagerank(
             # simple shape that matches CC's
             .localCheckpoint()
         )
-    # every round materialized eagerly above, so the cached edge frame
-    # is no longer referenced — release the executor memory it pinned
-    edeg.unpersist()
     return scores.select("node", F.col("score").alias("pagerank"))
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hummingbirddatapipeline_spark.functions.vector import cosine, dot
+from hummingbirddatapipeline_spark.tables import cpu_bound
 
 
 def cosine_topk(
@@ -727,20 +728,10 @@ def cosine_pairs_blocked(
             F.col("blk_a") <= F.col("blk_b")
         ).drop(*keys)
     else:
-        # Spread the tile fan-out (guide §2.5, the dense-mask-probe
-        # finding applied here): ``packed`` is a post-aggregate frame
-        # AQE coalesces to ~1 partition BY BYTES while tile cost is
-        # GEMM FLOPS — the crossJoin inherits that partitioning and
-        # every one of the n_blocks*(n_blocks+1)/2 tiles runs on one
-        # task (measured: the tfidf dense regime ran its whole tile
-        # stage single-task at sf0.1). Round-robin the left side so
-        # tiles spread over the cores; each packed block moves ONCE
-        # (pre-fan-out), the small right side rides the broadcast
-        # nested-loop branch unchanged. The keyed regime above spreads
-        # by the partition key instead — its tile volume is per-cell.
-        left = left.repartition(
-            items.sparkSession.sparkContext.defaultParallelism
-        )
+        # cpu_bound the left side (tile cost is GEMM FLOPS): the tfidf
+        # dense regime ran its whole tile stage single-task at sf0.1.
+        # The keyed regime above spreads by the partition key instead.
+        left = cpu_bound(left)
         tiles = left.crossJoin(right).filter(F.col("blk_a") <= F.col("blk_b"))
 
     thr = float(threshold)

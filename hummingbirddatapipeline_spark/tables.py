@@ -59,29 +59,31 @@ def _events_ts_to_nanos(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", F.expr(expr))
 
 
-# --- scale-adaptive scan fan-out (optimization guide §2.5: "input
-# skew: one huge unsplittable file ... repartition immediately after
-# the read"). Spark cannot split a parquet scan below row-group
-# granularity, and the small test tables are written as ONE row group
-# each — so every scan stage, and with it every zero-exchange
-# scan→explode→hash→partial-agg pipeline in the engine, runs as a
-# SINGLE task regardless of core count. When the file's effective
-# split count cannot reach the core count, fan the scan out with one
-# round-robin repartition of the (tiny) base table so the CPU-heavy
-# per-row work parallelizes. At production scale the gate is never
-# taken: a 100 TB table is thousands of row groups and
-# bytes/maxPartitionBytes ≫ cores, so the plan is unchanged there.
-# Round-robin (not hash) keeps the catalog's keyed-exchange plan
-# contracts assertable: the fan-out node is RoundRobinPartitioning,
-# never an Exchange hash/rangepartitioning.
+# --- partitioning: the engine's two width rules, both defined here.
+# AQE sizes every shuffle by BYTES, and the test tables are written as
+# ONE parquet row group each; neither fits a stage whose cost is per-row
+# CPU (crypto hashes over grams, dense vector math, compiled scoring
+# stacks, per-pair set intersects). Two rules cover it:
 #
-# OPT-IN, not blanket: the full-suite A/B (OPTIMIZATION_r15.md) showed
-# the exchange costs ~0.5-1 s per consuming query on this box's
-# shuffle path, which swamps the win everywhere except pipelines whose
-# scan stage does real per-row CPU (crypto hashes over grams, dense
-# vector math, compiled scoring stacks). Callers whose scan stage is
-# measured CPU-bound pass ``fanout=True``; everything else keeps the
-# exchange-free scan.
+# 1. Scan fan-out by bytes, ``load(fanout=True|"full")`` (optimization
+#    guide §2.5: "input skew: one huge unsplittable file ... repartition
+#    immediately after the read"). Spark cannot split a parquet scan
+#    below row-group granularity, so a one-row-group scan — and every
+#    zero-exchange scan→explode→hash→partial-agg pipeline behind it —
+#    runs as a SINGLE task regardless of core count. When the file's
+#    effective split count cannot reach the core count, one round-robin
+#    repartition of the (tiny) base table fans it out. At production
+#    scale the gate is never taken: a 100 TB table is thousands of row
+#    groups and bytes/maxPartitionBytes ≫ cores. Round-robin (not hash)
+#    keeps the catalog's keyed-exchange plan contracts assertable.
+#    OPT-IN: the full-suite A/B (OPTIMIZATION_r15.md) measured the
+#    exchange at ~0.5-1 s per consuming query, which swamps the win
+#    everywhere except scans measured CPU-bound.
+#
+# 2. ``cpu_bound(df, *keys)`` for post-shuffle stages: a core-width,
+#    explicit-count repartition AQE cannot coalesce (rule in its
+#    docstring). Every core-width pin in the engine goes through it, and
+#    tests/test_plan_contracts.py asserts each site's exchange.
 
 # Skip fan-out below this size: broadcast dims (region, nation,
 # supplier) stay single-task — 32 tasks for 25 rows is pure overhead.
@@ -209,9 +211,6 @@ def _fanout_partitions(
     the parquet row-group count (the hard splittability bound). Width
     is byte-scaled (see module comment); ``full`` pins it at the core
     count for measured CPU-extreme sites."""
-    override = os.environ.get("SPARK_GRAFT_FANOUT")
-    if override is not None and override.isdigit():
-        return int(override)  # 0 disables; N forces N (A/B harness)
     try:
         size = os.path.getsize(path)
     except OSError:
@@ -278,6 +277,25 @@ def load(
         if n:
             df = df.repartition(n)
     return df
+
+
+def cpu_bound(df: DataFrame, *keys: str) -> DataFrame:
+    """Pin a post-shuffle stage whose cost is per row at core width.
+
+    - AQE coalesces shuffle partitions by BYTES, but these stages cost
+      per ROW (or per pair), so a bytes-small frame lands on one or a
+      few tasks.
+    - An explicit-count repartition is never coalesced, so the stage
+      keeps ``defaultParallelism`` tasks.
+    - With ``keys`` the hash repartition satisfies the consumer's own
+      distribution (aggregate, window, join) and replaces its exchange
+      instead of adding one; without keys it is one round-robin
+      exchange of the frame.
+
+    Distribution never changes results. At cluster scale the frame is
+    large enough that this is a cheap rebalance, not a fan-out.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

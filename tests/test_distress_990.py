@@ -225,15 +225,3 @@ class TestFilingPrecedence:
         got = by_key(resolve_filing_precedence(df), "ein", "filing_year")
         assert got[("9", 2024)]["filing_type"] == "ez"
 
-
-def test_990_repartition_hint_applied(monkeypatch):
-    """The ein REPARTITION hint is spliced into the source SQL; a moved
-    anchor must fail loudly rather than ship the unhinted plan."""
-    from hummingbirddatapipeline_spark.catalog import scoring_q
-
-    hinted = scoring_q._hinted_990_source_sql(4)
-    assert hinted != scoring_q._990_SOURCE_SQL
-    assert "/*+ REPARTITION(4, ein) */" in hinted
-    monkeypatch.setattr(scoring_q, "_990_SOURCE_SQL", "SELECT * FROM orders")
-    with pytest.raises(ValueError, match="hint anchor"):
-        scoring_q._hinted_990_source_sql(4)

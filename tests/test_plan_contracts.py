@@ -6,6 +6,7 @@ join fails here, not in a cluster bill."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -1003,3 +1004,129 @@ def test_salted_join_exchanges_on_salted_key(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "__salt" in plan
+
+
+# --- tables.cpu_bound pins: one contract per call site. Each site's
+# explicit-count exchange must sit in the built plan at width
+# defaultParallelism, on its keys (round-robin when unkeyed); a pin
+# that vanishes leaves the stage to AQE's byte-based coalescing.
+
+
+def _pins(plan: str) -> list[str]:
+    """The plan's explicit-count exchanges, expression ids stripped:
+    ``hashpartitioning(band, bucket, 4)`` / ``RoundRobinPartitioning(4)``."""
+    import re
+
+    return [
+        re.sub(r"#\d+L?", "", m)
+        for m in re.findall(r"Exchange (.*?), REPARTITION_BY_NUM", plan)
+    ]
+
+
+def _docs(spark, sf_dir):
+    from hummingbirddatapipeline_spark.tables import load
+
+    return load(spark, sf_dir, "documents")
+
+
+def _pin_lsh_buckets(spark, sf_dir):
+    from hummingbirddatapipeline_spark.operators.dedup import near_dup_pairs_minhash
+
+    return near_dup_pairs_minhash(
+        _docs(spark, sf_dir), "text", "doc_id", threshold=0.85,
+        num_hashes=32, bands=8, shingle_size=1,
+    )
+
+
+def _pin_minhash_verify(spark, sf_dir):
+    from hummingbirddatapipeline_spark.operators.dedup import jaccard_verify
+
+    docs = _docs(spark, sf_dir)
+    cands = docs.select(
+        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
+    )
+    return jaccard_verify(docs, cands, "text", "doc_id", threshold=0.85)
+
+
+def _pin_dense_mask(spark, sf_dir):
+    # the operator, not shared_jaccard_pairs: the fixture checkpoints it
+    from hummingbirddatapipeline_spark.operators.dedup import jaccard_pairs_prefix
+
+    return jaccard_pairs_prefix(
+        _docs(spark, sf_dir), "text", "doc_id", threshold=0.85, shingle_size=1
+    )
+
+
+def _pin_incremental_verify(spark, sf_dir):
+    from hummingbirddatapipeline_spark.operators.dedup import (
+        build_jaccard_store,
+        incremental_minhash_dedup,
+        minhash_band_index,
+    )
+
+    docs = _docs(spark, sf_dir)
+    store_docs = docs.filter(F.col("doc_id") % 2 == 0)
+    return incremental_minhash_dedup(
+        docs.filter(F.col("doc_id") % 2 == 1),
+        minhash_band_index(store_docs, "text", "doc_id", shingle_size=1),
+        build_jaccard_store(store_docs, "text", "doc_id", shingle_size=1),
+        "text", "doc_id", threshold=0.85, shingle_size=1,
+    )
+
+
+def _pin_blocked_tiles(spark, sf_dir):
+    from hummingbirddatapipeline_spark.operators.similarity import cosine_pairs_blocked
+    from hummingbirddatapipeline_spark.tables import load
+
+    return cosine_pairs_blocked(load(spark, sf_dir, "embeddings"), 0.99, n_blocks=4)
+
+
+def _pin_customer_health_window(spark, sf_dir):
+    from hummingbirddatapipeline_spark.catalog import QUERIES
+
+    return QUERIES["scoring_customer_health"](spark, sf_dir)
+
+
+def _pin_990_window(spark, sf_dir):
+    from hummingbirddatapipeline_spark.catalog import QUERIES
+
+    return QUERIES["scoring_990_model"](spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "build, keys",
+    [
+        pytest.param(_pin_lsh_buckets, "band, bucket", id="lsh_buckets"),
+        pytest.param(_pin_minhash_verify, None, id="minhash_verify"),
+        pytest.param(_pin_dense_mask, None, id="dense_mask"),
+        pytest.param(_pin_incremental_verify, None, id="incremental_verify"),
+        pytest.param(_pin_blocked_tiles, None, id="blocked_tiles"),
+        pytest.param(_pin_customer_health_window, "entity_id", id="customer_health_window"),
+        pytest.param(_pin_990_window, "ein", id="990_window"),
+    ],
+)
+def test_cpu_bound_pin(spark, sf_dir, build, keys):
+    n = spark.sparkContext.defaultParallelism
+    want = (
+        f"hashpartitioning({keys}, {n})" if keys else f"RoundRobinPartitioning({n})"
+    )
+    assert want in _pins(_physical(build(spark, sf_dir)))
+
+
+def test_990_single_ein_exchange(spark, sf_dir):
+    """The 990 source plan shuffles by ein exactly once: the cpu_bound
+    pin on the window's INPUT is the window's exchange. With shuffle
+    partitions off the core count, a pin on the window's output (where
+    a SQL hint in the window's SELECT lands) would show as a second
+    ``hashpartitioning(ein``."""
+    from hummingbirddatapipeline_spark.catalog import scoring_q
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(3 * spark.sparkContext.defaultParallelism))
+    try:
+        # __wrapped__: a fresh plan, not the session's cached one
+        plan = _physical(scoring_q.scoring_990_model.__wrapped__(spark, sf_dir))
+    finally:
+        spark.conf.set(key, before)
+    assert plan.count("Exchange hashpartitioning(ein") == 1, plan

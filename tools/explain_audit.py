@@ -1,16 +1,21 @@
-"""Plan-audit helper: prints the load-bearing lines of each headline
-query's formatted physical plan (scan pushdown, join strategies,
-partial aggregation, window/top-k shape, codegen spans).
+"""Plan-audit helper: executes each named catalog or bench-only query
+once on the bench-tuned session and prints the load-bearing lines of
+its FINAL (post-AQE) physical plan — scan pushdown, exchanges with
+their partitioning and shuffle origin, join strategies, partial
+aggregation, window/top-k shape, codegen spans.
 
 Usage:
     python tools/explain_audit.py [query ...]     # default: bench set
 
-Keeps PLANS.md honest — re-run after operator changes and diff.
+Expression ids and plan ids are stripped, so two runs (or two
+checkouts) diff line for line. Keeps PLANS.md honest — re-run after
+operator changes and diff.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -21,6 +26,7 @@ KEY_MARKERS = (
     "PushedFilters",
     "ReadSchema",
     "Exchange",
+    "AQEShuffleRead",
     "BroadcastHashJoin",
     "SortMergeJoin",
     "ShuffledHashJoin",
@@ -32,9 +38,19 @@ KEY_MARKERS = (
 )
 
 
+def executed_plan(df) -> str:
+    """The final physical plan of ``df`` after one execution, ids
+    stripped. Running the DataFrame's own query execution makes its
+    adaptive plan final; the plan is the one a noop write runs."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+    return re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", plan)
+
+
 def main() -> None:
-    from hummingbirddatapipeline_spark.catalog import QUERIES
-    from hummingbirddatapipeline_spark.session import get_spark
+    from hummingbirddatapipeline_spark.catalog import BENCH_ONLY, QUERIES
+    from hummingbirddatapipeline_spark.session import get_spark, tune_for_sf
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = sys.argv[1:]
@@ -44,14 +60,11 @@ def main() -> None:
         names = bench.HEADLINE
     spark = get_spark("explain-audit")
     spark.sparkContext.setLogLevel("ERROR")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
+    tune_for_sf(spark, sf_dir)
+    runnable = {**QUERIES, **BENCH_ONLY}
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode)
         print("=" * 24, name)
-        for line in plan.splitlines():
+        for line in executed_plan(runnable[name](spark, sf_dir)).splitlines():
             if any(k in line for k in KEY_MARKERS):
                 print(line[:160])
 

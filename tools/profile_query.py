@@ -1,12 +1,17 @@
 """Per-query profiler (optimization guide §1): for each named catalog /
-bench-only query, run 1 cold + N warm passes through the noop sink and
-print per-pass seconds plus, for the LAST warm pass, the per-stage
+bench-only query, time the plan build, then run 1 cold + N warm passes
+through the noop sink and print per-pass seconds plus, for the LAST warm pass, the per-stage
 breakdown (executor run time, shuffle read/write bytes, task count)
 pulled from the local UI REST API — the local[...] equivalent of
 reading the Stages tab.
 
 Usage:
-    python tools/profile_query.py <query ...> [--warm 3] [--explain DIR]
+    python tools/profile_query.py <query ...> [--warm 3] [--rebuilt 0]
+                                  [--explain DIR]
+
+``build`` is the query function's own time (its eager jobs included);
+each of the ``--rebuilt`` passes drops the cached plans and shared
+fixtures with ``catalog.invalidate`` and times build + execution.
 
 With --explain DIR the formatted physical plan of each query is also
 written to DIR/<query>.txt (the judge-facing plan artifact).
@@ -37,11 +42,16 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--warm", type=int, default=3)
+    ap.add_argument("--rebuilt", type=int, default=0)
     ap.add_argument("--explain", default=None)
     ap.add_argument("--stages", action="store_true", default=True)
     args = ap.parse_args()
 
-    from hummingbirddatapipeline_spark.catalog import BENCH_ONLY, QUERIES
+    from hummingbirddatapipeline_spark.catalog import (
+        BENCH_ONLY,
+        QUERIES,
+        invalidate,
+    )
     from hummingbirddatapipeline_spark.session import get_spark, tune_for_sf
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,14 +66,16 @@ def main() -> None:
 
     for name in args.queries:
         fn = runnable[name]
+        t0 = time.perf_counter()
         df = fn(spark, sf_dir)
+        build = time.perf_counter() - t0
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
             plan = df._jdf.queryExecution().explainString(mode)
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(plan)
 
-        def one_pass(tag: str) -> tuple[float, list[int]]:
+        def one_pass(tag: str, df=df) -> tuple[float, list[int]]:
             sc = spark.sparkContext
             before = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
             sc.setJobDescription(f"{name}:{tag}")
@@ -81,10 +93,17 @@ def main() -> None:
             dt, jids = one_pass(f"warm{i}")
             warms.append(dt)
             jobs = jids
+        rebuilt = []
+        for i in range(args.rebuilt):
+            invalidate(sf_dir)
+            t0 = time.perf_counter()
+            one_pass(f"rebuilt{i}", fn(spark, sf_dir))
+            rebuilt.append(time.perf_counter() - t0)
         print(
-            f"== {name}  cold={cold:.3f}s  warm="
+            f"== {name}  build={build:.3f}s  cold={cold:.3f}s  warm="
             + " ".join(f"{w:.3f}" for w in warms)
             + f"  min={min(warms):.3f}"
+            + ("  rebuilt=" + " ".join(f"{r:.3f}" for r in rebuilt) if rebuilt else "")
         )
         if args.stages:
             try:
