@@ -460,10 +460,10 @@ def dedup_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominate, so length-skewed duplicates Jaccard dilutes still score
     high. Full oracle: DuckDB rebuilds tf, df, weights, norms, and the
     posting-list dot products independently and must emit the same
-    rounded cosines. Scale path: the ``max_doc_freq`` posting-list cap
-    (operators/dedup.tfidf_cosine_pairs) bounds candidate volume like
-    LSH's max_bucket; uncapped here so the oracle covers the exact
-    semantics end-to-end."""
+    rounded cosines. The operator (operators/dedup.tfidf_cosine_pairs)
+    has no posting-list cap, so the oracle covers the exact semantics
+    end-to-end; its tiny-vocabulary regime switches to the dense
+    tiled-GEMM all-pairs form with identical results."""
     from hummingbirddatapipeline_spark.operators.dedup import (
         tfidf_cosine_pairs,
     )

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hummingbirddatapipeline_spark.operators.setsim import band_explode
+
 # canonical media schema fragment: every media table carries these
 MEDIA_META_SCHEMA = StructType(
     [
@@ -405,33 +407,19 @@ def phash_near_dup_pairs(
         )
 
     if combinatorial:
-        idx = [(i, j) for i in range(bands) for j in range(i + 1, bands)]
-        bandarr = F.array(
-            *[
-                F.struct(
-                    F.lit(k).alias("band"),
-                    F.shiftleft(band_val(i), width)
-                    .bitwiseOR(band_val(j))
-                    .alias("val"),
-                )
-                for k, (i, j) in enumerate(idx)
-            ]
-        )
+        keys = [
+            F.shiftleft(band_val(i), width).bitwiseOR(band_val(j))
+            for i in range(bands)
+            for j in range(i + 1, bands)
+        ]
     else:
-        bandarr = F.array(
-            *[
-                F.struct(F.lit(i).alias("band"), band_val(i).alias("val"))
-                for i in range(bands)
-            ]
-        )
-    banded = distinct.select(
-        "phash", F.explode(bandarr).alias("bb")
-    ).select("phash", "bb.band", "bb.val")
+        keys = [band_val(i) for i in range(bands)]
+    banded = band_explode(distinct, "phash", keys)
     cands = (
-        banded.select("band", "val", F.col("phash").alias("hash_a"))
+        banded.select("band", "bucket", F.col("phash").alias("hash_a"))
         .join(
-            banded.select("band", "val", F.col("phash").alias("hash_b")),
-            ["band", "val"],
+            banded.select("band", "bucket", F.col("phash").alias("hash_b")),
+            ["band", "bucket"],
         )
         .filter(F.col("hash_a") < F.col("hash_b"))
         .select("hash_a", "hash_b")

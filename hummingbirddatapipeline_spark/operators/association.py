@@ -3,13 +3,14 @@ Srikant 1994's support/confidence frame plus lift) — "parts bought
 together" over order lines, "docs sharing rare tokens" over corpora.
 
 Scale-first shape: baskets collapse to one sorted distinct-item array
-(one shuffle), pairs generate per basket from the array (the same
-bounded pair-gen idiom as the LSH bucket stage — never a basket
-self-join), and two hash aggregates produce item and pair counts. The
-``max_basket`` cap bounds per-basket pair fanout exactly like LSH's
-bucket cap: a degenerate mega-basket (one customer buying the whole
-catalog) contributes O(catalog^2) pairs that say nothing — capped
-baskets are dropped and counted, not silently exploded.
+(one shuffle), pairs generate per basket from the array
+(``operators.setsim.sorted_pairs``, the LSH bucket stage's pair
+generator — never a basket self-join), and two hash aggregates
+produce item and pair counts. The ``max_basket`` cap bounds
+per-basket pair fanout exactly like LSH's bucket cap: a degenerate
+mega-basket (one customer buying the whole catalog) contributes
+O(catalog^2) pairs that say nothing — capped baskets are dropped and
+counted, not silently exploded.
 
 All ratios derive from exact BIGINT counts with explicit double
 division, so an independent engine reproduces them bit-for-bit.
@@ -19,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hummingbirddatapipeline_spark.operators.setsim import sorted_pairs
 
 
 def basket_cooccurrence(
@@ -54,23 +57,7 @@ def basket_cooccurrence(
         .groupBy("item")
         .agg(F.count("*").alias("n_item"))
     )
-    pairs = kept.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "__items",
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("__items"),
-                            i + 2,
-                            F.greatest(F.size("__items") - i - 1, F.lit(0)),
-                        ),
-                        lambda y: F.struct(x.alias("a"), y.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
+    pairs = kept.select(F.explode(sorted_pairs("__items", "a", "b")).alias("p"))
     pair_counts = (
         pairs.select("p.a", "p.b")
         .groupBy("a", "b")

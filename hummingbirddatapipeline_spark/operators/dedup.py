@@ -14,6 +14,27 @@ Four families, each designed scale-first:
 
 The reference's nearest analogue is composite-key anti-join dedup
 (append_priorities.py:222-243); these generalize it to content dedup.
+
+Shared set-similarity kernels — each rule has one home, and every
+operator below calls it:
+
+- band keys: :func:`_minhash_banded` (MinHash slice hashes through
+  ``operators.setsim.band_explode``, the explode every LSH family
+  shares), so :func:`lsh_dropped_buckets` audits exactly the buckets
+  :func:`minhash_lsh_candidates` drops;
+- bucket pairs: :func:`_bucket_pair_rows` over
+  ``operators.setsim.sorted_pairs`` (also the basket pair generator);
+- term index: :func:`_term_index`, the collected sorted vocabulary as
+  a broadcast ``(term, __idx)`` frame for the bitmask and dense-TF-IDF
+  regimes;
+- prefix bound: :func:`_prefix_tokens`, the AllPairs
+  ``n - floor(t*n) + 1`` rarest-token prefix;
+- Jaccard ratio: :func:`_jaccard_at_least` (``inter / (n_a + n_b -
+  inter) >= t``) and :func:`_jaccard_pairs` (plus the 6dp
+  ``(id_a, id_b, jaccard)`` tail);
+- hashed verify: :func:`_hashed_set` and the :func:`_size_ratio_ok`
+  prefilter, shared by :func:`jaccard_verify` (the batch MinHash
+  verify) and :func:`incremental_minhash_dedup`.
 """
 
 from __future__ import annotations
@@ -23,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hummingbirddatapipeline_spark.functions.text import fingerprint, word_shingles
+from hummingbirddatapipeline_spark.operators.setsim import band_explode, sorted_pairs
 from hummingbirddatapipeline_spark.tables import cpu_bound, inline_rows
 
 
@@ -46,6 +68,128 @@ def _check_banding(num_hashes: int, bands: int) -> None:
             f"by bands={bands}; the trailing {num_hashes % bands} hashes "
             "would be silently ignored — pick bands dividing num_hashes"
         )
+
+
+def _minhash_banded(
+    signatures: DataFrame,
+    id_col: str,
+    bands: int,
+    num_hashes: int,
+    id_alias: str | None = None,
+) -> DataFrame:
+    """(id, band, bucket) over a MinHash ``signature`` column: band b's
+    bucket is the xxhash64 of its ``num_hashes // bands`` signature
+    slots. The one band-key rule of candidate generation, the
+    dropped-bucket audit, the boilerplate clusters and the persisted
+    band index."""
+    _check_banding(num_hashes, bands)
+    r = num_hashes // bands
+    keys = [
+        F.xxhash64(*[F.element_at("signature", b * r + j + 1) for j in range(r)])
+        for b in range(bands)
+    ]
+    return band_explode(signatures, id_col, keys, id_alias)
+
+
+def _bucket_pair_rows(buckets: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b) pairs from each bucket's sorted ``ids``
+    array."""
+    return (
+        buckets.select(F.explode(sorted_pairs("ids")).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+
+
+def _term_index(terms: DataFrame, col: str) -> tuple[list[str], DataFrame]:
+    """Collect the distinct one-column vocabulary frame ``terms`` and
+    return it sorted, with the broadcast ``(col, __idx)`` frame that
+    maps each term to its position (the bit or vector slot of the
+    bitmask and dense-vector regimes). A bounded collect: callers
+    reach it only under their vocabulary limit."""
+    vocab = sorted(r[col] for r in terms.collect())
+    idx = F.broadcast(
+        inline_rows(
+            terms.sparkSession,
+            [(t, i) for i, t in enumerate(vocab)],
+            f"{col} string, __idx int",
+        )
+    )
+    return vocab, idx
+
+
+def _prefix_tokens(
+    tok: DataFrame,
+    id_col: str,
+    n_col: str,
+    threshold: float,
+    sizes: DataFrame | None = None,
+) -> DataFrame:
+    """AllPairs prefix (Bayardo et al., WWW'07): keep each set's first
+    ``n - floor(t*n) + 1`` tokens under the global ascending
+    ``(df_w, w)`` order. Two sets with ``J >= t`` share a token inside
+    both prefixes; ``floor`` under-estimates ``t*n``, so float rounding
+    only lengthens a prefix. ``tok`` carries (id, w, df_w); the set
+    size ``n_col`` rides ``tok`` or, when given, joins from ``sizes``
+    on the id after ranking."""
+    ranked = tok.withColumn(
+        "__pos",
+        F.row_number().over(Window.partitionBy(id_col).orderBy("df_w", "w")),
+    )
+    if sizes is not None:
+        ranked = ranked.join(sizes, id_col)
+    n = F.col(n_col)
+    return ranked.filter(
+        F.col("__pos") <= n - F.floor(F.lit(float(threshold)) * n) + 1
+    )
+
+
+def _jaccard_at_least(
+    frame: DataFrame,
+    n_a: Column,
+    n_b: Column,
+    threshold: float,
+    inter: Column | None = None,
+) -> DataFrame:
+    """``jaccard = inter / (n_a + n_b - inter)`` kept at ``>= threshold``,
+    from exact integer set sizes and intersection count. ``inter`` is
+    computed into the ``inter`` column when given, else read from it."""
+    if inter is not None:
+        frame = frame.withColumn("inter", inter)
+    return frame.withColumn(
+        "jaccard", F.col("inter") / (n_a + n_b - F.col("inter"))
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _jaccard_pairs(
+    frame: DataFrame,
+    n_a: Column,
+    n_b: Column,
+    threshold: float,
+    inter: Column | None = None,
+) -> DataFrame:
+    """:func:`_jaccard_at_least` with the exact pair engines' output
+    tail: ``(id_a, id_b, jaccard)``, jaccard rounded 6dp."""
+    return _jaccard_at_least(frame, n_a, n_b, threshold, inter).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+    )
+
+
+def _size_ratio_ok(n_a: Column, n_b: Column, threshold: float) -> Column:
+    """Size-ratio prefilter (guide §3.2, r16): J = |A∩B|/|A∪B| ≥ t
+    forces min(|A|,|B|)/max(|A|,|B|) ≥ t (|A∩B| ≤ min, |A∪B| ≥ max),
+    so pairs failing the ratio cannot pass the threshold and skip the
+    per-pair intersect entirely — the hashed verify stages' dominant
+    CPU. The 1e-9 slack absorbs double rounding so the bound is
+    strictly conservative (no false drops)."""
+    return F.least(n_a, n_b) >= (threshold - 1e-9) * F.greatest(n_a, n_b)
+
+
+def _hashed_set(sh: Column) -> Column:
+    """A shingle array as a distinct xxhash64 bigint array: set
+    semantics up to negligible 64-bit collisions, and intersects run
+    on 8-byte longs instead of strings (the LSH verify trade)."""
+    return F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
 
 
 def exact_dedup(
@@ -144,27 +288,7 @@ def minhash_lsh_candidates(
     no executor materializes an unbounded group. Candidates are
     distinct pairs.
     """
-    _check_banding(num_hashes, bands)
-    rows_per_band = max(1, num_hashes // bands)
-    banded = signatures.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("signature", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = _minhash_banded(signatures, id_col, bands, num_hashes)
 
     # cpu_bound (r16): collect_list + array_sort over every bucket
     # profiled as a 1.4 s single-task stage at sf0.1.
@@ -178,23 +302,7 @@ def minhash_lsh_candidates(
         # trimming duplicate pair structs at the source
         .distinct()
     )
-    # all ordered pairs from each bucket's sorted id array
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "ids",
-                    lambda x, i: F.transform(
-                        F.slice(
-                            F.col("ids"), i + 2, F.greatest(F.size("ids") - i - 1, F.lit(0))
-                        ),
-                        lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    )
-    return pairs.select("p.id_a", "p.id_b").distinct()
+    return _bucket_pair_rows(buckets)
 
 
 def jaccard_verify(
@@ -204,22 +312,15 @@ def jaccard_verify(
     id_col: str,
     threshold: float = 0.8,
     shingle_size: int = 3,
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs (the verify stage).
 
     Joins shingle sets onto the pair list and computes
-    |A ∩ B| / |A ∪ B| with native array ops. With ``hash_shingles``
-    the sets are xxhash64'd to bigint arrays first: set semantics are
-    preserved up to negligible 64-bit collisions, and the intersect
-    runs on 8-byte longs instead of strings — the right trade in a
-    verify stage fed by LSH candidates.
+    |A ∩ B| / |A ∪ B| with native array ops on hashed sets
+    (:func:`_hashed_set`) — the right trade in a verify stage fed by
+    LSH candidates.
     """
-    shingles = word_shingles(F.col(text_col), shingle_size)
-    if hash_shingles:
-        shingles = F.array_distinct(
-            F.transform(shingles, lambda s: F.xxhash64(s))
-        )
+    shingles = _hashed_set(word_shingles(F.col(text_col), shingle_size))
     # Lineage cut (r15, guide §1.2): the shingle frame feeds BOTH pair
     # sides of the candidate join, and Catalyst inlines the reference —
     # without truncation the corpus is tokenized twice per verify.
@@ -236,17 +337,8 @@ def jaccard_verify(
             sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
         )
         .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        # Size-ratio prefilter (guide §3.2, r16): J = |A∩B|/|A∪B| ≥ t
-        # forces min(|A|,|B|)/max(|A|,|B|) ≥ t (|A∩B| ≤ min, |A∪B| ≥
-        # max), so pairs failing the ratio cannot pass the threshold
-        # and skip the per-pair intersect entirely — the verify stage's
-        # dominant CPU. The 1e-9 slack absorbs double rounding so the
-        # bound is strictly conservative (no false drops); measured at
-        # sf0.1: 1.29M LSH candidates → 643k intersects.
-        .filter(
-            F.least(F.size("sh_a"), F.size("sh_b"))
-            >= (threshold - 1e-9) * F.greatest(F.size("sh_a"), F.size("sh_b"))
-        )
+        # measured at sf0.1: 1.29M LSH candidates → 643k intersects
+        .filter(_size_ratio_ok(F.size("sh_a"), F.size("sh_b"), threshold))
         .withColumn(
             "inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
         )
@@ -279,9 +371,7 @@ def near_dup_pairs_minhash(
         F.col("n_shingles") > 0
     )
     cands = minhash_lsh_candidates(sigs, id_col, bands, num_hashes)
-    return jaccard_verify(
-        df, cands, text_col, id_col, threshold, shingle_size, hash_shingles=True
-    )
+    return jaccard_verify(df, cands, text_col, id_col, threshold, shingle_size)
 
 
 def lsh_dropped_buckets(
@@ -301,37 +391,17 @@ def lsh_dropped_buckets(
     it to the DQ tables, or feed the representatives to the
     mega-cluster treatment.
 
-    Same one-shuffle banding plan as candidate generation (explode
-    band keys -> hash aggregate); run it against the SAME cached
-    signature DataFrame so the scan is shared. Kept as a separate
-    audit pass rather than a flag on the candidate path: at 100 TB the
-    pair pipeline should not pay a mandatory extra aggregate-and-
-    collect when nobody reads the audit, and the audit should not
-    force the pair output to materialize early.
+    Same band keys as candidate generation (both call
+    :func:`_minhash_banded`), then one hash aggregate; run it against
+    the SAME cached signature DataFrame so the scan is shared. Kept as
+    a separate audit pass rather than a flag on the candidate path: at
+    100 TB the pair pipeline should not pay a mandatory extra
+    aggregate-and-collect when nobody reads the audit, and the audit
+    should not force the pair output to materialize early.
     """
-    _check_banding(num_hashes, bands)
-    rows_per_band = max(1, num_hashes // bands)
-    banded = signatures.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("signature", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
     return (
-        banded.groupBy("band", "bucket")
+        _minhash_banded(signatures, id_col, bands, num_hashes)
+        .groupBy("band", "bucket")
         .agg(F.count("*").alias("sz"), F.min(id_col).alias("rep"))
         .filter(F.col("sz") > max_bucket)
     )
@@ -343,25 +413,20 @@ def jaccard_pairs_all(
     id_col: str,
     threshold: float = 0.8,
     shingle_size: int = 1,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard via the inverted-index join (no LSH):
     explode distinct shingles -> self-join on shingle -> pair
     intersection counts -> |A∩B| / (|A|+|B|-|A∩B|) >= threshold.
 
-    This is the exact, SQL-expressible form; at 100 TB add
-    ``max_doc_freq`` to drop boilerplate shingles that appear in more
-    than N documents (the classic skew guard — a shingle present in
-    every doc would otherwise create a quadratic bucket).
+    This is the exact, SQL-expressible form; a shingle present in
+    every doc makes a quadratic posting list, which is why
+    :func:`jaccard_pairs_prefix` is the scale form.
     """
     sh = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_size).alias("__sh")
     )
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("n"))
     tok = sh.select(F.col(id_col), F.explode("__sh").alias("w"))
-    if max_doc_freq is not None:
-        freq = tok.groupBy("w").count().filter(F.col("count") <= max_doc_freq)
-        tok = tok.join(freq.select("w"), "w")
     a = tok.select(F.col(id_col).alias("id_a"), "w")
     b = tok.select(F.col(id_col).alias("id_b"), "w")
     pairs = (
@@ -372,15 +437,11 @@ def jaccard_pairs_all(
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_pairs(
+        pairs.join(sa, "id_a").join(sb, "id_b"),
+        F.col("n_a"),
+        F.col("n_b"),
+        threshold,
     )
 
 
@@ -448,17 +509,9 @@ def jaccard_pairs_prefix(
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("n"))
     tok = sh.select(F.col(id_col), F.explode("__sh").alias("w"))
     freq = tok.groupBy("w").agg(F.count("*").alias("df_w"))
-    wdoc = Window.partitionBy(id_col).orderBy("df_w", "w")
-    pref = (
-        tok.join(freq, "w")
-        .withColumn("__pos", F.row_number().over(wdoc))
-        .join(sizes, id_col)
-        .filter(
-            F.col("__pos")
-            <= F.col("n") - F.floor(F.lit(float(threshold)) * F.col("n")) + 1
-        )
-        .select(F.col(id_col), "w", "n")
-    )
+    pref = _prefix_tokens(
+        tok.join(freq, "w"), id_col, "n", threshold, sizes=sizes
+    ).select(F.col(id_col), "w", "n")
     # PPJoin length filter: J >= t forces min(n)/max(n) >= t, so only
     # size-compatible docs can pair; floor() under-estimates t*n, so
     # float rounding can only admit extra candidates, never drop a
@@ -489,17 +542,12 @@ def jaccard_pairs_prefix(
     # bit for bit)
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_pairs(
+        cands.join(sa, "id_a").join(sb, "id_b"),
+        F.size("sh_a"),
+        F.size("sh_b"),
+        threshold,
+        inter=F.size(F.array_intersect("sh_a", "sh_b")),
     )
 
 
@@ -513,19 +561,10 @@ def _jaccard_verify_masks(
     string-array form (set counts are set counts). The vocab collect
     is the dense regime's documented bounded-model-state class, one
     order larger."""
-    spark = sh.sparkSession
-    terms = sorted(
-        r["w"]
-        for r in sh.select(F.explode("__sh").alias("w")).distinct().collect()
+    terms, idx_df = _term_index(
+        sh.select(F.explode("__sh").alias("w")).distinct(), "w"
     )
     n_words = (len(terms) + 63) // 64
-    idx_df = F.broadcast(
-        inline_rows(
-            spark,
-            [(t, i) for i, t in enumerate(terms)],
-            "w string, __idx int",
-        )
-    )
     bit = F.expr("shiftleft(CAST(1 AS BIGINT), __idx % 64)")
     masked = (
         sh.select(
@@ -564,16 +603,12 @@ def _jaccard_verify_masks(
         ),
         F.lit(0),
     )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("__na") + F.col("__nb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_pairs(
+        cands.join(a, "id_a").join(b, "id_b"),
+        F.col("__na"),
+        F.col("__nb"),
+        threshold,
+        inter=inter,
     )
 
 
@@ -587,17 +622,8 @@ def _jaccard_pairs_dense_mask(
     this regime would tile block x block like cosine_pairs_blocked —
     a 64-token vocabulary makes all-pairs work irreducible either
     way."""
-    spark = sh.sparkSession
-    terms = sorted(
-        r["w"]
-        for r in sh.select(F.explode("__sh").alias("w")).distinct().collect()
-    )
-    idx_df = F.broadcast(
-        inline_rows(
-            spark,
-            [(t, i) for i, t in enumerate(terms)],
-            "w string, __idx int",
-        )
+    _, idx_df = _term_index(
+        sh.select(F.explode("__sh").alias("w")).distinct(), "w"
     )
     masked = (
         sh.select(F.col(id_col), F.size("__sh").alias("__n"), F.explode("__sh").alias("w"))
@@ -621,17 +647,12 @@ def _jaccard_pairs_dense_mask(
         F.col("__mask").alias("__mb"),
         F.col("__n").alias("__nb"),
     )
-    inter = F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb")))
-    return (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("__na") + F.col("__nb") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_pairs(
+        a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b")),
+        F.col("__na"),
+        F.col("__nb"),
+        threshold,
+        inter=F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb"))),
     )
 
 
@@ -713,34 +734,13 @@ def boilerplate_clusters(
     buckets -> exact pair graph; boilerplate floods -> cluster
     assignment. Both are one-shuffle banding plans.
     """
-    _check_banding(num_hashes, bands)
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_size).filter(
         F.col("n_shingles") > 0
     )
-    rows_per_band = max(1, num_hashes // bands)
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("signature", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
-    per_bucket = banded.groupBy("band", "bucket").agg(
-        F.count("*").alias("sz"), F.min(id_col).alias("rep")
-    )
-    big = per_bucket.filter(F.col("sz") > min_bucket).select("band", "bucket", "rep")
+    banded = _minhash_banded(sigs, id_col, bands, num_hashes)
+    big = lsh_dropped_buckets(
+        sigs, id_col, bands, num_hashes, max_bucket=min_bucket
+    ).select("band", "bucket", "rep")
     members = (
         banded.join(big, ["band", "bucket"])
         .groupBy(id_col)
@@ -750,7 +750,7 @@ def boilerplate_clusters(
         F.col("cluster_id").alias("id_a"), F.col(id_col).alias("id_b")
     ).filter(F.col("id_a") != F.col("id_b"))
     verified = jaccard_verify(
-        df, pairs, text_col, id_col, threshold, shingle_size, hash_shingles=True
+        df, pairs, text_col, id_col, threshold, shingle_size
     ).select(
         F.col("id_b").alias(id_col),
         F.col("id_a").alias("cluster_id"),
@@ -767,7 +767,6 @@ def tfidf_cosine_pairs(
     text_col: str,
     id_col: str,
     threshold: float = 0.8,
-    max_doc_freq: int | None = None,
     dense_vocab_limit: int = 4096,
 ) -> DataFrame:
     """Near-dup pairs by TF-IDF-weighted cosine over the token
@@ -786,12 +785,10 @@ def tfidf_cosine_pairs(
     - sparse (the normal text regime, Zipfian vocab): one explode, a
       (doc, term) tf aggregate, a term df aggregate, and ONE
       posting-list self-join on the term — candidate volume is sum
-      over terms of df^2, so ``max_doc_freq`` caps ultra-common terms
-      (the posting-list guard, same role as LSH's ``max_bucket``: a
-      stopword's postings pair every doc with every doc and say
-      nothing; IDF already weights them near zero, the cap keeps them
-      out of the join entirely). Weights and norms are plain doubles;
-      the dot product is a hash aggregate over shared terms.
+      over terms of df^2 (a stopword's postings pair every doc with
+      every doc; IDF weights them near zero but they still join).
+      Weights and norms are plain doubles; the dot product is a hash
+      aggregate over shared terms.
     - dense (vocab <= ``dense_vocab_limit``): when the vocabulary is
       tiny, EVERY posting list is ~corpus-length, pruning is
       impossible, and the posting join degenerates to |V| * n^2 rows
@@ -816,8 +813,6 @@ def tfidf_cosine_pairs(
         F.count("*").cast("double").alias("tf")
     )
     dfreq = tf.groupBy("t").agg(F.count("*").alias("df_t"))
-    if max_doc_freq is not None:
-        dfreq = dfreq.filter(F.col("df_t") <= max_doc_freq)
     n_docs = df.agg(F.count("*").cast("double").alias("n_docs"))
     weighted = (
         tf.join(dfreq, "t")
@@ -883,17 +878,7 @@ def _tfidf_pairs_dense(
         cosine_pairs_blocked,
     )
 
-    spark = weighted.sparkSession
-    terms = sorted(
-        r["t"] for r in weighted.select("t").distinct().collect()
-    )
-    idx_df = F.broadcast(
-        inline_rows(
-            spark,
-            [(t, i) for i, t in enumerate(terms)],
-            "t string, __idx int",
-        )
-    )
+    _, idx_df = _term_index(weighted.select("t").distinct(), "t")
     entries = (
         weighted.join(idx_df, "t")
         .groupBy(id_col)
@@ -1019,49 +1004,33 @@ def incremental_jaccard_dedup(
     btok = bsh.filter(F.col("__n") > 0).select(
         F.col(id_col), F.explode("__sh").alias("w"), "__n"
     )
-    wdoc = Window.partitionBy(id_col).orderBy("df_w", "w")
-    probe = (
-        btok.join(store_df, "w", "left")
-        .withColumn("df_w", F.coalesce("df_w", F.lit(0)))
-        .withColumn("__pos", F.row_number().over(wdoc))
-        .filter(
-            F.col("__pos")
-            <= F.col("__n")
-            - F.floor(F.lit(float(threshold)) * F.col("__n"))
-            + 1
-        )
-        .select(F.col(id_col), "w")
-    )
+    probe = _prefix_tokens(
+        btok.join(store_df, "w", "left").withColumn(
+            "df_w", F.coalesce("df_w", F.lit(0))
+        ),
+        id_col,
+        "__n",
+        threshold,
+    ).select(F.col(id_col), "w")
     stok = store.select(
         "store_id", F.explode("store_sh").alias("w"), "store_n"
     )
-    wstore = Window.partitionBy("store_id").orderBy("df_w", "w")
-    store_pref = (
-        stok.join(store_df, "w")
-        .withColumn("__pos", F.row_number().over(wstore))
-        .filter(
-            F.col("__pos")
-            <= F.col("store_n")
-            - F.floor(F.lit(float(threshold)) * F.col("store_n"))
-            + 1
-        )
-        .select("store_id", "w")
-    )
+    store_pref = _prefix_tokens(
+        stok.join(store_df, "w"), "store_id", "store_n", threshold
+    ).select("store_id", "w")
     cands = (
         probe.join(store_pref, "w")
         .select(F.col(id_col), "store_id")
         .distinct()
     )
-    verified = (
-        cands.join(bsh.select(id_col, "__sh"), id_col)
-        .join(store.select("store_id", "store_sh", "store_n"), "store_id")
-        .withColumn("inter", F.size(F.array_intersect("__sh", "store_sh")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("__sh") + F.col("store_n") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    verified = _jaccard_at_least(
+        cands.join(bsh.select(id_col, "__sh"), id_col).join(
+            store.select("store_id", "store_sh", "store_n"), "store_id"
+        ),
+        F.size("__sh"),
+        F.col("store_n"),
+        threshold,
+        inter=F.size(F.array_intersect("__sh", "store_sh")),
     )
     return _attach_best_match(batch, verified, id_col, threshold)
 
@@ -1081,15 +1050,7 @@ def _incremental_dense_mask(
     batch/store even this regime would tile like cosine_pairs_blocked,
     but a 64-token vocabulary with billions of docs is all-pairs work
     no algorithm can prune, only reorganize."""
-    spark = bsh.sparkSession
-    terms = sorted(r["w"] for r in store_df.select("w").collect())
-    idx_df = F.broadcast(
-        inline_rows(
-            spark,
-            [(t, i) for i, t in enumerate(terms)],
-            "w string, __idx int",
-        )
-    )
+    _, idx_df = _term_index(store_df.select("w"), "w")
     btok = bsh.filter(F.col("__n") > 0).select(
         F.col(id_col), F.explode("__sh").alias("w"), "__n"
     )
@@ -1120,20 +1081,13 @@ def _incremental_dense_mask(
             .alias("__smask")
         )
     )
-    inter = F.bit_count(
-        F.col("__mask").bitwiseAND(F.col("__smask"))
-    )
-    return (
-        bmask.crossJoin(F.broadcast(smask))
-        .withColumn("inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.col("__n") + F.col("store_n") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(id_col, "store_id", "jaccard")
-    )
+    return _jaccard_at_least(
+        bmask.crossJoin(F.broadcast(smask)),
+        F.col("__n"),
+        F.col("store_n"),
+        threshold,
+        inter=F.bit_count(F.col("__mask").bitwiseAND(F.col("__smask"))),
+    ).select(id_col, "store_id", "jaccard")
 
 
 def _attach_best_match(
@@ -1187,33 +1141,11 @@ def minhash_band_index(
     for the recall-contract regime. ``shingle_col`` derives the
     signatures from a materialized shingle-array column instead of
     re-tokenizing (see :func:`minhash_signatures`)."""
-    _check_banding(num_hashes, bands)
     sigs = minhash_signatures(
         docs, text_col, id_col, num_hashes, shingle_size,
         shingle_col=shingle_col,
     ).filter(F.col("n_shingles") > 0)
-    rows_per_band = max(1, num_hashes // bands)
-    return sigs.select(
-        F.col(id_col).alias("store_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at(
-                                    "signature", b * rows_per_band + r + 1
-                                )
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("store_id", "bb.band", "bb.bucket")
+    return _minhash_banded(sigs, id_col, bands, num_hashes, "store_id")
 
 
 def incremental_minhash_dedup(
@@ -1283,33 +1215,20 @@ def incremental_minhash_dedup(
     # stages at sf0.1.
     cands = cpu_bound(cands)
 
-    def _hashed(col):
-        return F.array_distinct(F.transform(col, lambda s: F.xxhash64(s)))
-
     bsh = batch_sh.select(
-        F.col(id_col), _hashed(F.col("__sh0")).alias("__sh")
+        F.col(id_col), _hashed_set(F.col("__sh0")).alias("__sh")
     )
     store_hashed = store.select(
-        "store_id", _hashed(F.col("store_sh")).alias("store_hsh")
+        "store_id", _hashed_set(F.col("store_sh")).alias("store_hsh")
     )
-    verified = (
+    verified = _jaccard_at_least(
         cands.join(bsh, id_col)
         .join(store_hashed, "store_id")
-        # Size-ratio prefilter (guide §3.2, r16) — same conservative
-        # bound as jaccard_verify: J ≥ t forces min/max set size ≥ t,
-        # so failing pairs skip the per-pair intersect.
-        .filter(
-            F.least(F.size("__sh"), F.size("store_hsh"))
-            >= (threshold - 1e-9)
-            * F.greatest(F.size("__sh"), F.size("store_hsh"))
-        )
-        .withColumn("inter", F.size(F.array_intersect("__sh", "store_hsh")))
-        .withColumn(
-            "jaccard",
-            F.col("inter")
-            / (F.size("__sh") + F.size("store_hsh") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(_size_ratio_ok(F.size("__sh"), F.size("store_hsh"), threshold)),
+        F.size("__sh"),
+        F.size("store_hsh"),
+        threshold,
+        inter=F.size(F.array_intersect("__sh", "store_hsh")),
     )
     return _attach_best_match(batch, verified, id_col, threshold)
 
@@ -1765,20 +1684,9 @@ def _portable_band_candidates(
     map-side-combined bucket aggregate, within-bucket pair-gen from
     the sorted id arrays. Shared by the recall and candidate-profile
     measurement rows."""
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.slice("__sig", b * r + 1, r).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    banded = band_explode(
+        sigs, id_col, [F.slice("__sig", b * r + 1, r) for b in range(bands)]
+    )
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.collect_list(id_col).alias("ids"))
@@ -1786,31 +1694,7 @@ def _portable_band_candidates(
         .select(F.array_sort("ids").alias("ids"))
         .distinct()
     )
-    return (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ids",
-                        lambda x, i: F.transform(
-                            F.slice(
-                                F.col("ids"),
-                                i + 2,
-                                F.greatest(
-                                    F.size("ids") - i - 1, F.lit(0)
-                                ),
-                            ),
-                            lambda y: F.struct(
-                                x.alias("id_a"), y.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
+    return _bucket_pair_rows(buckets)
 
 
 def lsh_recall_report(

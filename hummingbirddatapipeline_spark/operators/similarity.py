@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hummingbirddatapipeline_spark.functions.vector import cosine, dot
+from hummingbirddatapipeline_spark.operators.setsim import band_explode
 from hummingbirddatapipeline_spark.tables import cpu_bound
 
 
@@ -150,34 +151,9 @@ def lsh_topk(
     when omitted, executors derive the seeded plane matrix from their
     first Arrow batch (identical on both sides — same seed, same dim).
     """
-    planes = _hyperplanes(dim, n_planes, seed) if dim is not None else None
     per_band = max(1, n_planes // bands)
-    masks = [
-        ((1 << per_band) - 1) << (b * per_band) for b in range(bands)
-    ]
-
-    def banded(df: DataFrame, idc: str, vecc: str) -> DataFrame:
-        # ids only: the wide embedding never rides the band explode or
-        # the bucket join — candidates are skinny (band, bucket, id)
-        # rows and the vectors attach exactly once at verify time.
-        sig = lsh_signature(vecc, planes, n_planes=n_planes, seed=seed)
-        d = df.withColumn("__sig", sig)
-        bandcols = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.col("__sig").bitwiseAND(F.lit(m).cast("long")).alias("bucket"),
-                )
-                for b, m in enumerate(masks)
-            ]
-        )
-        return (
-            d.select(idc, F.explode(bandcols).alias("bb"))
-            .select(idc, F.col("bb.band"), F.col("bb.bucket"))
-        )
-
-    bi = banded(items, item_id, item_vec)
-    bq = banded(queries, query_id, query_vec)
+    bi = _band_bucket_frame(items, item_id, item_vec, per_band, bands, seed, dim)
+    bq = _band_bucket_frame(queries, query_id, query_vec, per_band, bands, seed, dim)
     cands = (
         bi.join(bq, ["band", "bucket"])
         .filter(F.col(item_id) != F.col(query_id))
@@ -354,15 +330,7 @@ def _band_bucket_frame(
             ((1 << per_band) - 1) << (i * per_band) for i in range(n_bands)
         ]
         sig = lsh_signature(item_vec, planes, n_planes=total_planes, seed=seed)
-        bandarr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.col("__sig").bitwiseAND(F.lit(m).cast("long")).alias("bucket"),
-                )
-                for i, m in enumerate(masks)
-            ]
-        )
+        keys = [F.col("__sig").bitwiseAND(F.lit(m).cast("long")) for m in masks]
     else:
         # widened path: one signature long PER BAND (n-aware tuning at
         # corpora past the single-long budget); bucket i = element i
@@ -370,20 +338,9 @@ def _band_bucket_frame(
             item_vec, per_band=per_band, bands=n_bands, seed=seed,
             planes=planes,
         )
-        bandarr = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.element_at(F.col("__sig"), i + 1).alias("bucket"),
-                )
-                for i in range(n_bands)
-            ]
-        )
-    return (
-        items.select(item_id, item_vec)
-        .withColumn("__sig", sig)
-        .select(item_id, F.explode(bandarr).alias("bb"))
-        .select(item_id, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+        keys = [F.element_at(F.col("__sig"), i + 1) for i in range(n_bands)]
+    return band_explode(
+        items.select(item_id, item_vec).withColumn("__sig", sig), item_id, keys
     )
 
 

@@ -211,7 +211,6 @@ def test_precomputed_labels_params_equal_inline_closure(spark, sf_dir):
     """r15 optimization: the shared CC fixture and the operators'
     ``labels`` parameters must be result-identical to the inline
     closure they replace (same pair graph, same min-id labeling)."""
-    from hummingbirddatapipeline_spark.catalog import invalidate
     from hummingbirddatapipeline_spark.catalog.dedup_q import (
         shared_jaccard_cc,
         shared_jaccard_pairs,
@@ -225,7 +224,6 @@ def test_precomputed_labels_params_equal_inline_closure(spark, sf_dir):
     )
     from hummingbirddatapipeline_spark.tables import load
 
-    invalidate(sf_dir)
     pairs = shared_jaccard_pairs(spark, sf_dir)
     cc_fix = shared_jaccard_cc(spark, sf_dir)
     cc_inline = connected_components(pairs)

@@ -144,11 +144,12 @@ def test_banded_clusters_query_builds_and_checkpoints(spark, sf_dir):
     fails PythonUDF extraction at the checkpoint boundary
     ([INTERNAL_ERROR] Cannot evaluate expression: PythonUDF). The
     catalog query materializes the fixture first; building the plan
-    (which eagerly runs the checkpoints) must not raise."""
-    from hummingbirddatapipeline_spark.catalog import QUERIES, invalidate
+    (which eagerly runs the checkpoints) must not raise. ``__wrapped__``
+    builds a fresh plan without dropping the session's other cached
+    plans."""
+    from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    invalidate(sf_dir)
-    df = QUERIES["similarity_near_dup_clusters_banded"](spark, sf_dir)
+    df = QUERIES["similarity_near_dup_clusters_banded"].__wrapped__(spark, sf_dir)
     assert df.columns == ["node", "cluster_id", "cluster_size"]
 
 

@@ -14,7 +14,9 @@ each of the ``--rebuilt`` passes drops the cached plans and shared
 fixtures with ``catalog.invalidate`` and times build + execution.
 
 With --explain DIR the formatted physical plan of each query is also
-written to DIR/<query>.txt (the judge-facing plan artifact).
+written to DIR/<query>.txt (the plan artifact of an optimization
+round). Besides catalog and bench-only rows, the shared dedup fixtures
+``shared_jaccard_pairs`` and ``shared_jaccard_cc`` run by name.
 """
 
 from __future__ import annotations
@@ -44,12 +46,12 @@ def main() -> None:
     ap.add_argument("--warm", type=int, default=3)
     ap.add_argument("--rebuilt", type=int, default=0)
     ap.add_argument("--explain", default=None)
-    ap.add_argument("--stages", action="store_true", default=True)
     args = ap.parse_args()
 
     from hummingbirddatapipeline_spark.catalog import (
         BENCH_ONLY,
         QUERIES,
+        dedup_q,
         invalidate,
     )
     from hummingbirddatapipeline_spark.session import get_spark, tune_for_sf
@@ -58,7 +60,12 @@ def main() -> None:
     spark = get_spark("profile-query")
     spark.sparkContext.setLogLevel("ERROR")
     tune_for_sf(spark, sf_dir)
-    runnable = {**QUERIES, **BENCH_ONLY}
+    runnable = {
+        **QUERIES,
+        **BENCH_ONLY,
+        "shared_jaccard_pairs": dedup_q.shared_jaccard_pairs,
+        "shared_jaccard_cc": dedup_q.shared_jaccard_cc,
+    }
 
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -105,45 +112,44 @@ def main() -> None:
             + f"  min={min(warms):.3f}"
             + ("  rebuilt=" + " ".join(f"{r:.3f}" for r in rebuilt) if rebuilt else "")
         )
-        if args.stages:
-            try:
-                all_jobs = {j["jobId"]: j for j in _rest(spark, "jobs")}
-                stage_ids = sorted(
-                    sid
-                    for j in jobs
-                    if j in all_jobs
-                    for sid in all_jobs[j].get("stageIds", [])
+        try:
+            all_jobs = {j["jobId"]: j for j in _rest(spark, "jobs")}
+            stage_ids = sorted(
+                sid
+                for j in jobs
+                if j in all_jobs
+                for sid in all_jobs[j].get("stageIds", [])
+            )
+            stages = {
+                s["stageId"]: s
+                for s in _rest(spark, "stages")
+                if s["status"] == "COMPLETE"
+            }
+            rows = []
+            for sid in stage_ids:
+                s = stages.get(sid)
+                if not s:
+                    continue
+                rows.append(
+                    (
+                        s.get("executorRunTime", 0),
+                        sid,
+                        s.get("numCompleteTasks", 0),
+                        s.get("inputBytes", 0),
+                        s.get("shuffleReadBytes", 0),
+                        s.get("shuffleWriteBytes", 0),
+                        (s.get("name") or "")[:70],
+                    )
                 )
-                stages = {
-                    s["stageId"]: s
-                    for s in _rest(spark, "stages")
-                    if s["status"] == "COMPLETE"
-                }
-                rows = []
-                for sid in stage_ids:
-                    s = stages.get(sid)
-                    if not s:
-                        continue
-                    rows.append(
-                        (
-                            s.get("executorRunTime", 0),
-                            sid,
-                            s.get("numCompleteTasks", 0),
-                            s.get("inputBytes", 0),
-                            s.get("shuffleReadBytes", 0),
-                            s.get("shuffleWriteBytes", 0),
-                            (s.get("name") or "")[:70],
-                        )
-                    )
-                rows.sort(reverse=True)
-                for rt, sid, nt, ib, srb, swb, nm in rows[:12]:
-                    print(
-                        f"   stage {sid:>5} run={rt/1000:7.2f}s tasks={nt:>4}"
-                        f" in={ib/1e6:8.1f}MB sr={srb/1e6:7.1f}MB"
-                        f" sw={swb/1e6:7.1f}MB  {nm}"
-                    )
-            except Exception as e:  # pragma: no cover - best effort
-                print(f"   (stage metrics unavailable: {e})")
+            rows.sort(reverse=True)
+            for rt, sid, nt, ib, srb, swb, nm in rows[:12]:
+                print(
+                    f"   stage {sid:>5} run={rt/1000:7.2f}s tasks={nt:>4}"
+                    f" in={ib/1e6:8.1f}MB sr={srb/1e6:7.1f}MB"
+                    f" sw={swb/1e6:7.1f}MB  {nm}"
+                )
+        except Exception as e:  # pragma: no cover - best effort
+            print(f"   (stage metrics unavailable: {e})")
 
 
 if __name__ == "__main__":
