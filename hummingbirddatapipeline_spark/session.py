@@ -12,6 +12,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Size of Spark's JVM-wide LRU cache of compiled generated classes
+# (spark.sql.codegen.cache.maxEntries). It is a static conf: the cache
+# is sized when codegen first runs, so only the builder can set it. At
+# the default of 100 the cache is smaller than one dedup pass, which
+# generates 141 distinct classes: each pass evicts what the next one
+# needs, so every rebuild recompiles about 110-135 classes (1 s of
+# Janino time at sf0.01) and runs them cold in the JVM. 4000 also holds
+# the 2,601 distinct classes of bench.py's HEADLINE set (sf0.01, one
+# session), with 50% headroom for other scale factors' plans; holding
+# all of them took the heap after GC from 278 MB (cap 1000) to 334 MB.
+CODEGEN_CACHE_ENTRIES = 4000
+
 
 def get_spark(app_name: str = "hummingbird-spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
@@ -36,6 +48,7 @@ def get_spark(app_name: str = "hummingbird-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 

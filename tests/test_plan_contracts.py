@@ -6,12 +6,33 @@ join fails here, not in a cluster bill."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+from explain_audit import executed_plan, strip_ids  # noqa: E402
+
 
 def _physical(df) -> str:
+    """The built plan: AQE's initial plan, before any stage has run."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _final_physical(df) -> str:
+    """AQE's final plan after one execution, ids stripped: the plan in
+    which run-time coalescing and join choices show."""
+    return executed_plan(df)
+
+
+def test_strip_ids_drops_both_plan_id_forms():
+    assert (
+        strip_ids("Exchange hashpartitioning(ein#12L, 4), REPARTITION_BY_NUM, [plan_id=57]")
+        == "Exchange hashpartitioning(ein, 4), REPARTITION_BY_NUM"
+    )
+    assert strip_ids("+- EmptyRelation [plan_id=301]") == "+- EmptyRelation"
 
 
 def _n_exchanges(plan: str) -> int:
@@ -1018,10 +1039,7 @@ def _pins(plan: str) -> list[str]:
     ``hashpartitioning(band, bucket, 4)`` / ``RoundRobinPartitioning(4)``."""
     import re
 
-    return [
-        re.sub(r"#\d+L?", "", m)
-        for m in re.findall(r"Exchange (.*?), REPARTITION_BY_NUM", plan)
-    ]
+    return re.findall(r"Exchange (.*?), REPARTITION_BY_NUM", strip_ids(plan))
 
 
 def _docs(spark, sf_dir):
@@ -1131,3 +1149,28 @@ def test_990_single_ein_exchange(spark, sf_dir):
     finally:
         spark.conf.set(key, before)
     assert plan.count("Exchange hashpartitioning(ein") == 1, plan
+
+
+def test_990_window_keeps_core_width_after_aqe(spark, sf_dir):
+    """The cpu_bound pin's effect at run time: AQE coalesces the 990
+    aggregate's shuffle read by bytes, but the window stage reads the
+    pinned ein exchange uncoalesced, so it runs defaultParallelism tasks.
+    Only the final plan shows coalescing; the built plan cannot."""
+    from hummingbirddatapipeline_spark.catalog import scoring_q
+
+    n = spark.sparkContext.defaultParallelism
+    # __wrapped__: executing the session's cached plan would make its
+    # adaptive plan final under the other contracts
+    df = scoring_q.scoring_990_model.__wrapped__(spark, sf_dir)
+    lines = _final_physical(df).splitlines()
+    ein = [
+        i
+        for i, line in enumerate(lines)
+        if f"Exchange hashpartitioning(ein, {n}), REPARTITION_BY_NUM" in line
+    ]
+    assert len(ein) == 1, lines
+    # the exchange's query stage, then the operator that reads it
+    stage, reader = lines[ein[0] - 1], lines[ein[0] - 2]
+    assert "ShuffleQueryStage" in stage, lines
+    assert "AQEShuffleRead" not in reader, lines
+    assert df._jdf.queryExecution().executedPlan().execute().getNumPartitions() == n

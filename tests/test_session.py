@@ -1,0 +1,34 @@
+"""The session factory's codegen cache holds the engine's working set:
+a dedup pass built a second time reuses every generated class instead
+of compiling it again."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+from profile_query import codegen_compiles  # noqa: E402
+
+
+def test_rebuilt_dedup_pass_compiles_nothing(spark, sf_dir):
+    """Two rounds of fresh builds (``__wrapped__``, so no cached plan or
+    fixture is reused) of the dedup pass: the shared Jaccard fixture,
+    label propagation and the MinHash pairs, each built and written.
+    The pass generates about 140 distinct classes, more than Spark's
+    default cache of 100 holds, so without the session's larger cache
+    round 2 recompiles most of them."""
+    from hummingbirddatapipeline_spark.catalog import dedup_q
+
+    ops = (
+        dedup_q.shared_jaccard_pairs.__wrapped__,
+        dedup_q.dedup_label_propagation.__wrapped__,
+        dedup_q.dedup_minhash_pairs.__wrapped__,
+    )
+    compiled = []
+    for _ in range(2):
+        before = codegen_compiles(spark)[0]
+        for op in ops:
+            op(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        compiled.append(codegen_compiles(spark)[0] - before)
+    assert compiled[1] == 0, compiled

@@ -38,14 +38,23 @@ KEY_MARKERS = (
 )
 
 
+_IDS = re.compile(r"#\d+L?|,? \[plan_id=\d+\]")
+
+
+def strip_ids(plan: str) -> str:
+    """``plan`` without expression ids (``#12``, ``#12L``) and plan ids,
+    both the ``, [plan_id=N]`` after an exchange's arguments and the bare
+    `` [plan_id=N]`` of a leaf such as ``EmptyRelation``."""
+    return _IDS.sub("", plan)
+
+
 def executed_plan(df) -> str:
     """The final physical plan of ``df`` after one execution, ids
     stripped. Running the DataFrame's own query execution makes its
     adaptive plan final; the plan is the one a noop write runs."""
     qe = df._jdf.queryExecution()
     qe.toRdd().count()
-    plan = qe.executedPlan().toString().split("== Initial Plan ==")[0]
-    return re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", plan)
+    return strip_ids(qe.executedPlan().toString().split("== Initial Plan ==")[0])
 
 
 def main() -> None:

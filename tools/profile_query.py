@@ -9,9 +9,17 @@ Usage:
     python tools/profile_query.py <query ...> [--warm 3] [--rebuilt 0]
                                   [--explain DIR]
 
-``build`` is the query function's own time (its eager jobs included);
-each of the ``--rebuilt`` passes drops the cached plans and shared
-fixtures with ``catalog.invalidate`` and times build + execution.
+``build`` is the query function's own time (its eager jobs included).
+After every query has run, each of the ``--rebuilt`` passes drops the
+cached plans and shared fixtures with ``catalog.invalidate``, then
+builds and executes every named query again and times each one, like a
+rebuild pass of ``perfbench`` or ``bench.py``.
+
+``compiles`` gives, for the build and for each pass, the generated
+classes Janino compiled and their milliseconds (a rebuilt pass counts
+build and execution). A class served from Spark's codegen cache is not
+compiled, so a rebuilt pass that compiles anything recompiled classes
+the cache had evicted.
 
 With --explain DIR the formatted physical plan of each query is also
 written to DIR/<query>.txt (the plan artifact of an optimization
@@ -38,6 +46,16 @@ def _rest(spark, path: str):
     url = f"{ui}/api/v1/applications/{app_id}/{path}"
     with urllib.request.urlopen(url, timeout=10) as r:
         return json.loads(r.read())
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) so far in this JVM, from Spark's
+    CodegenMetrics histogram and CodeGenerator's nanosecond total. A class
+    served from Spark's codegen cache is not compiled and not counted."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(n), ns / 1e6
 
 
 def main() -> None:
@@ -71,47 +89,49 @@ def main() -> None:
         "formatted"
     )
 
-    for name in args.queries:
-        fn = runnable[name]
+    def one_pass(df, desc: str) -> tuple[float, list[int]]:
+        sc = spark.sparkContext
+        before = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
+        sc.setJobDescription(desc)
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        dt = time.perf_counter() - t0
+        sc.setJobDescription(None)
+        after = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
+        return dt, sorted(after - before)
+
+    def compiled_since(since: tuple[int, float]) -> str:
+        n, ms = codegen_compiles(spark)
+        return f"{n - since[0]}/{ms - since[1]:.0f}ms"
+
+    for name in args.queries:
+        c0 = codegen_compiles(spark)
+        t0 = time.perf_counter()
+        df = runnable[name](spark, sf_dir)
         build = time.perf_counter() - t0
+        compiles = [f"build={compiled_since(c0)}"]
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
             plan = df._jdf.queryExecution().explainString(mode)
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
                 f.write(plan)
 
-        def one_pass(tag: str, df=df) -> tuple[float, list[int]]:
-            sc = spark.sparkContext
-            before = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
-            sc.setJobDescription(f"{name}:{tag}")
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            sc.setJobDescription(None)
-            after = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
-            return dt, sorted(after - before)
-
-        cold, _ = one_pass("cold")
+        c0 = codegen_compiles(spark)
+        cold, _ = one_pass(df, f"{name}:cold")
+        compiles.append(f"cold={compiled_since(c0)}")
         warms = []
         jobs: list[int] = []
         for i in range(args.warm):
-            dt, jids = one_pass(f"warm{i}")
+            c0 = codegen_compiles(spark)
+            dt, jobs = one_pass(df, f"{name}:warm{i}")
+            compiles.append(f"warm{i}={compiled_since(c0)}")
             warms.append(dt)
-            jobs = jids
-        rebuilt = []
-        for i in range(args.rebuilt):
-            invalidate(sf_dir)
-            t0 = time.perf_counter()
-            one_pass(f"rebuilt{i}", fn(spark, sf_dir))
-            rebuilt.append(time.perf_counter() - t0)
         print(
             f"== {name}  build={build:.3f}s  cold={cold:.3f}s  warm="
             + " ".join(f"{w:.3f}" for w in warms)
             + f"  min={min(warms):.3f}"
-            + ("  rebuilt=" + " ".join(f"{r:.3f}" for r in rebuilt) if rebuilt else "")
         )
+        print("   compiles " + " ".join(compiles))
         try:
             all_jobs = {j["jobId"]: j for j in _rest(spark, "jobs")}
             stage_ids = sorted(
@@ -150,6 +170,23 @@ def main() -> None:
                 )
         except Exception as e:  # pragma: no cover - best effort
             print(f"   (stage metrics unavailable: {e})")
+
+    for i in range(args.rebuilt):
+        invalidate(sf_dir)
+        p0 = codegen_compiles(spark)
+        total = 0.0
+        per_query = []
+        for name in args.queries:
+            c0 = codegen_compiles(spark)
+            t0 = time.perf_counter()
+            one_pass(runnable[name](spark, sf_dir), f"{name}:rebuilt{i}")
+            dt = time.perf_counter() - t0
+            total += dt
+            per_query.append(f"{name}={dt:.3f}s/{compiled_since(c0)}")
+        print(
+            f"== rebuilt{i}  {total:.3f}s  compiles={compiled_since(p0)}  "
+            + " ".join(per_query)
+        )
 
 
 if __name__ == "__main__":
