@@ -984,9 +984,10 @@ def dedup_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     routing) — the rounds themselves are pair-source-agnostic.
     Radius and tie contracts pinned in tests/test_r16_oracles.py.
 
-    Scale shape: per round ONE edge-join + ONE (node, label) vote
-    aggregate over skinny state, lineage-cut per round — the
-    connected-components budget with labels instead of min-ids."""
+    Scale shape: per round ONE edge-join + ONE per-node vote
+    aggregate (``mode``, ties to the smallest label; no window) over
+    skinny state, lineage-cut per round — the connected-components
+    budget with labels instead of min-ids."""
     from hummingbirddatapipeline_spark.functions.text import quality_score
     from hummingbirddatapipeline_spark.operators.graph import (
         label_propagation,

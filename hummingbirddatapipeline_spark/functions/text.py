@@ -19,10 +19,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "les", "des", "et", "est", "une", "dans", "que", "pour"),
 }
 
-# \w+ runs or single non-space punctuation — a BPE-ish tokenizer shape.
-BPE_ISH_PATTERN = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
-
-
 def ws_tokens(text: Column) -> Column:
     """Whitespace tokenization -> array of tokens (empty strings dropped)."""
     return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
@@ -30,11 +26,6 @@ def ws_tokens(text: Column) -> Column:
 
 def ws_token_count(text: Column) -> Column:
     return F.size(ws_tokens(text))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Count of regex 'BPE-ish' tokens (word runs + punctuation marks)."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_PATTERN), 0))
 
 
 def punct_ratio(text: Column) -> Column:

@@ -26,7 +26,8 @@ operator below calls it:
   ``operators.setsim.sorted_pairs`` (also the basket pair generator);
 - term index: :func:`_term_index`, the collected sorted vocabulary as
   a broadcast ``(term, __idx)`` frame for the bitmask and dense-TF-IDF
-  regimes;
+  regimes; its one bounded ``limit(L+1)`` collect per vocabulary also
+  decides the regime, so no operator counts the vocabulary first;
 - prefix bound: :func:`_prefix_tokens`, the AllPairs
   ``n - floor(t*n) + 1`` rarest-token prefix;
 - Jaccard ratio: :func:`_jaccard_at_least` (``inter / (n_a + n_b -
@@ -84,8 +85,13 @@ def _minhash_banded(
     band index."""
     _check_banding(num_hashes, bands)
     r = num_hashes // bands
+    # SQL text: one JVM call per key instead of one per Column node
     keys = [
-        F.xxhash64(*[F.element_at("signature", b * r + j + 1) for j in range(r)])
+        F.expr(
+            "xxhash64("
+            + ", ".join(f"element_at(signature, {b * r + j + 1})" for j in range(r))
+            + ")"
+        )
         for b in range(bands)
     ]
     return band_explode(signatures, id_col, keys, id_alias)
@@ -101,13 +107,21 @@ def _bucket_pair_rows(buckets: DataFrame) -> DataFrame:
     )
 
 
-def _term_index(terms: DataFrame, col: str) -> tuple[list[str], DataFrame]:
+def _term_index(
+    terms: DataFrame, col: str, limit: int | None = None
+) -> tuple[list[str], DataFrame | None]:
     """Collect the distinct one-column vocabulary frame ``terms`` and
     return it sorted, with the broadcast ``(col, __idx)`` frame that
     maps each term to its position (the bit or vector slot of the
-    bitmask and dense-vector regimes). A bounded collect: callers
-    reach it only under their vocabulary limit."""
+    bitmask and dense-vector regimes). With ``limit`` the collect is
+    bounded to ``limit + 1`` terms, so one action both picks the
+    caller's regime and, under the cap, holds the whole vocabulary;
+    over the cap the frame is ``None``."""
+    if limit is not None:
+        terms = terms.limit(limit + 1)
     vocab = sorted(r[col] for r in terms.collect())
+    if limit is not None and len(vocab) > limit:
+        return vocab, None
     idx = F.broadcast(
         inline_rows(
             terms.sparkSession,
@@ -243,25 +257,26 @@ def minhash_signatures(
         F.explode(shingles).alias("__s"),
     )
     hashed = tok.select(F.col(id_col), F.xxhash64("__s").alias("__h"))
+    # The K-wide lists go to the JVM as SQL text (one call per
+    # expression, not per Column node); constant folding makes the
+    # plan the same as the Column-built one.
     agg = hashed.groupBy(id_col).agg(
-        *[F.min(F.xxhash64("__h", F.lit(i))).alias(f"__m{i}") for i in range(num_hashes)],
+        *[F.expr(f"min(xxhash64(__h, {i})) AS __m{i}") for i in range(num_hashes)],
         F.count("*").alias("n_shingles"),
     )
-    sigs = agg.select(
-        id_col,
-        F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("signature"),
+    sigs = agg.selectExpr(
+        f"`{id_col}`",
+        f"array({', '.join(f'__m{i}' for i in range(num_hashes))}) AS signature",
         "n_shingles",
     )
     # docs with no shingles vanish at explode; restore them with an
     # all-NULL signature so the contract (one row per input id) holds
     empty = df.select(F.col(id_col)).join(
         sigs.select(id_col), id_col, "left_anti"
-    ).select(
-        id_col,
-        F.array(*[F.lit(None).cast("long") for _ in range(num_hashes)]).alias(
-            "signature"
-        ),
-        F.lit(0).alias("n_shingles"),
+    ).selectExpr(
+        f"`{id_col}`",
+        f"array({', '.join(['CAST(NULL AS BIGINT)'] * num_hashes)}) AS signature",
+        "0 AS n_shingles",
     )
     return sigs.unionByName(empty)
 
@@ -498,14 +513,15 @@ def jaccard_pairs_prefix(
         F.col(id_col), word_shingles(F.col(text_col), shingle_size).alias("__sh")
     ).filter(F.size("__sh") > 0)
 
-    n_vocab = None
+    vocab, idx_df = [], None
     if 0 < max(dense_vocab_limit, mask_vocab_limit):
-        vocab = (
-            sh.select(F.explode("__sh").alias("w")).distinct()
+        vocab, idx_df = _term_index(
+            sh.select(F.explode("__sh").alias("w")).distinct(),
+            "w",
+            max(dense_vocab_limit, mask_vocab_limit),
         )
-        n_vocab = vocab.limit(max(dense_vocab_limit, mask_vocab_limit) + 1).count()
-        if 0 < n_vocab <= min(dense_vocab_limit, 64):
-            return _jaccard_pairs_dense_mask(sh, id_col, threshold)
+        if 0 < len(vocab) <= min(dense_vocab_limit, 64):
+            return _jaccard_pairs_dense_mask(sh, idx_df, id_col, threshold)
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("n"))
     tok = sh.select(F.col(id_col), F.explode("__sh").alias("w"))
     freq = tok.groupBy("w").agg(F.count("*").alias("df_w"))
@@ -535,8 +551,10 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-    if n_vocab is not None and n_vocab <= mask_vocab_limit:
-        return _jaccard_verify_masks(sh, cands, id_col, threshold)
+    if idx_df is not None and len(vocab) <= mask_vocab_limit:
+        return _jaccard_verify_masks(
+            sh, cands, idx_df, len(vocab), id_col, threshold
+        )
     # full-set verify on the string shingles (no hashing: the counts —
     # and therefore the rounded jaccard — must equal the all-pairs form
     # bit for bit)
@@ -552,19 +570,22 @@ def jaccard_pairs_prefix(
 
 
 def _jaccard_verify_masks(
-    sh: DataFrame, cands: DataFrame, id_col: str, threshold: float
+    sh: DataFrame,
+    cands: DataFrame,
+    idx_df: DataFrame,
+    n_terms: int,
+    id_col: str,
+    threshold: float,
 ) -> DataFrame:
     """Verify prefix candidates on multi-word int64 bitmasks: the
     (collected, <= mask_vocab_limit-term) vocabulary maps each shingle
     to one bit of ceil(v/64) longs, intersection is a popcount-AND per
     word, and the jaccard arithmetic is byte-identical to the
-    string-array form (set counts are set counts). The vocab collect
-    is the dense regime's documented bounded-model-state class, one
-    order larger."""
-    terms, idx_df = _term_index(
-        sh.select(F.explode("__sh").alias("w")).distinct(), "w"
-    )
-    n_words = (len(terms) + 63) // 64
+    string-array form (set counts are set counts). ``idx_df`` is the
+    caller's :func:`_term_index` frame over its ``n_terms`` terms; the
+    vocab collect is the dense regime's documented bounded-model-state
+    class, one order larger."""
+    n_words = (n_terms + 63) // 64
     bit = F.expr("shiftleft(CAST(1 AS BIGINT), __idx % 64)")
     masked = (
         sh.select(
@@ -613,7 +634,7 @@ def _jaccard_verify_masks(
 
 
 def _jaccard_pairs_dense_mask(
-    sh: DataFrame, id_col: str, threshold: float
+    sh: DataFrame, idx_df: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """Dense regime of :func:`jaccard_pairs_prefix`: shingle sets as
     int64 bitmasks over the (collected, <= 64-term) vocabulary; the
@@ -622,9 +643,6 @@ def _jaccard_pairs_dense_mask(
     this regime would tile block x block like cosine_pairs_blocked —
     a 64-token vocabulary makes all-pairs work irreducible either
     way."""
-    _, idx_df = _term_index(
-        sh.select(F.explode("__sh").alias("w")).distinct(), "w"
-    )
     masked = (
         sh.select(F.col(id_col), F.size("__sh").alias("__n"), F.explode("__sh").alias("w"))
         .join(idx_df, "w")
@@ -798,7 +816,8 @@ def tfidf_cosine_pairs(
       :func:`~hummingbirddatapipeline_spark.operators.similarity.cosine_pairs_blocked`
       — tiled numpy GEMM, same rounded-cosine results, ~100x the
       throughput. The regime probe is one bounded
-      ``limit(V+1).count()`` action on the term aggregate.
+      ``limit(V+1).collect()`` of the term aggregate, which is also
+      the dense regime's term dictionary.
 
     Both regimes emit identical results (densification adds exact
     zeros to the dot products); the oracle differential gates them at
@@ -827,15 +846,15 @@ def tfidf_cosine_pairs(
         )
     )
 
-    n_terms = dfreq.select("t").limit(dense_vocab_limit + 1).count()
-    if n_terms <= dense_vocab_limit:
+    vocab, idx_df = _term_index(dfreq.select("t"), "t", dense_vocab_limit)
+    if idx_df is not None:
         # materialize the (doc, term, weight) frame once — the dense
         # branch otherwise re-runs the tokenize+tf scan for the term
         # dictionary collect AND the vector assembly (three corpus
         # scans total, measured ~12 s -> ~7 s cold at sf0.1); at
         # n_docs x |V| <= 4096 rows per doc the checkpoint is tiny
         weighted = weighted.localCheckpoint()
-        return _tfidf_pairs_dense(weighted, id_col, threshold, n_terms)
+        return _tfidf_pairs_dense(weighted, idx_df, len(vocab), id_col, threshold)
 
     norms = weighted.groupBy(id_col).agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
@@ -869,7 +888,11 @@ def tfidf_cosine_pairs(
 
 
 def _tfidf_pairs_dense(
-    weighted: DataFrame, id_col: str, threshold: float, n_terms: int
+    weighted: DataFrame,
+    idx_df: DataFrame,
+    n_terms: int,
+    id_col: str,
+    threshold: float,
 ) -> DataFrame:
     """Dense regime of :func:`tfidf_cosine_pairs`: scatter each doc's
     (term, weight) entries into a dense vector over the (small, sorted)
@@ -878,7 +901,6 @@ def _tfidf_pairs_dense(
         cosine_pairs_blocked,
     )
 
-    _, idx_df = _term_index(weighted.select("t").distinct(), "t")
     entries = (
         weighted.join(idx_df, "t")
         .groupBy(id_col)
@@ -990,15 +1012,11 @@ def incremental_jaccard_dedup(
     # and exact Jaccard collapses to two native bit_counts per pair —
     # cheap enough that the unavoidable all-pairs probe runs at codegen
     # speed (measured 63 s -> ~4 s at sf0.1 on the 31-term corpus).
-    if (
-        dense_vocab_limit > 0
-        and dense_vocab_limit <= 64
-        and store_df.select("w").limit(dense_vocab_limit + 1).count()
-        <= dense_vocab_limit
-    ):
-        verified = _incremental_dense_mask(
-            bsh, store, store_df, id_col, threshold
-        )
+    idx_df = None
+    if 0 < dense_vocab_limit <= 64:
+        _, idx_df = _term_index(store_df.select("w"), "w", dense_vocab_limit)
+    if idx_df is not None:
+        verified = _incremental_dense_mask(bsh, store, idx_df, id_col, threshold)
         return _attach_best_match(batch, verified, id_col, threshold)
 
     btok = bsh.filter(F.col("__n") > 0).select(
@@ -1038,7 +1056,7 @@ def incremental_jaccard_dedup(
 def _incremental_dense_mask(
     bsh: DataFrame,
     store: DataFrame,
-    store_df: DataFrame,
+    idx_df: DataFrame,
     id_col: str,
     threshold: float,
 ) -> DataFrame:
@@ -1050,7 +1068,6 @@ def _incremental_dense_mask(
     batch/store even this regime would tile like cosine_pairs_blocked,
     but a 64-token vocabulary with billions of docs is all-pairs work
     no algorithm can prune, only reorganize."""
-    _, idx_df = _term_index(store_df.select("w"), "w")
     btok = bsh.filter(F.col("__n") > 0).select(
         F.col(id_col), F.explode("__sh").alias("w"), "__n"
     )

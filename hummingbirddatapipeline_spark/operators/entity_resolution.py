@@ -250,8 +250,9 @@ def fuzzy_join_lsh(
         "__id", "__side", F.explode(_char_ngrams(F.col("__norm"), ngram)).alias("__s")
     )
     hashed = tok.select("__id", "__side", F.xxhash64("__s").alias("__h"))
+    # SQL text, as in dedup.minhash_signatures: one JVM call per slot
     sigs = hashed.groupBy("__id", "__side").agg(
-        *[F.min(F.xxhash64("__h", F.lit(i))).alias(f"__m{i}") for i in range(num_hashes)]
+        *[F.expr(f"min(xxhash64(__h, {i})) AS __m{i}") for i in range(num_hashes)]
     )
     rows_per_band = max(1, num_hashes // bands)
     banded = sigs.select(

@@ -483,12 +483,15 @@ def label_propagation(
     neighbor never unlabels), so n_iter bounds the propagation RADIUS
     from the seed set; labels may still flip as fronts collide.
 
-    Scale shape: edges symmetrized + deduped once (localCheckpoint);
-    per round ONE edge-join shuffle + one (node, label) hash aggregate
-    + one per-node argmax window over skinny state — the pagerank
-    iteration pattern, cost n_iter bounded rounds regardless of
-    diameter. Seeds re-clamp with a broadcast-size union, and lineage
-    is cut per round.
+    Scale shape: edges symmetrized by one explode of both directions,
+    edges into seeds dropped and the rest deduped once
+    (localCheckpoint); per round ONE edge join and
+    ONE per-node vote aggregate (``mode`` with its deterministic
+    smallest-value tie rule) over skinny state, no window — the
+    pagerank iteration pattern, cost n_iter bounded rounds regardless
+    of diameter. Seeds re-clamp with a broadcast-size union, and
+    lineage is cut per round. A NULL seed label raises at the seed
+    checkpoint.
 
     Returns (node, label, is_seed) for every node labeled after
     ``n_iter`` rounds (unreached nodes are absent — at 100 TB the
@@ -508,35 +511,43 @@ def label_propagation(
     regimes). Same decision applies to `cluster_size_histogram`
     (r20): exact pairs under the oracle, capped LSH in production.
     """
-    from pyspark.sql.window import Window
-
-    base = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+    # mode() skips NULLs, so a NULL seed label would silently lose
+    # every vote; fail inside the checkpoint the seeds already pay for
+    label = F.col(label_col)
+    seed = seeds.select(
+        F.col(node_col).alias("node"),
+        F.when(
+            label.isNull(),
+            F.raise_error(F.lit("label_propagation: NULL seed label")),
+        )
+        .otherwise(label)
+        .alias("label"),
     ).localCheckpoint()
+    # seeds are clamped, so only edges into non-seed nodes carry a vote;
+    # dropping the rest once keeps the anti-join out of every round
     edges = (
-        base.union(base.select(F.col("v"), F.col("u")))
+        pairs.selectExpr(
+            f"explode(array(named_struct('u', `{id_a}`, 'v', `{id_b}`), "
+            f"named_struct('u', `{id_b}`, 'v', `{id_a}`))) AS e"
+        )
+        .select("e.u", "e.v")
         .filter(F.col("u") != F.col("v"))
+        .join(seed.select(F.col("node").alias("u")), "u", "left_anti")
         .distinct()
         .localCheckpoint()
     )
-    seed = seeds.select(
-        F.col(node_col).alias("node"), F.col(label_col).alias("label")
-    ).localCheckpoint()
     state = seed
-    w = Window.partitionBy("node").orderBy(
-        F.col("__c").desc(), F.col("label")
-    )
     for _ in range(n_iter):
-        votes = (
-            edges.join(state.withColumnRenamed("node", "v"), "v")
-            .groupBy(F.col("u").alias("node"), "label")
-            .agg(F.count("*").alias("__c"))
-        )
+        # shuffle_hash: left to AQE, the join broadcasts whichever side's
+        # shuffle finishes first, so a rebuild can plan (and compile)
+        # differently; the hint fixes the strategy, and the labeled
+        # state is not broadcast-size at scale anyway.
+        # mode(deterministic): most votes, ties to the smallest label
+        voters = state.withColumnRenamed("node", "v").hint("shuffle_hash")
         prop = (
-            votes.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select("node", "label")
-            .join(seed.select("node"), "node", "left_anti")
+            edges.join(voters, "v")
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.mode("label", deterministic=True).alias("label"))
         )
         state = seed.unionByName(prop).localCheckpoint()
     return state.join(

@@ -36,69 +36,6 @@ def with_prior_fields(
     return df.withColumns(cols)
 
 
-def annualized_growth(curr: Column, prior: Column, years_gap: Column) -> Column:
-    """W1 — gap-annualized growth ``(curr/prior)^(1/gap) - 1``.
-
-    NULL when prior is NULL/0; NaN (negative base, fractional exponent —
-    the reference's complex-number case, 990.py:751) mapped to NULL.
-    """
-    growth = F.pow(curr / prior, F.lit(1.0) / years_gap) - F.lit(1.0)
-    guarded = F.when(F.isnan(growth), F.lit(None).cast("double")).otherwise(growth)
-    return F.when(
-        prior.isNull() | (prior == 0) | curr.isNull(), F.lit(None).cast("double")
-    ).otherwise(guarded)
-
-
-def signed_crossing_trend(curr: Column, prior: Column, years_gap: Column) -> Column:
-    """W3 — net-asset-style trend with sign-crossing special cases.
-
-    Parity: 990.py:1013-1023 / ipeds_v5.py:1007-1017:
-      +/+   -> annualized growth
-      + -> - -> -0.30 (severe)
-      - and worse -> -0.20; - and better -> 0.05
-      else -> -0.10 if curr <= 0 else 0.0
-    """
-    growth = F.pow(curr / prior, F.lit(1.0) / years_gap) - F.lit(1.0)
-    growth = F.when(F.isnan(growth), F.lit(None).cast("double")).otherwise(growth)
-    return (
-        F.when(curr.isNull() | prior.isNull(), F.lit(None).cast("double"))
-        .when((prior > 0) & (curr > 0), growth)
-        .when((prior > 0) & (curr <= 0), F.lit(-0.30))
-        .when((prior < 0) & (curr < prior), F.lit(-0.20))
-        .when((prior < 0) & (curr > prior), F.lit(0.05))
-        .when(curr <= 0, F.lit(-0.10))
-        .otherwise(F.lit(0.0))
-    )
-
-
-def long_window_change(
-    df: DataFrame, entity_col: str, year_col: str, field: str, out_col: str
-) -> DataFrame:
-    """W2 — oldest-available vs current value ratio change
-    (4-yr enrollment trend parity: ipeds.py:722-737)."""
-    w = (
-        entity_year_window(entity_col, year_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    first = F.first(field, ignorenulls=True).over(w)
-    return df.withColumn(
-        out_col,
-        F.when(
-            first.isNull() | (first == 0) | F.col(field).isNull(),
-            F.lit(None).cast("double"),
-        ).otherwise((F.col(field) - first) / F.abs(first)),
-    )
-
-
-def diff_per_year(curr: Column, prior: Column, years_gap: Column) -> Column:
-    """W6 — points-per-year difference trend (retention parity:
-    ipeds.py:862-869)."""
-    return F.when(
-        curr.isNull() | prior.isNull() | years_gap.isNull() | (years_gap == 0),
-        F.lit(None).cast("double"),
-    ).otherwise((curr - prior) / years_gap)
-
-
 def latest_per_entity(
     df: DataFrame,
     entity_col: str,

@@ -9,6 +9,7 @@ year/date-partitioned parquet or Delta; the API is unchanged.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,13 +113,16 @@ _FANOUT_MIN_WIDTH = 16
 
 _fanout_cache: dict[tuple[str, int, int, bool], int] = {}
 
-# inline_rows literal-size cap (ADVICE r15): the exploded literal wins
-# only while the expression tree stays small — measured crossover vs
-# createDataFrame sits between 16 and 256 rows depending on how often
-# the frame re-executes, and the literal's cost grows super-linearly
-# past it (12 s at 1024 rows, 35 s at 4096). 256 keeps every r15
-# conversion site (1-31 actual rows at bench scale) on the literal
-# path while bounding the worst case at the mask/dense vocab caps.
+# inline_rows literal-size cap (ADVICE r15). Built as one Column per
+# node, the literal cost 2.6 s of Python-side build at 256 rows, 6.4 s at
+# 1024 and 32 s at 4096 (py4j calls, super-linear). As one SQL text it
+# costs 0.14, 0.28 and 1.0 s. A broadcast join against the frame then
+# runs 0.28 / 0.24 / 0.46 s against 0.46 / 0.37 / 0.44 s for
+# createDataFrame, whose build is 0.02-0.05 s (local[4], 4 vCPU, one
+# run each, two-column (string, int) rows). So the literal wins at 256
+# rows, breaks even near 1024 and loses at 4096: the cap stays at 256,
+# which keeps every conversion site (1-31 rows at bench scale) on the
+# literal path.
 _INLINE_ROWS_MAX = 256
 
 
@@ -138,6 +142,10 @@ def inline_rows(
     Building the same rows as one exploded array-of-structs literal
     keeps the data in the plan: zero Python tasks, one local
     partition, and the frame broadcasts exactly like any LocalRelation.
+    The literal goes to the JVM as one SQL text (strings as UTF-8 hex,
+    see :func:`_sql_literal`), not one Column per value: constant
+    folding gives the same plan, for a few py4j calls instead of
+    several per value.
 
     ``schema`` is the simple "name primitivetype, name primitivetype"
     DDL string the call sites already use; values must be plain Python
@@ -165,26 +173,45 @@ def inline_rows(
                 f"{len(fields)} schema fields"
             )
     if not rows or len(rows) > _INLINE_ROWS_MAX:
-        # Empty literal arrays can't carry the struct type, and LARGE
-        # literals invert the trade (ADVICE r15, measured r16): the
-        # ~3N-expression array-of-structs costs super-linear driver
-        # analysis per pass once N reaches the vocab caps — 1024 rows
-        # ≈ 12 s, 4096 ≈ 35 s per execution vs ~0.4 s for the classic
-        # path — so both ends fall back to createDataFrame.
+        # Empty literal arrays can't carry the struct type, and large
+        # literals invert the trade (see _INLINE_ROWS_MAX), so both
+        # ends fall back to createDataFrame.
         return spark.createDataFrame(rows, schema)
-    structs = [
-        F.struct(
-            *[
-                F.lit(v).cast(dtype).alias(name)
-                for v, (name, dtype) in zip(row, fields)
-            ]
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(
+            f"'{name}', CAST({_sql_literal(v)} AS {dtype})"
+            for v, (name, dtype) in zip(row, fields)
         )
+        + ")"
         for row in rows
-    ]
+    )
     return (
         spark.range(1)
-        .select(F.explode(F.array(*structs)).alias("__r"))
-        .select(*[F.col(f"__r.{name}") for name, _ in fields])
+        .selectExpr(f"explode(array({structs})) AS __r")
+        .selectExpr(*[f"__r.{name}" for name, _ in fields])
+    )
+
+
+def _sql_literal(v) -> str:
+    """SQL text of one plain Python scalar for :func:`inline_rows`,
+    which casts it to the field's type. Strings travel as their UTF-8
+    bytes in hex (a binary literal), so no character needs escaping;
+    floats carry the ``D`` suffix (a bare ``0.1`` parses as
+    a decimal) and ``repr`` round-trips them exactly."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, str):
+        return f"X'{v.encode('utf-8').hex()}'"
+    raise ValueError(
+        f"inline_rows supports None, bool, int, float and str values; got "
+        f"{type(v).__name__} — use createDataFrame for other types"
     )
 
 
@@ -296,22 +323,6 @@ def cpu_bound(df: DataFrame, *keys: str) -> DataFrame:
     large enough that this is a cheap rebalance, not a fan-out.
     """
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every canonical table present in ``sf_dir``."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = load(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views so ``spark.sql`` can use them."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_versioned(df: DataFrame, base_dir: str) -> str:

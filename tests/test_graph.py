@@ -256,3 +256,68 @@ def test_precomputed_labels_params_equal_inline_closure(spark, sf_dir):
         ).collect()
     )
     assert s1 == s2
+
+
+def _lp_reference(edges, seeds, n_iter):
+    """Pure-Python label propagation: synchronous rounds over the
+    deduped undirected graph, seeds clamped, each non-seed node with a
+    labeled neighbor taking the most frequent neighbor label, ties to
+    the smallest label."""
+    from collections import Counter, defaultdict
+
+    nbrs = defaultdict(set)
+    for a, b in edges:
+        if a != b:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    state = dict(seeds)
+    for _ in range(n_iter):
+        nxt = dict(seeds)
+        for node, ns in nbrs.items():
+            votes = Counter(state[v] for v in ns if v in state)
+            if node not in seeds and votes:
+                nxt[node] = min(votes, key=lambda lab: (-votes[lab], lab))
+        state = nxt
+    return state
+
+
+def test_label_propagation_three_label_ties_match_reference(spark):
+    """Three labels on a hand-made tie star (node 0 hears one vote each
+    for c, a and b) plus a seeded random graph: every round count
+    equals the pure-Python reference of the synchronous clamped rounds,
+    ties resolved to the lexically smallest label."""
+    import random
+
+    from hummingbirddatapipeline_spark.operators.graph import label_propagation
+
+    rng = random.Random(11)
+    star = [(0, 1), (0, 2), (0, 3), (4, 0)]
+    rand = [(rng.randrange(100, 140), rng.randrange(100, 140)) for _ in range(90)]
+    edges = star + rand + rand[:10]  # duplicates and self loops included
+    seeds = {1: "c", 2: "a", 3: "b"}
+    seeds.update({n: rng.choice("abc") for n in rng.sample(range(100, 140), 9)})
+    edf = spark.createDataFrame(edges, "id_a long, id_b long")
+    sdf = spark.createDataFrame(sorted(seeds.items()), "node long, label string")
+    for n_iter in (1, 2, 3):
+        got = {
+            r["node"]: (r["label"], r["is_seed"])
+            for r in label_propagation(edf, sdf, n_iter=n_iter).collect()
+        }
+        want = _lp_reference(edges, seeds, n_iter)
+        assert got == {k: (v, k in seeds) for k, v in want.items()}, n_iter
+        assert got[0] == ("a", False)
+
+
+def test_label_propagation_rejects_null_seed_label(spark):
+    """A NULL seed label fails the build instead of silently losing
+    every vote it should have cast."""
+    import pytest
+
+    from hummingbirddatapipeline_spark.operators.graph import label_propagation
+
+    edges = spark.createDataFrame([(0, 1), (1, 2)], "id_a long, id_b long")
+    seeds = spark.createDataFrame(
+        [(0, "good"), (2, None)], "node long, label string"
+    )
+    with pytest.raises(Exception, match="NULL seed label"):
+        label_propagation(edges, seeds, n_iter=2)

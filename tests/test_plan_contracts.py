@@ -1151,6 +1151,23 @@ def test_990_single_ein_exchange(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning(ein") == 1, plan
 
 
+def _assert_pin_uncoalesced(df, partitioning: str) -> None:
+    """``df``'s final plan holds exactly one ``partitioning`` pin, and
+    the operator reading its query stage is not an AQEShuffleRead: the
+    stage above the pin kept its explicit width after AQE."""
+    lines = _final_physical(df).splitlines()
+    at = [
+        i
+        for i, line in enumerate(lines)
+        if f"Exchange {partitioning}, REPARTITION_BY_NUM" in line
+    ]
+    assert len(at) == 1, lines
+    # the exchange's query stage, then the operator that reads it
+    stage, reader = lines[at[0] - 1], lines[at[0] - 2]
+    assert "ShuffleQueryStage" in stage, lines
+    assert "AQEShuffleRead" not in reader, lines
+
+
 def test_990_window_keeps_core_width_after_aqe(spark, sf_dir):
     """The cpu_bound pin's effect at run time: AQE coalesces the 990
     aggregate's shuffle read by bytes, but the window stage reads the
@@ -1162,15 +1179,24 @@ def test_990_window_keeps_core_width_after_aqe(spark, sf_dir):
     # __wrapped__: executing the session's cached plan would make its
     # adaptive plan final under the other contracts
     df = scoring_q.scoring_990_model.__wrapped__(spark, sf_dir)
-    lines = _final_physical(df).splitlines()
-    ein = [
-        i
-        for i, line in enumerate(lines)
-        if f"Exchange hashpartitioning(ein, {n}), REPARTITION_BY_NUM" in line
-    ]
-    assert len(ein) == 1, lines
-    # the exchange's query stage, then the operator that reads it
-    stage, reader = lines[ein[0] - 1], lines[ein[0] - 2]
-    assert "ShuffleQueryStage" in stage, lines
-    assert "AQEShuffleRead" not in reader, lines
+    _assert_pin_uncoalesced(df, f"hashpartitioning(ein, {n})")
     assert df._jdf.queryExecution().executedPlan().execute().getNumPartitions() == n
+
+
+@pytest.mark.parametrize(
+    "build, keys",
+    [
+        pytest.param(_pin_lsh_buckets, "band, bucket", id="lsh_buckets"),
+        pytest.param(_pin_minhash_verify, None, id="minhash_verify"),
+        pytest.param(_pin_dense_mask, None, id="dense_mask"),
+    ],
+)
+def test_dedup_pin_keeps_core_width_after_aqe(spark, sf_dir, build, keys):
+    """The dedup path's pins at run time: the LSH bucket aggregate, the
+    batch MinHash verify and the dense-mask probe each read their
+    pinned exchange uncoalesced in the final plan."""
+    n = spark.sparkContext.defaultParallelism
+    _assert_pin_uncoalesced(
+        build(spark, sf_dir),
+        f"hashpartitioning({keys}, {n})" if keys else f"RoundRobinPartitioning({n})",
+    )

@@ -8,7 +8,7 @@ import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-from profile_query import codegen_compiles  # noqa: E402
+from profile_query import codegen_compiles, jvm_calls  # noqa: E402
 
 
 def test_rebuilt_dedup_pass_compiles_nothing(spark, sf_dir):
@@ -32,3 +32,29 @@ def test_rebuilt_dedup_pass_compiles_nothing(spark, sf_dir):
             op(spark, sf_dir).write.format("noop").mode("overwrite").save()
         compiled.append(codegen_compiles(spark)[0] - before)
     assert compiled[1] == 0, compiled
+
+
+def test_dedup_builds_stay_under_jvm_call_budget(spark, sf_dir):
+    """Plan-construction work per rebuilt dedup plan, in py4j calls: the
+    wide MinHash and term-index expression lists travel to the JVM as
+    SQL text and each vocabulary is collected once. Going back to one
+    Column per node (32 min-hash slots, 8 band keys, a struct per
+    vocabulary term) overruns the budget. The first build warms
+    one-time lookups, so the second is the one counted."""
+    from hummingbirddatapipeline_spark.catalog import dedup_q
+
+    budgets = {
+        # 3,391 calls with a Column per node; 1,540 as SQL text
+        "dedup_minhash_pairs": 1700,
+        # 2,614 calls with a Column per node and a second vocabulary
+        # collect; 682 as SQL text with one collect
+        "shared_jaccard_pairs": 760,
+    }
+    used = {}
+    for name in budgets:
+        build = getattr(dedup_q, name).__wrapped__
+        build(spark, sf_dir)
+        before = jvm_calls(spark)
+        build(spark, sf_dir)
+        used[name] = jvm_calls(spark) - before
+    assert all(used[n] <= budgets[n] for n in budgets), used

@@ -238,3 +238,37 @@ def test_inline_rows_matches_create_dataframe_and_validates(spark):
     df = inline_rows(spark, big, "w string, n int")
     assert "explode" not in df._jdf.queryExecution().analyzed().toString()
     assert df.count() == len(big)
+
+
+def test_inline_rows_sql_text_round_trips_awkward_values(spark):
+    """inline_rows writes its literal as SQL text: quotes, backslashes,
+    newlines, non-ASCII and empty strings, NULLs, negative and 64-bit
+    ints, doubles and booleans all collect equal to createDataFrame;
+    other value types raise."""
+    import datetime
+
+    import pytest
+
+    from hummingbirddatapipeline_spark.tables import inline_rows
+
+    schema = "s string, i int, l long, d double, b boolean"
+    rows = [
+        ("it's", -7, -(2**63), 0.1, True),
+        ("back\\slash \\' mix", 0, 2**62, -1.5e-300, False),
+        ("line\nbreak\ttab", 2**31 - 1, -1, 1e300, None),
+        ("naïve café ∑ 😀", -(2**31), None, -0.0, True),
+        ("", None, 0, float("inf"), False),
+        (None, 1, 42, None, None),
+        ("X'00' AS s) --", 3, 3, float("-inf"), True),
+    ]
+    got = inline_rows(spark, rows, schema)
+    exp = spark.createDataFrame(rows, schema)
+    assert got.columns == exp.columns
+    assert [f.dataType for f in got.schema] == [f.dataType for f in exp.schema]
+    key = lambda t: repr(t)  # noqa: E731 — None-safe total order
+    assert sorted(map(tuple, got.collect()), key=key) == sorted(
+        map(tuple, exp.collect()), key=key
+    )
+    assert sorted(map(tuple, got.collect()), key=key) == sorted(rows, key=key)
+    with pytest.raises(ValueError, match="bool, int, float and str"):
+        inline_rows(spark, [(datetime.date(2024, 1, 1),)], "d date")

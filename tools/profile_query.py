@@ -19,7 +19,9 @@ rebuild pass of ``perfbench`` or ``bench.py``.
 classes Janino compiled and their milliseconds (a rebuilt pass counts
 build and execution). A class served from Spark's codegen cache is not
 compiled, so a rebuilt pass that compiles anything recompiled classes
-the cache had evicted.
+the cache had evicted. ``jvm`` gives the py4j calls each build sent to
+the JVM (see :func:`jvm_calls`): the Python-side cost of constructing
+the plan, one or more calls per Column node or DataFrame method.
 
 With --explain DIR the formatted physical plan of each query is also
 written to DIR/<query>.txt (the plan artifact of an optimization
@@ -35,6 +37,8 @@ import os
 import sys
 import time
 import urllib.request
+
+from py4j import protocol
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -56,6 +60,30 @@ def codegen_compiles(spark) -> tuple[int, float]:
     n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
     ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
     return int(n), ns / 1e6
+
+
+# the object releases Python's garbage collector sends: their number
+# depends on when it runs, so they are left out of the count
+_RELEASE = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+
+
+def jvm_calls(spark) -> int:
+    """py4j commands this process has sent to the JVM since the first
+    call, object releases excluded. The first call wraps the gateway
+    client's ``send_command`` with a counter; later calls read it."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    if not hasattr(send, "calls"):
+        inner = send
+
+        def send(command, *args, **kwargs):
+            if not command.startswith(_RELEASE):
+                send.calls += 1
+            return inner(command, *args, **kwargs)
+
+        send.calls = 0
+        client.send_command = send
+    return send.calls
 
 
 def main() -> None:
@@ -106,9 +134,11 @@ def main() -> None:
 
     for name in args.queries:
         c0 = codegen_compiles(spark)
+        j0 = jvm_calls(spark)
         t0 = time.perf_counter()
         df = runnable[name](spark, sf_dir)
         build = time.perf_counter() - t0
+        jvm = jvm_calls(spark) - j0
         compiles = [f"build={compiled_since(c0)}"]
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
@@ -131,7 +161,7 @@ def main() -> None:
             + " ".join(f"{w:.3f}" for w in warms)
             + f"  min={min(warms):.3f}"
         )
-        print("   compiles " + " ".join(compiles))
+        print("   compiles " + " ".join(compiles) + f"  jvm build={jvm}")
         try:
             all_jobs = {j["jobId"]: j for j in _rest(spark, "jobs")}
             stage_ids = sorted(
@@ -178,11 +208,14 @@ def main() -> None:
         per_query = []
         for name in args.queries:
             c0 = codegen_compiles(spark)
+            j0 = jvm_calls(spark)
             t0 = time.perf_counter()
-            one_pass(runnable[name](spark, sf_dir), f"{name}:rebuilt{i}")
+            df = runnable[name](spark, sf_dir)
+            jvm = jvm_calls(spark) - j0
+            one_pass(df, f"{name}:rebuilt{i}")
             dt = time.perf_counter() - t0
             total += dt
-            per_query.append(f"{name}={dt:.3f}s/{compiled_since(c0)}")
+            per_query.append(f"{name}={dt:.3f}s/{compiled_since(c0)}/jvm={jvm}")
         print(
             f"== rebuilt{i}  {total:.3f}s  compiles={compiled_since(p0)}  "
             + " ".join(per_query)
