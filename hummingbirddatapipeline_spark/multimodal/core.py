@@ -401,14 +401,12 @@ def phash_near_dup_pairs(
             stacklevel=2,
         )
 
-    def band_val(i: int):
-        return F.shiftrightunsigned(F.col("phash"), i * width).bitwiseAND(
-            F.lit(mask).cast("long")
-        )
+    def band_val(i: int) -> str:
+        return f"(shiftrightunsigned(phash, {i * width}) & CAST({mask} AS BIGINT))"
 
     if combinatorial:
         keys = [
-            F.shiftleft(band_val(i), width).bitwiseOR(band_val(j))
+            f"(shiftleft({band_val(i)}, {width}) | {band_val(j)})"
             for i in range(bands)
             for j in range(i + 1, bands)
         ]

@@ -28,11 +28,18 @@ operator below calls it:
   a broadcast ``(term, __idx)`` frame for the bitmask and dense-TF-IDF
   regimes; its one bounded ``limit(L+1)`` collect per vocabulary also
   decides the regime, so no operator counts the vocabulary first;
+- bitmask sets: :func:`_term_masks` (token sets as ``ceil(v/64)``
+  int64 words over the term index) and :func:`_mask_inter` (the
+  popcount-AND intersect), behind the dense all-pairs regime and the
+  mask verify of :func:`jaccard_pairs_prefix` (both
+  :func:`_jaccard_pairs_masked`) and the dense regime of
+  :func:`incremental_jaccard_dedup`;
 - prefix bound: :func:`_prefix_tokens`, the AllPairs
   ``n - floor(t*n) + 1`` rarest-token prefix;
 - Jaccard ratio: :func:`_jaccard_at_least` (``inter / (n_a + n_b -
   inter) >= t``) and :func:`_jaccard_pairs` (plus the 6dp
-  ``(id_a, id_b, jaccard)`` tail);
+  ``(id_a, id_b, jaccard)`` tail), for every exact engine and for
+  :func:`jaccard_verify`;
 - hashed verify: :func:`_hashed_set` and the :func:`_size_ratio_ok`
   prefilter, shared by :func:`jaccard_verify` (the batch MinHash
   verify) and :func:`incremental_minhash_dedup`.
@@ -85,13 +92,10 @@ def _minhash_banded(
     band index."""
     _check_banding(num_hashes, bands)
     r = num_hashes // bands
-    # SQL text: one JVM call per key instead of one per Column node
     keys = [
-        F.expr(
-            "xxhash64("
-            + ", ".join(f"element_at(signature, {b * r + j + 1})" for j in range(r))
-            + ")"
-        )
+        "xxhash64("
+        + ", ".join(f"element_at(signature, {b * r + j + 1})" for j in range(r))
+        + ")"
         for b in range(bands)
     ]
     return band_explode(signatures, id_col, keys, id_alias)
@@ -167,11 +171,13 @@ def _jaccard_at_least(
 ) -> DataFrame:
     """``jaccard = inter / (n_a + n_b - inter)`` kept at ``>= threshold``,
     from exact integer set sizes and intersection count. ``inter`` is
-    computed into the ``inter`` column when given, else read from it."""
+    computed into the ``inter`` column when given, else read from it.
+    Two empty sets have no ratio: ``try_divide`` makes it NULL and the
+    filter drops the pair, where an ANSI ``/`` would raise."""
     if inter is not None:
         frame = frame.withColumn("inter", inter)
     return frame.withColumn(
-        "jaccard", F.col("inter") / (n_a + n_b - F.col("inter"))
+        "jaccard", F.try_divide(F.col("inter"), n_a + n_b - F.col("inter"))
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -347,24 +353,18 @@ def jaccard_verify(
     # cpu_bound (r15): dedup_minhash_pairs ran its per-pair verify on
     # 8 tasks behind a 1-task candidate exchange.
     candidates = cpu_bound(candidates)
-    out = (
+    return _jaccard_pairs(
         candidates.join(
             sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
         )
         .join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
         # measured at sf0.1: 1.29M LSH candidates → 643k intersects
-        .filter(_size_ratio_ok(F.size("sh_a"), F.size("sh_b"), threshold))
-        .withColumn(
-            "inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        )
-        .withColumn(
-            "union_", F.size("sh_a") + F.size("sh_b") - F.col("inter")
-        )
-        .withColumn("jaccard", F.try_divide(F.col("inter"), F.col("union_")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+        .filter(_size_ratio_ok(F.size("sh_a"), F.size("sh_b"), threshold)),
+        F.size("sh_a"),
+        F.size("sh_b"),
+        threshold,
+        inter=F.size(F.array_intersect("sh_a", "sh_b")),
     )
-    return out
 
 
 def near_dup_pairs_minhash(
@@ -521,7 +521,7 @@ def jaccard_pairs_prefix(
             max(dense_vocab_limit, mask_vocab_limit),
         )
         if 0 < len(vocab) <= min(dense_vocab_limit, 64):
-            return _jaccard_pairs_dense_mask(sh, idx_df, id_col, threshold)
+            return _jaccard_pairs_masked(sh, idx_df, len(vocab), id_col, threshold)
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("n"))
     tok = sh.select(F.col(id_col), F.explode("__sh").alias("w"))
     freq = tok.groupBy("w").agg(F.count("*").alias("df_w"))
@@ -551,9 +551,9 @@ def jaccard_pairs_prefix(
         .select("id_a", "id_b")
         .distinct()
     )
-    if idx_df is not None and len(vocab) <= mask_vocab_limit:
-        return _jaccard_verify_masks(
-            sh, cands, idx_df, len(vocab), id_col, threshold
+    if idx_df is not None and 0 < len(vocab) <= mask_vocab_limit:
+        return _jaccard_pairs_masked(
+            sh, idx_df, len(vocab), id_col, threshold, cands
         )
     # full-set verify on the string shingles (no hashing: the counts —
     # and therefore the rounded jaccard — must equal the all-pairs form
@@ -569,108 +569,95 @@ def jaccard_pairs_prefix(
     )
 
 
-def _jaccard_verify_masks(
-    sh: DataFrame,
-    cands: DataFrame,
+def _term_masks(
+    tok: DataFrame,
     idx_df: DataFrame,
-    n_terms: int,
-    id_col: str,
-    threshold: float,
+    keys: list[str],
+    n_words: int,
+    how: str = "inner",
 ) -> DataFrame:
-    """Verify prefix candidates on multi-word int64 bitmasks: the
-    (collected, <= mask_vocab_limit-term) vocabulary maps each shingle
-    to one bit of ceil(v/64) longs, intersection is a popcount-AND per
-    word, and the jaccard arithmetic is byte-identical to the
-    string-array form (set counts are set counts). ``idx_df`` is the
-    caller's :func:`_term_index` frame over its ``n_terms`` terms; the
-    vocab collect is the dense regime's documented bounded-model-state
-    class, one order larger."""
-    n_words = (n_terms + 63) // 64
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), __idx % 64)")
-    masked = (
-        sh.select(
-            F.col(id_col),
-            F.size("__sh").alias("__n"),
-            F.explode("__sh").alias("w"),
-        )
-        .join(idx_df, "w")
-        .groupBy(id_col, "__n")
+    """``(keys…, __m0…__m{n_words-1})``: each key group's ``w`` tokens
+    as bits of ``n_words`` int64 words, term ``__idx`` at bit
+    ``__idx % 64`` of word ``__idx DIV 64`` (bit 63 is the sign bit).
+    ``idx_df`` is a :func:`_term_index` frame; a token outside its
+    vocabulary sets no bit, and under ``how="left"`` a group with no
+    token inside it still gets a row of zero words."""
+    # bit_or, not sum: OR is idempotent, so a repeated token sets its
+    # bit once where a sum would carry into the next bit
+    return (
+        tok.join(idx_df, "w", how)
+        .groupBy(*keys)
         .agg(
             *[
-                F.coalesce(
-                    F.bit_or(
-                        F.when(F.col("__idx") - (F.col("__idx") % 64) == 64 * j, bit)
-                    ),
-                    F.lit(0).cast("long"),
-                ).alias(f"__m{j}")
+                F.expr(
+                    f"bit_or(CASE WHEN __idx DIV 64 = {j} THEN "
+                    "shiftleft(CAST(1 AS BIGINT), __idx % 64) "
+                    f"ELSE CAST(0 AS BIGINT) END) AS __m{j}"
+                )
                 for j in range(n_words)
             ]
         )
     )
-    a = masked.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__n").alias("__na"),
-        *[F.col(f"__m{j}").alias(f"__a{j}") for j in range(n_words)],
-    )
-    b = masked.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__n").alias("__nb"),
-        *[F.col(f"__m{j}").alias(f"__b{j}") for j in range(n_words)],
-    )
-    inter = sum(
-        (
-            F.bit_count(F.col(f"__a{j}").bitwiseAND(F.col(f"__b{j}")))
-            for j in range(n_words)
-        ),
-        F.lit(0),
-    )
-    return _jaccard_pairs(
-        cands.join(a, "id_a").join(b, "id_b"),
-        F.col("__na"),
-        F.col("__nb"),
-        threshold,
-        inter=inter,
-    )
 
 
-def _jaccard_pairs_dense_mask(
-    sh: DataFrame, idx_df: DataFrame, id_col: str, threshold: float
+def _mask_inter(a: str, b: str, n_words: int) -> Column:
+    """|A ∩ B| of two sides' :func:`_term_masks` words ``{a}{j}`` and
+    ``{b}{j}``: the popcount of their AND, summed over the words."""
+    return F.expr(" + ".join(f"bit_count({a}{j} & {b}{j})" for j in range(n_words)))
+
+
+def _jaccard_pairs_masked(
+    sh: DataFrame,
+    idx_df: DataFrame,
+    n_terms: int,
+    id_col: str,
+    threshold: float,
+    cands: DataFrame | None = None,
 ) -> DataFrame:
-    """Dense regime of :func:`jaccard_pairs_prefix`: shingle sets as
-    int64 bitmasks over the (collected, <= 64-term) vocabulary; the
-    self-join is a broadcast product of two skinny (id, mask, n)
-    frames with two native bit_counts per pair. At a truly huge corpus
-    this regime would tile block x block like cosine_pairs_blocked —
-    a 64-token vocabulary makes all-pairs work irreducible either
-    way."""
-    masked = (
-        sh.select(F.col(id_col), F.size("__sh").alias("__n"), F.explode("__sh").alias("w"))
-        .join(idx_df, "w")
-        .groupBy(id_col, "__n")
-        .agg(
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), __idx)"))
-            .cast("long")
-            .alias("__mask")
+    """Exact Jaccard of :func:`jaccard_pairs_prefix` on
+    :func:`_term_masks` bitmasks over ``idx_df``'s ``n_terms``
+    collected terms: ceil(v/64) longs per doc and the same integer
+    counts, so the same 6dp jaccard, as the string-array verify.
+
+    With ``cands`` it verifies those prefix candidates. Without, it is
+    the dense regime (v <= 64, one word): every pair is probed as a
+    broadcast product of two skinny (id, n, mask) frames. At a truly
+    huge corpus that regime would tile block x block like
+    cosine_pairs_blocked; a 64-token vocabulary makes all-pairs work
+    irreducible either way."""
+    n_words = (n_terms + 63) // 64
+    masked = _term_masks(
+        sh.select(
+            F.col(id_col), F.size("__sh").alias("__n"), F.explode("__sh").alias("w")
+        ),
+        idx_df,
+        [id_col, "__n"],
+        n_words,
+    )
+
+    def side(frame: DataFrame, s: str) -> DataFrame:
+        return frame.selectExpr(
+            f"`{id_col}` AS id_{s}",
+            f"__n AS __n{s}",
+            *[f"__m{j} AS __{s}{j}" for j in range(n_words)],
         )
-    )
-    # cpu_bound the probe side BEFORE the broadcast product: the sf0.1
-    # shared pair build spent ~7-12 s in a single-task 25M-probe stage.
-    a = cpu_bound(masked).select(
-        F.col(id_col).alias("id_a"),
-        F.col("__mask").alias("__ma"),
-        F.col("__n").alias("__na"),
-    )
-    b = masked.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__mask").alias("__mb"),
-        F.col("__n").alias("__nb"),
-    )
+
+    if cands is None:
+        # cpu_bound the probe side BEFORE the broadcast product: the sf0.1
+        # shared pair build spent ~7-12 s in a single-task 25M-probe stage.
+        pairs = (
+            side(cpu_bound(masked), "a")
+            .crossJoin(F.broadcast(side(masked, "b")))
+            .filter(F.col("id_a") < F.col("id_b"))
+        )
+    else:
+        pairs = cands.join(side(masked, "a"), "id_a").join(side(masked, "b"), "id_b")
     return _jaccard_pairs(
-        a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b")),
+        pairs,
         F.col("__na"),
         F.col("__nb"),
         threshold,
-        inter=F.bit_count(F.col("__ma").bitwiseAND(F.col("__mb"))),
+        inter=_mask_inter("__a", "__b", n_words),
     )
 
 
@@ -1012,16 +999,35 @@ def incremental_jaccard_dedup(
     # and exact Jaccard collapses to two native bit_counts per pair —
     # cheap enough that the unavoidable all-pairs probe runs at codegen
     # speed (measured 63 s -> ~4 s at sf0.1 on the 31-term corpus).
+    # The probe is a broadcast nested-loop over two skinny (id, mask)
+    # frames; at a truly huge batch and store it would tile like
+    # cosine_pairs_blocked, but a 64-token vocabulary over billions of
+    # docs is all-pairs work no algorithm can prune, only reorganize.
     idx_df = None
     if 0 < dense_vocab_limit <= 64:
         _, idx_df = _term_index(store_df.select("w"), "w", dense_vocab_limit)
-    if idx_df is not None:
-        verified = _incremental_dense_mask(bsh, store, idx_df, id_col, threshold)
-        return _attach_best_match(batch, verified, id_col, threshold)
-
     btok = bsh.filter(F.col("__n") > 0).select(
         F.col(id_col), F.explode("__sh").alias("w"), "__n"
     )
+    stok = store.select(
+        "store_id", F.explode("store_sh").alias("w"), "store_n"
+    )
+    if idx_df is not None:
+        # __n counts every batch token, so |A∪B| stays exact; the left
+        # join keeps a doc whose tokens all miss the store vocabulary
+        bmask = _term_masks(btok, idx_df, [id_col, "__n"], 1, "left")
+        smask = _term_masks(
+            stok, idx_df, ["store_id", "store_n"], 1
+        ).selectExpr("store_id", "store_n", "__m0 AS __s0")
+        verified = _jaccard_at_least(
+            bmask.crossJoin(F.broadcast(smask)),
+            F.col("__n"),
+            F.col("store_n"),
+            threshold,
+            inter=_mask_inter("__m", "__s", 1),
+        ).select(id_col, "store_id", "jaccard")
+        return _attach_best_match(batch, verified, id_col, threshold)
+
     probe = _prefix_tokens(
         btok.join(store_df, "w", "left").withColumn(
             "df_w", F.coalesce("df_w", F.lit(0))
@@ -1030,9 +1036,6 @@ def incremental_jaccard_dedup(
         "__n",
         threshold,
     ).select(F.col(id_col), "w")
-    stok = store.select(
-        "store_id", F.explode("store_sh").alias("w"), "store_n"
-    )
     store_pref = _prefix_tokens(
         stok.join(store_df, "w"), "store_id", "store_n", threshold
     ).select("store_id", "w")
@@ -1051,60 +1054,6 @@ def incremental_jaccard_dedup(
         inter=F.size(F.array_intersect("__sh", "store_sh")),
     )
     return _attach_best_match(batch, verified, id_col, threshold)
-
-
-def _incremental_dense_mask(
-    bsh: DataFrame,
-    store: DataFrame,
-    idx_df: DataFrame,
-    id_col: str,
-    threshold: float,
-) -> DataFrame:
-    """Dense regime of :func:`incremental_jaccard_dedup`: token sets as
-    int64 bitmasks over the (<= 64-term) store vocabulary; batch-only
-    tokens ride an ``extra`` count so |A∪B| stays exact. Returns the
-    verified (id, store_id, jaccard) frame. The probe is a broadcast
-    nested-loop over two skinny (id, mask) frames — at a truly huge
-    batch/store even this regime would tile like cosine_pairs_blocked,
-    but a 64-token vocabulary with billions of docs is all-pairs work
-    no algorithm can prune, only reorganize."""
-    btok = bsh.filter(F.col("__n") > 0).select(
-        F.col(id_col), F.explode("__sh").alias("w"), "__n"
-    )
-    bmask = (
-        btok.join(idx_df, "w", "left")
-        .groupBy(id_col, "__n")
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("__idx").isNotNull(),
-                        F.expr("shiftleft(CAST(1 AS BIGINT), __idx)"),
-                    )
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("__mask")
-        )
-    )
-    smask = (
-        store.select("store_id", F.explode("store_sh").alias("w"), "store_n")
-        .join(idx_df, "w")
-        .groupBy("store_id", "store_n")
-        .agg(
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), __idx)"))
-            .cast("long")
-            .alias("__smask")
-        )
-    )
-    return _jaccard_at_least(
-        bmask.crossJoin(F.broadcast(smask)),
-        F.col("__n"),
-        F.col("store_n"),
-        threshold,
-        inter=F.bit_count(F.col("__mask").bitwiseAND(F.col("__smask"))),
-    ).select(id_col, "store_id", "jaccard")
 
 
 def _attach_best_match(
@@ -1702,7 +1651,7 @@ def _portable_band_candidates(
     the sorted id arrays. Shared by the recall and candidate-profile
     measurement rows."""
     banded = band_explode(
-        sigs, id_col, [F.slice("__sig", b * r + 1, r) for b in range(bands)]
+        sigs, id_col, [f"slice(__sig, {b * r + 1}, {r})" for b in range(bands)]
     )
     buckets = (
         banded.groupBy("band", "bucket")

@@ -33,6 +33,40 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _undirected(
+    pairs: DataFrame, id_a: str, id_b: str
+) -> tuple[DataFrame, DataFrame]:
+    """The undirected-graph block of :func:`connected_components` and
+    :func:`pagerank`: ``(edges, nodes)``. ``edges`` is the checkpointed
+    ``(u, v)`` list, symmetrized, without self edges, deduplicated.
+    ``nodes`` is the distinct ``node`` roster of the RAW endpoints, not
+    yet checkpointed, so each caller shapes it before its own cut."""
+    # Checkpoint the pair projection BEFORE symmetrizing: the union has
+    # two branches, and without truncation each branch re-executes the
+    # (often expensive) upstream pair-generation plan — measured 2x the
+    # whole job's cost when fed LSH/Jaccard candidate pipelines.
+    base = pairs.select(
+        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+    ).localCheckpoint()
+    edges = (
+        base.union(base.select(F.col("v"), F.col("u")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint()
+    )
+    # The roster comes from the RAW endpoint set (before the self-edge
+    # filter): a node appearing only in self edges still owes a
+    # (node, node) label and a teleport score — a roster from the
+    # filtered edge list silently dropped it, and downstream cluster
+    # joins then treated it as absent rather than a singleton.
+    nodes = (
+        base.select(F.col("u").alias("node"))
+        .union(base.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    return edges, nodes
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -55,31 +89,8 @@ def connected_components(
     (Spark's ambiguous-self-join trap) — an un-checkpointed variant is
     neither practical nor safe, so it is not offered.
     """
-    # Checkpoint the pair projection BEFORE symmetrizing: the union has
-    # two branches, and without truncation each branch re-executes the
-    # (often expensive) upstream pair-generation plan — measured 2x the
-    # whole job's cost when fed LSH/Jaccard candidate pipelines.
-    base = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint()
-    edges = (
-        base.union(base.select(F.col("v"), F.col("u")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    # Seed labels from the RAW endpoint set (before the self-edge
-    # filter): a node appearing only in self edges still owes a
-    # (node, node) assignment — seeding from the filtered edge list
-    # silently dropped it, and downstream cluster joins then treated
-    # it as absent rather than a singleton.
-    labels = (
-        base.select(F.col("u").alias("node"))
-        .union(base.select(F.col("v").alias("node")))
-        .distinct()
-        .select("node", F.col("node").alias("lbl"))
-        .localCheckpoint()
-    )
+    edges, nodes = _undirected(pairs, id_a, id_b)
+    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
 
     # Convergence via the label-sum invariant: every update is
     # least(lbl, ...) twice, so per-node labels are monotone
@@ -304,9 +315,10 @@ def pagerank(
     whole trajectory is bit-reproducible in ANSI SQL (the oracle
     unrolls the same iterations as chained CTEs).
 
-    Scale shape: per iteration ONE edge-join shuffle + one hash
-    aggregate over skinny (node, score) state, lineage cut with
-    localCheckpoint — the same pattern as ``connected_components``;
+    Scale shape: the edge list and node roster come from
+    ``_undirected``, the block ``connected_components`` also builds on;
+    per iteration ONE edge-join shuffle + one hash aggregate over
+    skinny (node, score) state, lineage cut with localCheckpoint;
     total cost is n_iter bounded rounds regardless of graph diameter.
 
     Returns (node, pagerank). Nodes appearing ONLY in self edges are
@@ -318,21 +330,8 @@ def pagerank(
     applied. On a graph with no self-loop-only nodes, scores sum to ~1
     (quantization dust aside).
     """
-    base = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint()
-    edges = (
-        base.union(base.select(F.col("v"), F.col("u")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        base.select(F.col("u").alias("node"))
-        .union(base.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    edges, nodes = _undirected(pairs, id_a, id_b)
+    nodes = nodes.localCheckpoint()
     n = nodes.count()
     deg = edges.groupBy("u").agg(F.count("*").alias("__d"))
     # self-loop-only nodes have no symmetrized edges: out-degree 0 on

@@ -5,7 +5,7 @@ each written once:
 
 - :func:`band_explode` — the LSH band explode: one skinny
   ``(id, band, bucket)`` row per (row, band). Callers pass the
-  per-band bucket-key Columns (MinHash slice hashes, raw portable
+  per-band bucket keys as SQL text (MinHash slice hashes, raw portable
   slices, sign-bit masks, phash bit fields), so the helper never
   branches on its caller.
 - :func:`sorted_pairs` — all ``i < j`` pairs of a sorted array as one
@@ -24,25 +24,23 @@ from pyspark.sql import functions as F
 def band_explode(
     df: DataFrame,
     id_col: str,
-    keys: Sequence[Column],
+    keys: Sequence[str],
     id_alias: str | None = None,
 ) -> DataFrame:
-    """``(id, band, bucket)`` rows: band ``b`` of each row gets
-    ``keys[b]`` as its bucket key. One generator over a literal struct
-    array, so the explode stays inside whole-stage codegen and only
-    the id rides it (wide payloads attach after the bucket join).
-    ``id_alias`` renames the id column on the way out."""
+    """``(id, band, bucket)`` rows: band ``b`` of each row gets the SQL
+    expression ``keys[b]`` as its bucket key. One generator over a
+    literal struct array, so the explode stays inside whole-stage
+    codegen and only the id rides it (wide payloads attach after the
+    bucket join). The array goes to the JVM as one SQL expression, not
+    one call per Column node. ``id_alias`` renames the id column on the
+    way out."""
     out = id_alias or id_col
-    return df.select(
-        F.col(id_col).alias(out) if id_alias else F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), key.alias("bucket"))
-                    for b, key in enumerate(keys)
-                ]
-            )
-        ).alias("bb"),
+    structs = ", ".join(
+        f"struct({b} AS band, {key} AS bucket)" for b, key in enumerate(keys)
+    )
+    return df.selectExpr(
+        f"`{id_col}` AS `{out}`" if id_alias else f"`{id_col}`",
+        f"explode(array({structs})) AS bb",
     ).select(out, "bb.band", "bb.bucket")
 
 

@@ -330,7 +330,7 @@ def _band_bucket_frame(
             ((1 << per_band) - 1) << (i * per_band) for i in range(n_bands)
         ]
         sig = lsh_signature(item_vec, planes, n_planes=total_planes, seed=seed)
-        keys = [F.col("__sig").bitwiseAND(F.lit(m).cast("long")) for m in masks]
+        keys = [f"__sig & CAST({m} AS BIGINT)" for m in masks]
     else:
         # widened path: one signature long PER BAND (n-aware tuning at
         # corpora past the single-long budget); bucket i = element i
@@ -338,7 +338,7 @@ def _band_bucket_frame(
             item_vec, per_band=per_band, bands=n_bands, seed=seed,
             planes=planes,
         )
-        keys = [F.element_at(F.col("__sig"), i + 1) for i in range(n_bands)]
+        keys = [f"element_at(__sig, {i + 1})" for i in range(n_bands)]
     return band_explode(
         items.select(item_id, item_vec).withColumn("__sig", sig), item_id, keys
     )

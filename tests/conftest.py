@@ -13,6 +13,22 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+# Plain helpers the test files import by name (``from conftest import
+# ...``): the plan and table accessors every tier file shares.
+
+
+def built_plan(df) -> str:
+    """The built plan: AQE's initial plan, before any stage has run."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def documents(spark, sf_dir: str = SF_SMOKE):
+    """The ``documents`` table, at sf0.001 unless ``sf_dir`` says."""
+    from hummingbirddatapipeline_spark.tables import load
+
+    return load(spark, sf_dir, "documents")
+
+
 @pytest.fixture(scope="session")
 def harness():
     """tools/check_oracle.py — the one differential harness: duck_connect,

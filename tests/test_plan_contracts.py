@@ -13,12 +13,8 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-from explain_audit import executed_plan, strip_ids  # noqa: E402
-
-
-def _physical(df) -> str:
-    """The built plan: AQE's initial plan, before any stage has run."""
-    return df._jdf.queryExecution().executedPlan().toString()
+from profile_query import executed_plan, strip_ids  # noqa: E402
+from conftest import built_plan, documents  # noqa: E402
 
 
 def _final_physical(df) -> str:
@@ -58,7 +54,7 @@ def test_banded_near_dup_is_equi_join_not_cartesian(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
-    plan = _physical(
+    plan = built_plan(
         embedding_near_dup_pairs(emb, threshold=0.9, expected_dup_sim=0.9999)
     )
     assert "CartesianProduct" not in plan
@@ -77,12 +73,12 @@ def test_brute_fallback_is_explicit_not_default(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
-    banded = _physical(embedding_near_dup_pairs(emb, threshold=0.95))
+    banded = built_plan(embedding_near_dup_pairs(emb, threshold=0.95))
     assert "CartesianProduct" not in banded
     assert "BroadcastNestedLoopJoin" not in banded
     # the explicit brute path IS all-pairs (cartesian, or its
     # broadcast-nested-loop form when one side fits in memory)
-    brute = _physical(embedding_near_dup_pairs(emb, threshold=0.95, brute=True))
+    brute = built_plan(embedding_near_dup_pairs(emb, threshold=0.95, brute=True))
     assert "CartesianProduct" in brute or "BroadcastNestedLoopJoin" in brute
 
 
@@ -96,7 +92,7 @@ def test_lsh_topk_buckets_not_cartesian(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    plan = _physical(lsh_topk(emb, queries, k=5, n_planes=48, bands=24))
+    plan = built_plan(lsh_topk(emb, queries, k=5, n_planes=48, bands=24))
     assert "CartesianProduct" not in plan
 
 
@@ -105,7 +101,7 @@ def test_contamination_check_broadcasts_gram_side(spark, sf_dir):
     never shuffle the corpus into a cartesian."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["text_contamination_check"](spark, sf_dir))
+    plan = built_plan(QUERIES["text_contamination_check"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
@@ -117,7 +113,7 @@ def test_minhash_pipeline_no_cartesian(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    plan = _physical(
+    plan = built_plan(
         near_dup_pairs_minhash(
             docs, "text", "doc_id", threshold=0.85, num_hashes=32, bands=8,
             shingle_size=1,
@@ -132,7 +128,7 @@ def test_scd2_single_exchange(spark, sf_dir):
     interval chain — history depth must not multiply shuffles."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["scd2_user_event_history"](spark, sf_dir))
+    plan = built_plan(QUERIES["scd2_user_event_history"](spark, sf_dir))
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -141,7 +137,7 @@ def test_skew_report_topk_not_global_sort(spark, sf_dir):
     top-k), never a single-reducer global sort of the key space."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["dq_skew_report"](spark, sf_dir))
+    plan = built_plan(QUERIES["dq_skew_report"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
 
@@ -152,7 +148,7 @@ def test_bigram_logprob_single_bigram_explode(spark, sf_dir):
     2x-corpus-explode shape is the regression this pins out."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["text_bigram_logprob"](spark, sf_dir))
+    plan = built_plan(QUERIES["text_bigram_logprob"](spark, sf_dir))
     # one unigram-occurrence explode + one bigram explode, nothing more
     assert plan.count("Generate explode") <= 2
     assert "CartesianProduct" not in plan
@@ -183,7 +179,7 @@ def test_percentile_features_broadcast_not_shuffle_fact(spark, sf_dir):
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
     for name in ("feature_winsorize_prices", "feature_impute_median_balance"):
-        plan = _physical(QUERIES[name](spark, sf_dir))
+        plan = built_plan(QUERIES[name](spark, sf_dir))
         assert "BroadcastHashJoin" in plan, name
         assert "SortMergeJoin" not in plan, name
         n_ex = len(re.findall(r"Exchange (hash|range)partitioning", plan))
@@ -197,7 +193,7 @@ def test_incremental_dense_regime_broadcasts_store(spark, sf_dir):
     frames is the declared shape)."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["dedup_incremental_batch"](spark, sf_dir))
+    plan = built_plan(QUERIES["dedup_incremental_batch"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "Broadcast" in plan
 
@@ -219,7 +215,7 @@ def test_rolling_window_single_exchange(spark, sf_dir):
         F.expr("CAST(ts DIV 1000000 AS LONG)").alias("ts_ms"),
         "value",
     )
-    plan = _physical(rolling_window_stats(ev, "user_id", "ts_ms", 3_600_000, "value"))
+    plan = built_plan(rolling_window_stats(ev, "user_id", "ts_ms", 3_600_000, "value"))
     n_ex = len(re.findall(r"Exchange (hash|range)partitioning", plan))
     assert n_ex == 1, n_ex
     assert "Join" not in plan
@@ -242,7 +238,7 @@ def test_apply_cdc_single_exchange_no_sort(spark, sf_dir):
         F.when(F.col("o_orderkey") % 7 == 0, "D").otherwise("U").alias("op"),
         F.col("o_totalprice").cast("double").alias("amount"),
     )
-    plan = _physical(apply_cdc(ch, ["k"], "ts", "op", "tb"))
+    plan = built_plan(apply_cdc(ch, ["k"], "ts", "op", "tb"))
     n_ex = len(re.findall(r"Exchange (hash|range)partitioning", plan))
     assert n_ex == 1, n_ex
     assert "Window" not in plan
@@ -256,7 +252,7 @@ def test_ivf_incremental_add_is_map_side_only(spark, sf_dir):
     shuffling anything."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["similarity_ivf_incremental_add"](spark, sf_dir))
+    plan = built_plan(QUERIES["similarity_ivf_incremental_add"](spark, sf_dir))
     assert _n_exchanges(plan) == 0
     assert "Join" not in plan
 
@@ -266,7 +262,7 @@ def test_rolling_window_feats_single_exchange(spark, sf_dir):
     (the window partition) — no self-join, no explode-based rewrite."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["events_rolling_window_feats"](spark, sf_dir))
+    plan = built_plan(QUERIES["events_rolling_window_feats"](spark, sf_dir))
     assert _n_exchanges(plan) == 1
     assert "Join" not in plan
 
@@ -277,7 +273,7 @@ def test_cdc_apply_is_argmax_not_rownumber(spark, sf_dir):
     per-key sort of the changelog."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["merge_cdc_apply"](spark, sf_dir))
+    plan = built_plan(QUERIES["merge_cdc_apply"](spark, sf_dir))
     assert _n_exchanges(plan) == 1
     assert "Window" not in plan
     assert "SortMergeJoin" not in plan
@@ -289,7 +285,7 @@ def test_touch_attribution_no_nested_loop(spark, sf_dir):
     BroadcastNestedLoopJoin and go quadratic at scale)."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["events_touch_attribution"](spark, sf_dir))
+    plan = built_plan(QUERIES["events_touch_attribution"](spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -300,7 +296,7 @@ def test_target_encode_scalar_broadcast_only(spark, sf_dir):
     broadcast — or any cartesian — is a regression."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["feature_target_encode"](spark, sf_dir))
+    plan = built_plan(QUERIES["feature_target_encode"](spark, sf_dir))
     assert plan.count("BroadcastNestedLoopJoin") <= 1
     assert "CartesianProduct" not in plan
 
@@ -321,7 +317,7 @@ def test_semantic_dedup_tiles_are_cell_equi_join(spark, sf_dir):
             "embedding"
         ),
     )
-    plan = _physical(
+    plan = built_plan(
         semantic_dedup(emb, IVF_CENTROIDS_64D, threshold=0.999)
     )
     assert "CartesianProduct" not in plan
@@ -350,7 +346,7 @@ def test_kmeans_refine_assignment_is_map_side_only(spark, sf_dir):
         ),
     )
     assigned, _ = kmeans_refine(emb, IVF_CENTROIDS_64D, n_iter=1)
-    plan = _physical(assigned)
+    plan = built_plan(assigned)
     assert _n_exchanges(plan) == 0
     assert "Join" not in plan
 
@@ -367,7 +363,7 @@ def test_bloom_screen_corpus_never_shuffles_gram_width(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(
+    plan = built_plan(
         bloom_gram_screen(
             docs.filter(F.col("doc_id") >= 20),
             docs.filter(F.col("doc_id") < 20),
@@ -391,7 +387,7 @@ def test_chunk_boilerplate_drop_marking_is_broadcast(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(strip_boilerplate_chunks(docs, max_docs=2))
+    plan = built_plan(strip_boilerplate_chunks(docs, max_docs=2))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -430,7 +426,7 @@ def test_logreg_scoring_pass_is_map_side(spark, sf_dir):
     out = logreg_quality_train(
         feats, ["f_ntok", "f_mtl", "f_chars"], lr=1.0, n_iter=2
     )
-    plan = _physical(out)
+    plan = built_plan(out)
     assert _n_exchanges(plan) == 0
     assert "Join" not in plan
 
@@ -449,7 +445,7 @@ def test_dup_span_extract_single_doc_exchange(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(dup_span_extract(docs, k=20))
+    plan = built_plan(dup_span_extract(docs, k=20))
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"Exchange hashpartitioning\(doc_id", plan)) == 1
     # doc-key + window-hash aggregate: two exchanges total
@@ -471,7 +467,7 @@ def test_perplexity_buckets_one_lang_exchange_one_explode(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    plan = _physical(perplexity_buckets(docs))
+    plan = built_plan(perplexity_buckets(docs))
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"Exchange hashpartitioning\(lang", plan)) == 1
     assert plan.count("Generate explode") == 1
@@ -496,7 +492,7 @@ def test_matryoshka_full_topk_not_recomputed_per_dim(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    plan = _physical(matryoshka_recall(emb, queries, dims=(16, 64), k=10))
+    plan = built_plan(matryoshka_recall(emb, queries, dims=(16, 64), k=10))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") == 2  # len(dims)
     assert "WindowGroupLimit" in plan  # k-cut pushed map-side
@@ -519,7 +515,7 @@ def test_ivfpq_candidate_cut_is_centroid_equi_join(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    plan = _physical(
+    plan = built_plan(
         ivfpq_topk(emb, queries, dim=64, centroids=IVF_CENTROIDS_64D)
     )
     assert "CartesianProduct" not in plan
@@ -546,7 +542,7 @@ def test_interleave_order_has_no_global_sort(spark, sf_dir):
         .agg(F.sum("n_chars").alias("w"))
         .collect()
     }
-    plan = _physical(interleave_order(docs, weights))
+    plan = built_plan(interleave_order(docs, weights))
     assert "CartesianProduct" not in plan
     assert "Exchange rangepartitioning" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -566,7 +562,7 @@ def test_sq8_stats_broadcast_encode_map_side(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
-    plan = _physical(sq8_fidelity(emb, dim=64))
+    plan = built_plan(sq8_fidelity(emb, dim=64))
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") == 0
     assert plan.count("BroadcastNestedLoopJoin") == 1  # the stats row
@@ -585,7 +581,7 @@ def test_cut_spans_single_doc_exchange(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(cut_dup_spans(docs, k=20))
+    plan = built_plan(cut_dup_spans(docs, k=20))
     assert "CartesianProduct" not in plan
     assert len(re.findall(r"Exchange hashpartitioning\(doc_id", plan)) == 1
     assert plan.count("Exchange hashpartitioning") == 2
@@ -606,7 +602,7 @@ def test_label_propagation_iterates_over_checkpoints(spark, sf_dir):
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
     seeds = spark.createDataFrame([(0, "good")], "node long, label string")
-    plan = _physical(label_propagation(edges, seeds, n_iter=3))
+    plan = built_plan(label_propagation(edges, seeds, n_iter=3))
     assert "CartesianProduct" not in plan
     assert plan.count("Scan ExistingRDD") >= 2  # state + seed checkpoints
     # the seed-flag join broadcasts the (small by definition) trusted
@@ -627,7 +623,7 @@ def test_url_traps_shuffles_skinny_keys_only(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     urls = synth_dirty_urls(load(spark, sf_dir, "documents"))
-    plan = _physical(url_template_traps(urls, max_per_template=10))
+    plan = built_plan(url_template_traps(urls, max_per_template=10))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") <= 3
@@ -658,7 +654,7 @@ def test_auc_single_group_exchange(spark, sf_dir):
         ).alias("score"),
         (F.round(quality_score(F.col("text")), 2) >= 0.9).alias("y"),
     ).filter(F.col("score").isNotNull())
-    plan = _physical(auc_by_group(scored, "score", "y", "source"))
+    plan = built_plan(auc_by_group(scored, "score", "y", "source"))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -677,7 +673,7 @@ def test_hash_ngrams_one_aggregate(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(hash_ngram_features(docs, n_features=256))
+    plan = built_plan(hash_ngram_features(docs, n_features=256))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -694,7 +690,7 @@ def test_epoch_plan_inherits_interleave_contract(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    plan = _physical(epoch_plan(docs, token_budget=100_000))
+    plan = built_plan(epoch_plan(docs, token_budget=100_000))
     assert "CartesianProduct" not in plan
     assert "Exchange rangepartitioning" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
@@ -714,7 +710,7 @@ def test_snapshot_delta_joins_fingerprints_not_text(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     new = docs.filter(d % 11 != 0)
-    plan = _physical(snapshot_delta(docs, new))
+    plan = built_plan(snapshot_delta(docs, new))
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") == 2
     assert plan.count("SortMergeJoin") == 1
@@ -738,7 +734,7 @@ def test_cell_drift_one_rollup_no_assemble_joins(spark, sf_dir):
         ),
     )
     new = emb.filter(F.col("vec_id") % 17 != 0)
-    plan = _physical(ivf_cell_drift(emb, new, IVF_CENTROIDS_64D))
+    plan = built_plan(ivf_cell_drift(emb, new, IVF_CENTROIDS_64D))
     assert "CartesianProduct" not in plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") == 1
     assert plan.count("Generate explode") == 1
@@ -763,7 +759,7 @@ def test_trigram_heldout_four_explodes(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    plan = _physical(trigram_logprob_heldout(docs))
+    plan = built_plan(trigram_logprob_heldout(docs))
     assert "CartesianProduct" not in plan
     assert plan.count("Generate explode") == 2
     assert plan.count("BroadcastNestedLoopJoin") == 1  # the scalar total
@@ -781,7 +777,7 @@ def test_rendezvous_is_pure_map_side(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
-    plan = _physical(rendezvous_shards(docs, "doc_id", 8, 9))
+    plan = built_plan(rendezvous_shards(docs, "doc_id", 8, 9))
     assert _n_exchanges(plan) == 0
     assert "Join" not in plan
 
@@ -796,7 +792,7 @@ def test_event_sequences_single_user_exchange(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     ev = load(spark, sf_dir, "events")
-    plan = _physical(event_sequence_examples(ev, history=4))
+    plan = built_plan(event_sequence_examples(ev, history=4))
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
@@ -813,7 +809,7 @@ def test_leaderboard_top_cut_is_partial_topk(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _physical(boilerplate_leaderboard(docs, k=20, top=20))
+    plan = built_plan(boilerplate_leaderboard(docs, k=20, top=20))
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
@@ -831,7 +827,7 @@ def test_bpe_fertility_inherits_dictionary_replay(spark, sf_dir):
     from hummingbirddatapipeline_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    plan = _physical(bpe_fertility_by_lang(docs, BPE_MERGES))
+    plan = built_plan(bpe_fertility_by_lang(docs, BPE_MERGES))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     assert plan.count("Exchange hashpartitioning") <= 5
@@ -884,7 +880,7 @@ def test_hybrid_dense_switch_keeps_equi_join_plan(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
-    plan = _physical(
+    plan = built_plan(
         embedding_near_dup_pairs_hybrid(
             emb, threshold=0.9, expected_dup_sim=0.9999,
             n_items=1 << 20, dense_cutoff=64,
@@ -978,7 +974,7 @@ def test_q6_predicates_reach_the_scan(spark, sf_dir):
     PushedFilters, and the plan must contain no join at all."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["q6_forecast_revenue"](spark, sf_dir))
+    plan = built_plan(QUERIES["q6_forecast_revenue"](spark, sf_dir))
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed, plan
     blob = " ".join(pushed)
@@ -993,11 +989,11 @@ def test_q10_q18_join_shapes(spark, sf_dir):
     cartesian."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    p10 = _physical(QUERIES["q10_returned_items"](spark, sf_dir))
+    p10 = built_plan(QUERIES["q10_returned_items"](spark, sf_dir))
     assert "BroadcastHashJoin" in p10
     assert "CartesianProduct" not in p10
 
-    p18 = _physical(QUERIES["q18_large_volume_customers"](spark, sf_dir))
+    p18 = built_plan(QUERIES["q18_large_volume_customers"](spark, sf_dir))
     assert "CartesianProduct" not in p18
     # the quantity aggregate + HAVING filter sit below the first join:
     # find the first Join operator line and require a HashAggregate
@@ -1022,7 +1018,7 @@ def test_salted_join_exchanges_on_salted_key(spark, sf_dir):
     explode, not a join)."""
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    plan = _physical(QUERIES["join_salted_hot_keys"](spark, sf_dir))
+    plan = built_plan(QUERIES["join_salted_hot_keys"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "__salt" in plan
@@ -1042,17 +1038,11 @@ def _pins(plan: str) -> list[str]:
     return re.findall(r"Exchange (.*?), REPARTITION_BY_NUM", strip_ids(plan))
 
 
-def _docs(spark, sf_dir):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, sf_dir, "documents")
-
-
 def _pin_lsh_buckets(spark, sf_dir):
     from hummingbirddatapipeline_spark.operators.dedup import near_dup_pairs_minhash
 
     return near_dup_pairs_minhash(
-        _docs(spark, sf_dir), "text", "doc_id", threshold=0.85,
+        documents(spark, sf_dir), "text", "doc_id", threshold=0.85,
         num_hashes=32, bands=8, shingle_size=1,
     )
 
@@ -1060,7 +1050,7 @@ def _pin_lsh_buckets(spark, sf_dir):
 def _pin_minhash_verify(spark, sf_dir):
     from hummingbirddatapipeline_spark.operators.dedup import jaccard_verify
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     cands = docs.select(
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
     )
@@ -1072,7 +1062,7 @@ def _pin_dense_mask(spark, sf_dir):
     from hummingbirddatapipeline_spark.operators.dedup import jaccard_pairs_prefix
 
     return jaccard_pairs_prefix(
-        _docs(spark, sf_dir), "text", "doc_id", threshold=0.85, shingle_size=1
+        documents(spark, sf_dir), "text", "doc_id", threshold=0.85, shingle_size=1
     )
 
 
@@ -1083,7 +1073,7 @@ def _pin_incremental_verify(spark, sf_dir):
         minhash_band_index,
     )
 
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     store_docs = docs.filter(F.col("doc_id") % 2 == 0)
     return incremental_minhash_dedup(
         docs.filter(F.col("doc_id") % 2 == 1),
@@ -1103,7 +1093,9 @@ def _pin_blocked_tiles(spark, sf_dir):
 def _pin_customer_health_window(spark, sf_dir):
     from hummingbirddatapipeline_spark.catalog import QUERIES
 
-    return QUERIES["scoring_customer_health"](spark, sf_dir)
+    # __wrapped__: a fresh plan; executing the session's cached one
+    # would make its adaptive plan final under the other contracts
+    return QUERIES["scoring_customer_health"].__wrapped__(spark, sf_dir)
 
 
 def _pin_990_window(spark, sf_dir):
@@ -1129,7 +1121,7 @@ def test_cpu_bound_pin(spark, sf_dir, build, keys):
     want = (
         f"hashpartitioning({keys}, {n})" if keys else f"RoundRobinPartitioning({n})"
     )
-    assert want in _pins(_physical(build(spark, sf_dir)))
+    assert want in _pins(built_plan(build(spark, sf_dir)))
 
 
 def test_990_single_ein_exchange(spark, sf_dir):
@@ -1145,7 +1137,7 @@ def test_990_single_ein_exchange(spark, sf_dir):
     spark.conf.set(key, str(3 * spark.sparkContext.defaultParallelism))
     try:
         # __wrapped__: a fresh plan, not the session's cached one
-        plan = _physical(scoring_q.scoring_990_model.__wrapped__(spark, sf_dir))
+        plan = built_plan(scoring_q.scoring_990_model.__wrapped__(spark, sf_dir))
     finally:
         spark.conf.set(key, before)
     assert plan.count("Exchange hashpartitioning(ein") == 1, plan
@@ -1189,12 +1181,17 @@ def test_990_window_keeps_core_width_after_aqe(spark, sf_dir):
         pytest.param(_pin_lsh_buckets, "band, bucket", id="lsh_buckets"),
         pytest.param(_pin_minhash_verify, None, id="minhash_verify"),
         pytest.param(_pin_dense_mask, None, id="dense_mask"),
+        pytest.param(_pin_incremental_verify, None, id="incremental_verify"),
+        pytest.param(_pin_blocked_tiles, None, id="blocked_tiles"),
+        pytest.param(_pin_customer_health_window, "entity_id", id="customer_health_window"),
     ],
 )
-def test_dedup_pin_keeps_core_width_after_aqe(spark, sf_dir, build, keys):
-    """The dedup path's pins at run time: the LSH bucket aggregate, the
-    batch MinHash verify and the dense-mask probe each read their
-    pinned exchange uncoalesced in the final plan."""
+def test_cpu_bound_pin_keeps_core_width_after_aqe(spark, sf_dir, build, keys):
+    """The cpu_bound pins at run time: the LSH bucket aggregate, the
+    batch and incremental MinHash verifies, the dense-mask probe, the
+    blocked-GEMM tiles and the customer-health window each read their
+    pinned exchange uncoalesced in the final plan (the 990 window has
+    its own contract above)."""
     n = spark.sparkContext.defaultParallelism
     _assert_pin_uncoalesced(
         build(spark, sf_dir),

@@ -14,12 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import built_plan, documents
 
 
 def _emb(spark):
@@ -43,7 +38,7 @@ def _queries(emb, n=5):
 def test_cdc_chunks_matches_duckdb(spark, catalog_rows):
     from hummingbirddatapipeline_spark.functions.text import ws_token_count
 
-    docs = _docs(spark)
+    docs = documents(spark)
     got = catalog_rows("text_cdc_chunks")
     assert len(got) > 0
 
@@ -72,7 +67,7 @@ def test_cdc_chunks_shared_suffix_rechunks_identically(spark):
     fully inside unedited content make identical cut decisions)."""
     from hummingbirddatapipeline_spark.functions.text import cdc_chunks
 
-    base_text = _docs(spark).filter(F.col("doc_id") == 3).head()["text"]
+    base_text = documents(spark).filter(F.col("doc_id") == 3).head()["text"]
     shifted = "inserted prefix tokens " + base_text
     df = spark.createDataFrame(
         [(1, base_text), (2, shifted)], "doc_id long, text string"
@@ -118,7 +113,7 @@ def test_unimax_budget_regimes(spark):
         unimax_allocation,
     )
 
-    docs = _docs(spark)
+    docs = documents(spark)
     tiny = unimax_allocation(docs, token_budget=100, n_epochs=4.0).collect()
     assert all(not r["is_capped"] for r in tiny)
     assert len({r["alloc_tokens"] for r in tiny}) == 1  # equal split
@@ -183,17 +178,13 @@ def test_pq_topk_matches_duckdb(catalog_rows):
         assert ds == sorted(ds)
 
 
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_cdc_chunks_zero_exchange_plan(spark):
     """Chunking is local to each document by design — the physical
     plan must be scan -> project -> generate with NO exchange."""
     from hummingbirddatapipeline_spark.functions.text import cdc_chunks
 
-    docs = _docs(spark)
-    plan = _physical(
+    docs = documents(spark)
+    plan = built_plan(
         docs.select(
             "doc_id", F.explode(cdc_chunks(F.col("text"))).alias("c")
         ).select("doc_id", "c.*")
@@ -210,7 +201,7 @@ def test_unimax_never_rescans_corpus(spark):
         unimax_allocation,
     )
 
-    plan = _physical(unimax_allocation(_docs(spark), token_budget=100_000))
+    plan = built_plan(unimax_allocation(documents(spark), token_budget=100_000))
     assert "FileScan" not in plan
     assert "CartesianProduct" not in plan
 
@@ -223,7 +214,7 @@ def test_hamming_topk_broadcasts_queries(spark):
     )
 
     emb = _emb(spark)
-    plan = _physical(hamming_topk(emb, _queries(emb), dim=64, k=10))
+    plan = built_plan(hamming_topk(emb, _queries(emb), dim=64, k=10))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # broadcast cross, tiny side
     assert plan.count("Exchange hashpartitioning") == 1  # the top-k window
@@ -235,7 +226,7 @@ def test_pq_search_is_broadcast_plus_one_window_exchange(spark):
     from hummingbirddatapipeline_spark.operators.similarity import pq_topk
 
     emb = _emb(spark)
-    plan = _physical(
+    plan = built_plan(
         pq_topk(emb, _queries(emb), dim=64, m=4, k_codes=8, n_iter=2, k=10)
     )
     assert "CartesianProduct" not in plan

@@ -12,12 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 # ---------------------------------------------------------------- bloom
@@ -43,7 +38,7 @@ def test_bloom_screen_never_misses_exact_hits(spark):
         ngram_contamination,
     )
 
-    docs = _docs(spark).select("doc_id", "text")
+    docs = documents(spark).select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") < 20)
     train = docs.filter(F.col("doc_id") >= 20)
     exact = {

@@ -11,12 +11,7 @@ from the raw embeddings and recounts the overlap)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 def test_dup_spans_matches_duckdb(catalog_rows):
@@ -68,7 +63,7 @@ def test_perplexity_buckets_matches_duckdb(spark, catalog_rows):
     # balanced to within one doc (percent_rank arithmetic)
     from collections import Counter
 
-    assert len(got) == _docs(spark).count()
+    assert len(got) == documents(spark).count()
     per_lang = {}
     for _id, lang, _nb, nll, bucket in got:
         if bucket != "none":

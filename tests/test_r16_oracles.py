@@ -13,17 +13,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 def test_cut_spans_matches_duckdb(spark, catalog_rows):
     got = catalog_rows("text_cut_dup_spans")
-    assert len(got) == _docs(spark).count()
+    assert len(got) == documents(spark).count()
     # accounting invariants: kept + cut == total per doc; the corpus
     # loses real tokens; a fully-duplicated non-canonical doc may drop
     # to zero kept but never below
@@ -61,7 +56,7 @@ def test_label_propagation_matches_duckdb(spark, catalog_rows):
     assert len(got) > 0
     # seeds are clamped and labels genuinely compete (seed set
     # re-derived here exactly as the registered row builds it)
-    docs = _docs(spark)
+    docs = documents(spark)
     seeds = docs.filter(
         F.substring(
             F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":lp0"))),

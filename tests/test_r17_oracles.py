@@ -14,12 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 def _student_scored(spark):
@@ -28,7 +23,7 @@ def _student_scored(spark):
         ws_token_count,
     )
 
-    docs = _docs(spark)
+    docs = documents(spark)
     cnt = ws_token_count(F.col("text"))
     score = F.round(
         F.col("n_chars")
@@ -94,7 +89,7 @@ def test_auc_flip_symmetry_and_perfect_separation(spark):
 def test_calibration_bins_matches_duckdb(spark, catalog_rows):
     got = catalog_rows("eval_calibration_bins")
     assert len(got) > 1
-    assert sum(r[1] for r in got) == _docs(spark).count()
+    assert sum(r[1] for r in got) == documents(spark).count()
     for b, n, npos, mp, fp in got:
         assert 0 <= b <= 9 and 0 <= npos <= n
         assert 0.0 <= mp <= 1.0 and 0.0 <= fp <= 1.0

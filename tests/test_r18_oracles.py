@@ -13,12 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 def test_epoch_plan_matches_duckdb(catalog_rows):
@@ -44,7 +39,7 @@ def test_snapshot_delta_matches_duckdb(spark, catalog_rows):
     assert len(got) > 0
     from collections import Counter
 
-    docs = _docs(spark).select("doc_id", "text")
+    docs = documents(spark).select("doc_id", "text")
     d = F.col("doc_id")
     c = Counter(r[1] for r in got)
     assert set(c) == {"new", "vanished", "changed", "unchanged"}

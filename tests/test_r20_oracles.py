@@ -10,19 +10,14 @@ text; the fertility oracle nests the full frozen-merge replay)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import documents
 
 
 def test_cluster_histogram_matches_duckdb(spark, catalog_rows):
     got = catalog_rows("dedup_cluster_histogram")
     assert len(got) > 1
     # every document is accounted exactly once across the histogram
-    assert sum(r[2] for r in got) == _docs(spark).count()
+    assert sum(r[2] for r in got) == documents(spark).count()
     for size, n_clusters, n_docs in got:
         assert size >= 1 and n_clusters >= 1
         assert n_docs == size * n_clusters
@@ -71,7 +66,7 @@ def test_bpe_fertility_matches_duckdb(spark, catalog_rows):
     # conservation + sanity: doc counts cover the corpus; BPE never
     # splits below one token per word, and merges keep fertility
     # meaningfully below raw character count
-    assert sum(r[1] for r in got) == _docs(spark).count()
+    assert sum(r[1] for r in got) == documents(spark).count()
     for _lang, _nd, n_bpe, n_words, n_chars, fert, cpt in got:
         assert n_bpe >= n_words
         assert fert >= 1.0

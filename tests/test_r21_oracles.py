@@ -14,12 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
+from conftest import built_plan, documents
 
 
 def _emb(spark):
@@ -31,10 +26,6 @@ def _emb(spark):
             "embedding"
         ),
     )
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cross_source_matrix_matches_duckdb(spark, catalog_rows):
@@ -181,14 +172,14 @@ def test_r21_plan_contracts(spark):
         pq_distortion,
     )
 
-    docs = _docs(spark)
-    plan = _physical(
+    docs = documents(spark)
+    plan = built_plan(
         pq_distortion(_emb(spark), dim=64, m=4, k_codes=8, n_iter=1)
     )
     assert "Exchange" not in plan
     assert "Join" not in plan
 
-    plan = _physical(
+    plan = built_plan(
         cross_source_dup_matrix(
             shared_jaccard_pairs(spark, SF), docs.select("doc_id", "source")
         )
@@ -196,7 +187,7 @@ def test_r21_plan_contracts(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(tfidf_keywords(docs, k=3))
+    plan = built_plan(tfidf_keywords(docs, k=3))
     assert "CartesianProduct" not in plan
     # exactly the one documented scalar broadcast (the N-docs row)
     assert plan.count("BroadcastNestedLoopJoin") == 1

@@ -11,18 +11,9 @@ estimate/exact/error arithmetic)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan, documents
 
 _VS = (64, 256, 1024, 4096)
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_vocab_coverage_matches_duckdb(catalog_rows):
@@ -70,7 +61,7 @@ def test_length_groups_matches_duckdb(spark, catalog_rows):
 
     # every doc accounted once; batches respect batch_size; within a
     # bin only the LAST batch may run short; padding_frac in [0, 1)
-    n_docs_total = _docs(spark).count()
+    n_docs_total = documents(spark).count()
     assert sum(r[2] for r in got) == n_docs_total
     by_bin = {}
     for bin_id, batch_seq, n_docs, mx, sm, pad in got:
@@ -93,7 +84,7 @@ def test_length_groups_batches_are_content_addressed(spark):
         pack_length_groups,
     )
 
-    docs = _docs(spark)
+    docs = documents(spark)
     base = [
         tuple(r)
         for r in pack_length_groups(docs, 64, 8, "lg0").collect()
@@ -171,18 +162,18 @@ def test_r22_plan_contracts(spark):
         vocab_coverage,
     )
 
-    docs = _docs(spark)
-    plan = _physical(pack_length_groups(docs, 64, 8))
+    docs = documents(spark)
+    plan = built_plan(pack_length_groups(docs, 64, 8))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
-    plan = _physical(vocab_coverage(docs, _VS))
+    plan = built_plan(vocab_coverage(docs, _VS))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
 
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    plan = _physical(
+    plan = built_plan(
         minhash_estimate_pairs(docs.select("doc_id", "text"), pairs)
     )
     assert "CartesianProduct" not in plan

@@ -10,16 +10,7 @@ banding with raw component-slice buckets and the exact pair set)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from conftest import built_plan, documents
 
 
 def test_ngram_novelty_matches_duckdb(catalog_rows, duck):
@@ -169,17 +160,17 @@ def test_r23_plan_contracts(spark):
         quality_borda,
     )
 
-    docs = _docs(spark)
-    plan = _physical(quality_borda(docs))
+    docs = documents(spark)
+    plan = built_plan(quality_borda(docs))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
-    plan = _physical(ngram_novelty(docs, 2))
+    plan = built_plan(ngram_novelty(docs, 2))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(
+    plan = built_plan(
         lsh_recall_report(docs.select("doc_id", "text"), 16, 4, 0.3)
     )
     assert "CartesianProduct" not in plan

@@ -10,18 +10,9 @@ contingency, and the po/pe/kappa chain)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan, documents
 
 _FRACS = (0.25, 0.5, 0.75, 1.0)
-
-
-def _docs(spark):
-    from hummingbirddatapipeline_spark.tables import load
-
-    return load(spark, SF, "documents")
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_concat_manifest_matches_duckdb(catalog_rows):
@@ -38,7 +29,7 @@ def test_concat_manifest_stream_contiguity(spark):
         pack_concat_manifest,
     )
 
-    rows = pack_concat_manifest(_docs(spark), 128, 8).collect()
+    rows = pack_concat_manifest(documents(spark), 128, 8).collect()
     by_shard = {}
     for r in rows:
         by_shard.setdefault(r["shard"], []).append(r)
@@ -59,7 +50,7 @@ def test_concat_manifest_repartition_stable(spark):
         pack_concat_manifest,
     )
 
-    docs = _docs(spark)
+    docs = documents(spark)
     base = sorted(tuple(r) for r in pack_concat_manifest(docs).collect())
     rep = sorted(
         tuple(r) for r in pack_concat_manifest(docs.repartition(7)).collect()
@@ -78,7 +69,7 @@ def test_heaps_growth_matches_duckdb(spark, catalog_rows):
     for a, b in zip(rows, rows[1:]):
         assert a[2] <= b[2] and a[3] <= b[3] and a[4] <= b[4]
         assert a[5] >= b[5]
-    n_docs = _docs(spark).count()
+    n_docs = documents(spark).count()
     assert rows[-1][2] == n_docs
 
 
@@ -169,17 +160,17 @@ def test_r24_plan_contracts(spark):
         pack_concat_manifest,
     )
 
-    docs = _docs(spark)
-    plan = _physical(pack_concat_manifest(docs))
+    docs = documents(spark)
+    plan = built_plan(pack_concat_manifest(docs))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
-    plan = _physical(gate_agreement_kappa(docs))
+    plan = built_plan(gate_agreement_kappa(docs))
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
-    plan = _physical(heaps_vocab_growth(docs, _FRACS))
+    plan = built_plan(heaps_vocab_growth(docs, _FRACS))
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan

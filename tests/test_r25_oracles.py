@@ -9,16 +9,13 @@ cent sums per the q1 money convention)."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_gap_report_matches_duckdb(catalog_rows):
@@ -113,17 +110,17 @@ def test_r25_plan_contracts(spark):
         gap_report,
     )
 
-    plan = _physical(gap_report(_load(spark, "events")))
+    plan = built_plan(gap_report(_load(spark, "events")))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
 
-    plan = _physical(
+    plan = built_plan(
         patch_plan(synth_media_from_documents(_load(spark, "documents")))
     )
     assert "Exchange" not in plan
     assert "Join" not in plan
 
-    plan = _physical(q14_promo_effect(spark, SF))
+    plan = built_plan(q14_promo_effect(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "PushedFilters: [IsNotNull(l_shipdate)" in plan or (

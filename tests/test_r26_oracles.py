@@ -13,16 +13,13 @@ import math
 from pyspark.sql import functions as F
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_embedding_coverage_matches_duckdb(catalog_rows):
@@ -137,18 +134,18 @@ def test_r26_plan_contracts(spark):
     )
 
     docs, vecs = _load(spark, "documents"), _load(spark, "embeddings")
-    plan = _physical(embedding_coverage(docs, vecs))
+    plan = built_plan(embedding_coverage(docs, vecs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(embedding_source_profile(vecs, docs))
+    plan = built_plan(embedding_source_profile(vecs, docs))
     assert "CartesianProduct" not in plan
     # the vector payload must not cross the join: no 'embedding'
     # column in any exchange/join output after the norm projection
     join_part = plan.split("Join")[0]
     assert "norm_e6" in plan
 
-    plan = _physical(
+    plan = built_plan(
         docs.select(char_entropy(F.col("text")).alias("e"))
     )
     assert "Exchange" not in plan and "Join" not in plan

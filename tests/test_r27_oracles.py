@@ -9,16 +9,13 @@ import math
 
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_pmi_collocations_matches_duckdb(catalog_rows):
@@ -120,15 +117,15 @@ def test_r27_plan_contracts(spark):
     )
 
     docs = _load(spark, "documents")
-    plan = _physical(pmi_collocations(docs, 5, 20))
+    plan = built_plan(pmi_collocations(docs, 5, 20))
     assert "CartesianProduct" not in plan
     # the only nested-loop joins are the two 1-row scalar attaches
     assert plan.count("BroadcastNestedLoopJoin") <= 2
 
-    plan = _physical(lsh_candidate_profile(docs.select("doc_id", "text")))
+    plan = built_plan(lsh_candidate_profile(docs.select("doc_id", "text")))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(q19_bracket_revenue(spark, SF))
+    plan = built_plan(q19_bracket_revenue(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

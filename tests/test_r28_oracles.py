@@ -9,16 +9,13 @@ import math
 
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_source_kl_matches_duckdb(catalog_rows):
@@ -147,14 +144,14 @@ def test_r28_plan_contracts(spark):
     )
 
     docs = _load(spark, "documents")
-    plan = _physical(source_unigram_kl(docs))
+    plan = built_plan(source_unigram_kl(docs))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
-    plan = _physical(source_overlap_matrix(docs))
+    plan = built_plan(source_overlap_matrix(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(mad_anomaly_hours(_with_ts_ms(_load(spark, "events"))))
+    plan = built_plan(mad_anomaly_hours(_with_ts_ms(_load(spark, "events"))))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

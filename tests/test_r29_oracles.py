@@ -7,16 +7,13 @@ lift. Each row's DuckDB differential runs in tests/test_oracles.py."""
 from __future__ import annotations
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_countmin_error_matches_duckdb(catalog_rows):
@@ -145,14 +142,14 @@ def test_r29_plan_contracts(spark):
     )
 
     docs = _load(spark, "documents")
-    plan = _physical(countmin_error_report(docs))
+    plan = built_plan(countmin_error_report(docs))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    plan = _physical(priority_weighted_sample(docs))
+    plan = built_plan(priority_weighted_sample(docs))
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
 
-    plan = _physical(source_signature_ngrams(docs))
+    plan = built_plan(source_signature_ngrams(docs))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1

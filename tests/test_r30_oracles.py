@@ -9,16 +9,13 @@ import math
 
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_cluster_cohesion_matches_duckdb(catalog_rows):
@@ -138,22 +135,22 @@ def test_r30_plan_contracts(spark):
 
     docs = _load(spark, "documents")
     pairs = jaccard_pairs_prefix(docs, "text", "doc_id", 0.85, 1)
-    plan = _physical(cluster_cohesion(pairs))
+    plan = built_plan(cluster_cohesion(pairs))
     assert "CartesianProduct" not in plan
     # the pair ENGINE's documented bounded attaches (the dense/mask
     # path broadcasts its <= 1024-word vocab row) are allowed; the
     # cohesion layer itself must add none
-    cohesion_only = _physical(
+    cohesion_only = built_plan(
         cluster_cohesion(
             pairs.localCheckpoint(eager=False)
         )
     )
     assert "BroadcastNestedLoopJoin" not in cohesion_only
 
-    plan = _physical(hll_error_report(docs))
+    plan = built_plan(hll_error_report(docs))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
-    plan = _physical(cross_source_best_match(docs.select("doc_id", "text", "source")))
+    plan = built_plan(cross_source_best_match(docs.select("doc_id", "text", "source")))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

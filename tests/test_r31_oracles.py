@@ -10,16 +10,13 @@ import math
 
 
 from __spark_entry__ import SMOKE_SF_DIR as SF
+from conftest import built_plan
 
 
 def _load(spark, table):
     from hummingbirddatapipeline_spark.tables import load
 
     return load(spark, SF, table)
-
-
-def _physical(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bloom_fpr_matches_duckdb(catalog_rows):
@@ -140,16 +137,16 @@ def test_r31_plan_contracts(spark):
     )
 
     docs = _load(spark, "documents")
-    plan = _physical(bloom_fpr_report(docs))
+    plan = built_plan(bloom_fpr_report(docs))
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 2
 
-    plan = _physical(
+    plan = built_plan(
         centroid_drift_by_source(_load(spark, "embeddings"), docs)
     )
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
-    plan = _physical(length_profile_by_source(docs))
+    plan = built_plan(length_profile_by_source(docs))
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1

@@ -38,17 +38,19 @@ def test_dedup_builds_stay_under_jvm_call_budget(spark, sf_dir):
     """Plan-construction work per rebuilt dedup plan, in py4j calls: the
     wide MinHash and term-index expression lists travel to the JVM as
     SQL text and each vocabulary is collected once. Going back to one
-    Column per node (32 min-hash slots, 8 band keys, a struct per
-    vocabulary term) overruns the budget. The first build warms
+    Column per node (32 min-hash slots, 8 band keys and their structs,
+    a struct per vocabulary term) overruns the budget. The first build warms
     one-time lookups, so the second is the one counted."""
     from hummingbirddatapipeline_spark.catalog import dedup_q
 
     budgets = {
-        # 3,391 calls with a Column per node; 1,540 as SQL text
-        "dedup_minhash_pairs": 1700,
+        # 3,391 calls with a Column per node; 1,540 as SQL text; 1,177
+        # with the band struct array as SQL text too
+        "dedup_minhash_pairs": 1300,
         # 2,614 calls with a Column per node and a second vocabulary
-        # collect; 682 as SQL text with one collect
-        "shared_jaccard_pairs": 760,
+        # collect; 682 as SQL text with one collect; 468 with the
+        # bitmask aggregate and intersect as SQL text
+        "shared_jaccard_pairs": 520,
     }
     used = {}
     for name in budgets:

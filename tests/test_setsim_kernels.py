@@ -34,7 +34,7 @@ def test_band_explode_one_row_per_band(spark):
     from hummingbirddatapipeline_spark.operators.setsim import band_explode
 
     df = spark.createDataFrame([(1, 10, 20), (2, 11, 21)], "id long, k0 long, k1 long")
-    out = band_explode(df, "id", [F.col("k0"), F.col("k1")], id_alias="doc")
+    out = band_explode(df, "id", ["k0", "k1"], id_alias="doc")
     assert out.columns == ["doc", "band", "bucket"]
     assert sorted(tuple(r) for r in out.collect()) == [
         (1, 0, 10), (1, 1, 20), (2, 0, 11), (2, 1, 21),

@@ -23,8 +23,10 @@ the cache had evicted. ``jvm`` gives the py4j calls each build sent to
 the JVM (see :func:`jvm_calls`): the Python-side cost of constructing
 the plan, one or more calls per Column node or DataFrame method.
 
-With --explain DIR the formatted physical plan of each query is also
-written to DIR/<query>.txt (the plan artifact of an optimization
+With --explain DIR the final (post-AQE) physical plan of each query,
+expression and plan ids stripped (:func:`executed_plan`), is also
+written to DIR/<query>.txt after its passes, so two runs or two
+checkouts diff line for line (the plan artifact of an optimization
 round). Besides catalog and bench-only rows, the shared dedup fixtures
 ``shared_jaccard_pairs`` and ``shared_jaccard_cc`` run by name.
 """
@@ -34,6 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
@@ -42,6 +45,25 @@ from py4j import protocol
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+_IDS = re.compile(r"#\d+L?|,? \[plan_id=\d+\]")
+
+
+def strip_ids(plan: str) -> str:
+    """``plan`` without expression ids (``#12``, ``#12L``) and plan ids,
+    both the ``, [plan_id=N]`` after an exchange's arguments and the bare
+    `` [plan_id=N]`` of a leaf such as ``EmptyRelation``."""
+    return _IDS.sub("", plan)
+
+
+def executed_plan(df) -> str:
+    """The final physical plan of ``df`` after one execution, ids
+    stripped. Running the DataFrame's own query execution makes its
+    adaptive plan final; the plan is the one a noop write runs."""
+    qe = df._jdf.queryExecution()
+    qe.toRdd().count()
+    return strip_ids(qe.executedPlan().toString().split("== Initial Plan ==")[0])
 
 
 def _rest(spark, path: str):
@@ -113,10 +135,6 @@ def main() -> None:
         "shared_jaccard_cc": dedup_q.shared_jaccard_cc,
     }
 
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
-
     def one_pass(df, desc: str) -> tuple[float, list[int]]:
         sc = spark.sparkContext
         before = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
@@ -140,11 +158,6 @@ def main() -> None:
         build = time.perf_counter() - t0
         jvm = jvm_calls(spark) - j0
         compiles = [f"build={compiled_since(c0)}"]
-        if args.explain:
-            os.makedirs(args.explain, exist_ok=True)
-            plan = df._jdf.queryExecution().explainString(mode)
-            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
-                f.write(plan)
 
         c0 = codegen_compiles(spark)
         cold, _ = one_pass(df, f"{name}:cold")
@@ -200,6 +213,11 @@ def main() -> None:
                 )
         except Exception as e:  # pragma: no cover - best effort
             print(f"   (stage metrics unavailable: {e})")
+        if args.explain:
+            # last: executed_plan runs the query once more
+            os.makedirs(args.explain, exist_ok=True)
+            with open(os.path.join(args.explain, f"{name}.txt"), "w") as f:
+                f.write(executed_plan(df))
 
     for i in range(args.rebuilt):
         invalidate(sf_dir)
