@@ -77,6 +77,10 @@ def invalidate(sf_dir: str | None = None) -> None:
     Call this if data under an sf_dir is regenerated mid-session so
     queries rebuild against the fresh listing instead of silently
     serving the stale one.
+
+    The per-file records of ``tables.load`` (inferred schema, row-group
+    count) are not dropped: a regenerated file has a new size or mtime,
+    so it is a new identity and gets a new record.
     """
     for per in _PLAN_CACHE.values():
         keys = list(per) if sf_dir is None else [k for k in per if k[1] == sf_dir]

@@ -149,7 +149,6 @@ SELECT w.*, w.year - w.prior_year AS years_gap FROM (
 def _source_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders", fanout=True)
     li = load(spark, sf_dir, "lineitem", fanout=True)
-    cust = load(spark, sf_dir, "customer")
     base = (
         orders.join(li, li.l_orderkey == orders.o_orderkey)
         .groupBy(
@@ -196,7 +195,6 @@ def _source_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_acctbal") * 100 + 0.1 * F.col("total_revenue")).alias("net_assets"),
         (F.col("c_acctbal") * 100 + F.col("total_revenue")).alias("total_assets"),
     )
-    _ = cust
     # cpu_bound on the window key (r16): AQE coalesced the window stage
     # feeding the compiled indicator stack to ~10 tasks.
     cy = cpu_bound(cy, "entity_id")

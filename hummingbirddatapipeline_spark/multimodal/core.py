@@ -368,7 +368,8 @@ def phash_near_dup_pairs(
             stacklevel=2,
         )
     width = 64 // bands
-    mask = (1 << width) - 1
+    # all 64 bits (bands=1) is -1 as a signed long; 1 << 64 overflows
+    mask = -1 if width == 64 else (1 << width) - 1
     distinct = hashes.select("phash").distinct()
     if combinatorial is None:
         # ADVICE r13: materialize the distinct frame ONCE before the

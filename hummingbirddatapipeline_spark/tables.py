@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import math
 import os
+import stat
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -110,8 +112,56 @@ _FANOUT_MIN_WIDTH = 16
 # whose per-row CPU is measured extreme relative to their bytes (the
 # customer-side haversine / FS-agreement scans: byte-scaled width lost
 # the interleaved A/B there while winning on every documents row).
+# The width is recomputed on every call from the file's cached facts
+# (size, row groups: see ``_FileRecord``) and the current core count
+# and ``maxPartitionBytes``, so a second ``tune_for_sf`` takes effect.
 
-_fanout_cache: dict[tuple[str, int, int, bool], int] = {}
+
+# The parquet type-mapping conf that ``load`` sets itself (for
+# ``events``): the schema Spark infers for a file depends on it, so its
+# value is part of the file's identity.
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@dataclass
+class _FileRecord:
+    """What the process keeps of one input file between plan builds.
+
+    ``schema`` is Spark's inferred schema, filled by the first ``load``
+    (inference runs one Spark job; a read with the schema given runs
+    none). ``row_groups`` is the parquet footer's row-group count,
+    filled by the first fan-out decision."""
+
+    size: int
+    schema: StructType | None = None
+    row_groups: int | None = None
+
+
+# Keyed by file identity: absolute path, size, mtime and _NANOS_AS_LONG.
+# A rewritten file has a new identity, so it gets a new record.
+_file_records: dict[tuple, _FileRecord] = {}
+
+
+def _file_record(spark: SparkSession, path: str) -> _FileRecord | None:
+    """The record of ``path`` for the current confs, or None when the
+    path is not a regular file (a directory of part files is not cached)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get(_NANOS_AS_LONG, None),
+    )
+    rec = _file_records.get(key)
+    if rec is None:
+        rec = _file_records[key] = _FileRecord(st.st_size)
+    return rec
+
 
 # inline_rows literal-size cap (ADVICE r15). Built as one Column per
 # node, the literal cost 2.6 s of Python-side build at 256 rows, 6.4 s at
@@ -237,39 +287,32 @@ def _fanout_partitions(
     judged by BOTH the byte-based split count (maxPartitionBytes) and
     the parquet row-group count (the hard splittability bound). Width
     is byte-scaled (see module comment); ``full`` pins it at the core
-    count for measured CPU-extreme sites."""
-    try:
-        size = os.path.getsize(path)
-    except OSError:
+    count for measured CPU-extreme sites. A path that is not a regular
+    file never fans out."""
+    rec = _file_record(spark, path)
+    if rec is None or not (_FANOUT_FLOOR_BYTES <= rec.size <= _FANOUT_CEIL_BYTES):
         return 0
-    if not (_FANOUT_FLOOR_BYTES <= size <= _FANOUT_CEIL_BYTES):
-        return 0
+    if rec.row_groups is None:
+        try:  # row groups bound real splittability tighter than bytes do
+            import pyarrow.parquet as pq
+
+            rec.row_groups = pq.ParquetFile(path).metadata.num_row_groups
+        except Exception:
+            rec.row_groups = -1  # unreadable footer: bytes alone decide
     cores = spark.sparkContext.defaultParallelism
-    key = (path, size, cores, full)
-    cached = _fanout_cache.get(key)
-    if cached is not None:
-        return cached
     split = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    est_tasks = max(1, -(-size // max(split, 1)))
-    try:  # row groups bound real splittability tighter than bytes do
-        import pyarrow.parquet as pq
-
-        est_tasks = min(est_tasks, pq.ParquetFile(path).metadata.num_row_groups)
-    except Exception:
-        pass
+    est_tasks = max(1, -(-rec.size // max(split, 1)))
+    if rec.row_groups >= 0:
+        est_tasks = min(est_tasks, rec.row_groups)
     if est_tasks >= cores:
-        n = 0
-    elif full:
-        n = cores
-    else:
-        n = min(
-            cores,
-            max(_FANOUT_MIN_WIDTH, size // _FANOUT_TARGET_BYTES_PER_TASK),
-        )
-    _fanout_cache[key] = n
-    return n
+        return 0
+    if full:
+        return cores
+    return min(
+        cores, max(_FANOUT_MIN_WIDTH, rec.size // _FANOUT_TARGET_BYTES_PER_TASK)
+    )
 
 
 def load(
@@ -290,13 +333,25 @@ def load(
     pruning still push through the repartition to the parquet scan.
     Opt in only where the scan stage is measured CPU-bound (see module
     comment).
+
+    The schema of a table file is inferred once per file identity
+    (path, size, mtime, type-mapping conf; see ``_FileRecord``):
+    inference runs a Spark job over the footer, so later loads of the
+    same file read with the cached schema and build their plan without
+    one. A path that is not a regular file is inferred on every load.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(_NANOS_AS_LONG, "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    rec = _file_record(spark, path)
+    if rec is not None and rec.schema is not None:
+        df = spark.read.schema(rec.schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if rec is not None:
+            rec.schema = df.schema
     if name == "events":
         df = _events_ts_to_nanos(df)
     if fanout:

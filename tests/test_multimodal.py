@@ -162,6 +162,52 @@ def test_phash_banding_guards(spark):
         phash_near_dup_pairs(hashes, max_distance=8, bands=4)
 
 
+def test_phash_single_band_masks_all_64_bits(spark):
+    """``bands=1`` is one 64-bit band: its mask is every bit, which as a
+    signed long is -1 (``(1 << 64) - 1`` overflows the cast). Three
+    hashes: two equal ones with bit 63 set (one distinct value) and one
+    that differs from them only in bit 63. Pairs are among distinct
+    values, so one full-width band yields none, even when the verify
+    would keep a distance of 1; two bands recall that pair, as brute
+    force over the distinct values says."""
+    from hummingbirddatapipeline_spark.multimodal.core import (
+        phash_near_dup_pairs,
+    )
+
+    def signed(u):
+        return u - (1 << 64) if u >> 63 else u
+
+    u = (1 << 63) | 0x00F0F0F0F0F0F0F0
+    neg, pos = signed(u), signed(u ^ (1 << 63))
+    assert neg < 0 < pos
+    hashes = spark.createDataFrame(
+        [(1, neg), (2, neg), (3, pos)], "media_id long, phash long"
+    )
+
+    def pairs(**kw):
+        return {
+            tuple(r)
+            for r in phash_near_dup_pairs(hashes, combinatorial=False, **kw)
+            .select("hash_a", "hash_b", "hamming")
+            .collect()
+        }
+
+    def brute(max_distance):
+        vals = sorted({neg, pos})
+        return {
+            (a, b, bin((a ^ b) & ((1 << 64) - 1)).count("1"))
+            for i, a in enumerate(vals)
+            for b in vals[i + 1:]
+            if bin((a ^ b) & ((1 << 64) - 1)).count("1") <= max_distance
+        }
+
+    assert pairs(bands=1, max_distance=0) == brute(0) == set()
+    # a mask that dropped bit 63 would bucket neg with pos and keep them
+    with pytest.warns(UserWarning, match="no longer guarantees recall"):
+        assert pairs(bands=1, max_distance=1) == set()
+    assert pairs(bands=2, max_distance=1) == brute(1) == {(neg, pos, 1)}
+
+
 def test_phash_combinatorial_banding_equals_single_band(spark):
     """The multi-index (band-PAIR) candidate scheme must produce the
     verified pair set of the single-band scheme exactly: both

@@ -207,6 +207,122 @@ def test_scan_fanout_opt_in_gate(spark, sf_dir):
     )
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of the Spark jobs run so far in this thread's job group."""
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_infers_each_file_schema_once(spark, sf_dir):
+    """Every table, ``events`` included: a second ``load`` of the same
+    file builds its plan without a Spark job, and the schema it reads
+    with is the one a fresh inference gives."""
+    from hummingbirddatapipeline_spark.tables import (
+        TABLE_NAMES,
+        _events_ts_to_nanos,
+        _file_record,
+        load,
+    )
+
+    for name in TABLE_NAMES:
+        load(spark, sf_dir, name)
+        before = _job_ids(spark)
+        df = load(spark, sf_dir, name)
+        assert _job_ids(spark) == before, name
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        fresh = spark.read.parquet(path)
+        assert _file_record(spark, path).schema == fresh.schema, name
+        if name == "events":
+            fresh = _events_ts_to_nanos(fresh)
+        assert df.schema == fresh.schema, name
+
+
+def test_load_infers_again_after_file_rewrite(spark, tmp_path):
+    """A table file rewritten with another schema (so another size and
+    mtime) is a new identity: its next ``load`` infers again and reads
+    the new columns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hummingbirddatapipeline_spark.tables import load
+
+    sf, path = str(tmp_path), str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert load(spark, sf, "region").columns == ["r_regionkey", "r_name"]
+    before = _job_ids(spark)
+    load(spark, sf, "region")
+    assert _job_ids(spark) == before
+    old = os.stat(path)
+    pq.write_table(
+        pa.table({"r_regionkey": [7], "r_name": ["C"], "r_comment": ["new"]}),
+        path,
+    )
+    assert os.stat(path).st_size != old.st_size
+    before = _job_ids(spark)
+    df = load(spark, sf, "region")
+    assert _job_ids(spark) != before
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert [tuple(r) for r in df.collect()] == [(7, "C", "new")]
+
+
+def test_fanout_width_follows_a_second_tune_for_sf(spark, tmp_path):
+    """The fan-out width is recomputed on every call from the file's
+    cached facts and the current ``maxPartitionBytes``: a second
+    ``tune_for_sf`` that raises the split size turns a file that split
+    into core-count tasks (no fan-out) into a one-task scan (fan-out),
+    and a third turns it back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hummingbirddatapipeline_spark.session import tune_for_sf
+    from hummingbirddatapipeline_spark.tables import (
+        _FANOUT_MIN_WIDTH,
+        _FANOUT_TARGET_BYTES_PER_TASK,
+        _fanout_partitions,
+        _parse_bytes,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    chunk = 64 * 1024
+    # incompressible rows, a bit over `cores` MB, in 2 * cores + 1 row groups
+    n = 16 * cores + 8
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.table({"b": [os.urandom(chunk) for _ in range(n)]}),
+        path,
+        row_group_size=8,
+        compression="none",
+    )
+    size = os.path.getsize(path)
+    confs = ("spark.sql.files.maxPartitionBytes", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in confs}
+
+    def split() -> int:
+        return _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+
+    try:
+        tune_for_sf(spark, str(tmp_path))
+        assert -(-size // split()) >= cores
+        assert _fanout_partitions(spark, path) == 0
+        # a sparse pad: tune_for_sf sizes the split by file sizes
+        pad = str(tmp_path / "pad.bin")
+        with open(pad, "wb") as f:
+            f.truncate(4 * cores * size)
+        tune_for_sf(spark, str(tmp_path))
+        assert split() >= size
+        assert _fanout_partitions(spark, path) == min(
+            cores, max(_FANOUT_MIN_WIDTH, size // _FANOUT_TARGET_BYTES_PER_TASK)
+        )
+        assert _fanout_partitions(spark, path, full=True) == cores
+        os.remove(pad)
+        tune_for_sf(spark, str(tmp_path))
+        assert _fanout_partitions(spark, path) == 0
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_inline_rows_matches_create_dataframe_and_validates(spark):
     """ADVICE r15 hardening: inline_rows equals createDataFrame on the
     supported schema class, raises on arity mismatches and on

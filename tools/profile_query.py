@@ -22,6 +22,8 @@ compiled, so a rebuilt pass that compiles anything recompiled classes
 the cache had evicted. ``jvm`` gives the py4j calls each build sent to
 the JVM (see :func:`jvm_calls`): the Python-side cost of constructing
 the plan, one or more calls per Column node or DataFrame method.
+``jobs`` gives the Spark jobs each build ran before execution (schema
+inference, localCheckpoints, model-state collects, iterative loops).
 
 With --explain DIR the final (post-AQE) physical plan of each query,
 expression and plan ids stripped (:func:`executed_plan`), is also
@@ -108,6 +110,11 @@ def jvm_calls(spark) -> int:
     return send.calls
 
 
+def job_ids(spark) -> set[int]:
+    """Ids of the Spark jobs run so far outside any job group."""
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -137,14 +144,13 @@ def main() -> None:
 
     def one_pass(df, desc: str) -> tuple[float, list[int]]:
         sc = spark.sparkContext
-        before = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
+        before = job_ids(spark)
         sc.setJobDescription(desc)
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         sc.setJobDescription(None)
-        after = {j for j in sc.statusTracker().getJobIdsForGroup(None)}
-        return dt, sorted(after - before)
+        return dt, sorted(job_ids(spark) - before)
 
     def compiled_since(since: tuple[int, float]) -> str:
         n, ms = codegen_compiles(spark)
@@ -152,11 +158,13 @@ def main() -> None:
 
     for name in args.queries:
         c0 = codegen_compiles(spark)
+        b0 = job_ids(spark)
         j0 = jvm_calls(spark)
         t0 = time.perf_counter()
         df = runnable[name](spark, sf_dir)
         build = time.perf_counter() - t0
         jvm = jvm_calls(spark) - j0
+        build_jobs = len(job_ids(spark) - b0)
         compiles = [f"build={compiled_since(c0)}"]
 
         c0 = codegen_compiles(spark)
@@ -174,7 +182,10 @@ def main() -> None:
             + " ".join(f"{w:.3f}" for w in warms)
             + f"  min={min(warms):.3f}"
         )
-        print("   compiles " + " ".join(compiles) + f"  jvm build={jvm}")
+        print(
+            "   compiles " + " ".join(compiles)
+            + f"  jvm build={jvm}  jobs build={build_jobs}"
+        )
         try:
             all_jobs = {j["jobId"]: j for j in _rest(spark, "jobs")}
             stage_ids = sorted(
@@ -226,14 +237,18 @@ def main() -> None:
         per_query = []
         for name in args.queries:
             c0 = codegen_compiles(spark)
+            b0 = job_ids(spark)
             j0 = jvm_calls(spark)
             t0 = time.perf_counter()
             df = runnable[name](spark, sf_dir)
             jvm = jvm_calls(spark) - j0
+            build_jobs = len(job_ids(spark) - b0)
             one_pass(df, f"{name}:rebuilt{i}")
             dt = time.perf_counter() - t0
             total += dt
-            per_query.append(f"{name}={dt:.3f}s/{compiled_since(c0)}/jvm={jvm}")
+            per_query.append(
+                f"{name}={dt:.3f}s/{compiled_since(c0)}/jvm={jvm}/jobs={build_jobs}"
+            )
         print(
             f"== rebuilt{i}  {total:.3f}s  compiles={compiled_since(p0)}  "
             + " ".join(per_query)
